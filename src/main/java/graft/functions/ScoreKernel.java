@@ -7,7 +7,7 @@ import jdk.incubator.vector.VectorSpecies;
 
 /**
  * SIMD per-candidate centroid-score micro-kernel for the phase-1 serving
- * path (the CentroidScore / BatchCentroidScore expressions): updates the
+ * path (the CentroidScore expression and the batch snapshot walk): updates the
  * per-query-token running MAX of {@code dot(q_token, centroid[code])} for
  * one doc code, vectorizing ACROSS QUERY TOKENS.
  *

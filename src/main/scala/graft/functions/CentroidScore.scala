@@ -86,67 +86,6 @@ case class CentroidScore(
   override def prettyName: String = "graft_centroid_score"
 }
 
-/** Batch-search twin of [[CentroidScore]]: scores (query_id, doc_codes)
-  * pairs; the per-query token vectors ride in one small broadcast map
-  * (batch x nq x dim floats — shared with the phase-2 rerank UDF) and the
-  * centroid matrix in the per-index broadcast. Nothing K-proportional or
-  * batch-x-K-proportional ships with the plan. */
-case class BatchCentroidScore(
-    left: Expression,
-    right: Expression,
-    bcQueries: Broadcast[Map[Long, Array[Float]]],
-    bcCentroids: Broadcast[Array[Float]],
-    dim: Int)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType, ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_batch_centroid_score expects (bigint, array<bigint>), got $other")
-    }
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  // per-task resolution of the synchronized Broadcast.getValue() — see
-  // CentroidScore.centLocal; the queries additionally transpose to
-  // dim-major once per task for the token-lane SIMD kernel (the broadcast
-  // itself stays token-major: the phase-2 rerank UDF shares it, and the
-  // width dispatch needs both layouts)
-  @transient private lazy val queriesLocal: Map[Long, Array[Float]] = bcQueries.value
-  @transient private lazy val queriesTLocal: Map[Long, Array[Float]] =
-    BatchCentroidScore.transposeAll(queriesLocal, dim)
-  @transient private lazy val centLocal: Array[Float] = bcCentroids.value
-
-  override def nullSafeEval(qid: Any, codes: Any): Any =
-    BatchCentroidScore.compute(qid.asInstanceOf[Long],
-      codes.asInstanceOf[ArrayData], queriesLocal, queriesTLocal, centLocal, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qRef = ctx.addReferenceObj("batchCentroidQueries", bcQueries,
-      "org.apache.spark.broadcast.Broadcast")
-    val bcRef = ctx.addReferenceObj("batchCentroidBc", bcCentroids,
-      "org.apache.spark.broadcast.Broadcast")
-    val qVar = ctx.addMutableState("scala.collection.immutable.Map", "batchQueryVecs",
-      v => s"$v = (scala.collection.immutable.Map) $qRef.value();")
-    val qtVar = ctx.addMutableState("scala.collection.immutable.Map", "batchQueryVecsT",
-      v => s"$v = graft.functions.BatchCentroidScore.transposeAll($qVar, $dim);")
-    val centVar = ctx.addMutableState("float[]", "centroidMatrix",
-      v => s"$v = (float[]) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, (qid, codes) =>
-      s"${ev.value} = graft.functions.BatchCentroidScore.compute(" +
-        s"$qid, $codes, $qVar, $qtVar, $centVar, $dim);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BatchCentroidScore =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "graft_batch_centroid_score"
-}
-
 /** Compact deduped (doc_id -> centroid codes) snapshot of one
   * (tenant, field)'s context table, CSR-flat for broadcast: sorted doc ids,
   * offsets into one flat codes array. ~40% the bytes of the BHJ hashed
@@ -163,8 +102,8 @@ final class CtxCodes(
 
   /** Inverted (centroid -> doc positions) view of this snapshot — the
     * in-memory postings the batch phase-1 walk traverses instead of
-    * scanning the postings table ([[graft.query.BatchSearcher]],
-    * `graft.batch.invertedWalk`). The entry for centroid c lists the
+    * scanning the postings table ([[graft.query.BatchSearcher]]). The
+    * entry for centroid c lists the
     * POSITIONS (indexes into [[docIds]]/[[offsets]], ascending) of every
     * doc whose deduped codes contain c — exactly the visible postings
     * relation, which the write path derives as
@@ -182,16 +121,15 @@ final class CtxCodes(
 /** CSR postings view over a [[CtxCodes]] snapshot: `docPos` slices
   * `[offsets(c), offsets(c+1))` hold the ascending doc POSITIONS for
   * centroid c. Positions, not ids: the walk goes straight to the doc's
-  * codes slice for scoring without the binary search the pair-scoring
-  * expression needs. */
+  * codes slice for scoring without a binary search. */
 final class CtxInverted(
     val numCentroids: Int,
     val offsets: Array[Int],
     val docPos: Array[Int])
 
 object CtxCodes {
-  /** Binary-search lookup; negative when the doc has no context row (the
-    * BHJ inner join dropped such pairs; the expression returns null). */
+  /** Binary-search lookup of a doc's position; negative when the doc has
+    * no context row. */
   def indexOf(ctx: CtxCodes, docId: Long): Int =
     java.util.Arrays.binarySearch(ctx.docIds, docId)
 
@@ -288,90 +226,12 @@ object CtxCodes {
   }
 }
 
-/** [[BatchCentroidScore]] over the handle-cached [[CtxCodes]] broadcast:
-  * scores (query_id, doc_id) pairs by looking the doc's codes up in the
-  * broadcast snapshot instead of joining the context table — phase-1 needs
-  * no per-batch context scan at all. NULL when the doc has no context row,
-  * matching the inner-join drop of the BHJ shape it replaces (callers
-  * filter). Scores are bit-identical to [[BatchCentroidScore]]: the same
-  * [[CentroidScore.computeDotAuto]] kernel runs over the same codes. */
-case class BatchCtxCentroidScore(
-    left: Expression,
-    right: Expression,
-    bcQueries: Broadcast[Map[Long, Array[Float]]],
-    bcCentroids: Broadcast[Array[Float]],
-    bcCtx: Broadcast[CtxCodes],
-    dim: Int)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType, LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_batch_ctx_centroid_score expects (bigint, bigint), got $other")
-    }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val queriesLocal: Map[Long, Array[Float]] = bcQueries.value
-  @transient private lazy val queriesTLocal: Map[Long, Array[Float]] =
-    BatchCentroidScore.transposeAll(queriesLocal, dim)
-  @transient private lazy val centLocal: Array[Float] = bcCentroids.value
-  @transient private lazy val ctxLocal: CtxCodes = bcCtx.value
-
-  override def nullSafeEval(qid: Any, docId: Any): Any = {
-    val i = CtxCodes.indexOf(ctxLocal, docId.asInstanceOf[Long])
-    if (i < 0) null
-    else BatchCtxCentroidScore.compute(qid.asInstanceOf[Long], ctxLocal, i,
-      queriesLocal, queriesTLocal, centLocal, dim)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qRef = ctx.addReferenceObj("batchCtxQueries", bcQueries,
-      "org.apache.spark.broadcast.Broadcast")
-    val bcRef = ctx.addReferenceObj("batchCtxCentroids", bcCentroids,
-      "org.apache.spark.broadcast.Broadcast")
-    val ctxRef = ctx.addReferenceObj("batchCtxCodes", bcCtx,
-      "org.apache.spark.broadcast.Broadcast")
-    val qVar = ctx.addMutableState("scala.collection.immutable.Map", "batchCtxQueryVecs",
-      v => s"$v = (scala.collection.immutable.Map) $qRef.value();")
-    val qtVar = ctx.addMutableState("scala.collection.immutable.Map", "batchCtxQueryVecsT",
-      v => s"$v = graft.functions.BatchCentroidScore.transposeAll($qVar, $dim);")
-    val centVar = ctx.addMutableState("float[]", "batchCtxCentMatrix",
-      v => s"$v = (float[]) $bcRef.value();")
-    val ctxVar = ctx.addMutableState("graft.functions.CtxCodes", "batchCtxCodes",
-      v => s"$v = (graft.functions.CtxCodes) $ctxRef.value();")
-    nullSafeCodeGen(ctx, ev, (qid, docId) => s"""
-      int graftCtxIdx = graft.functions.CtxCodes.indexOf($ctxVar, $docId);
-      if (graftCtxIdx < 0) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.BatchCtxCentroidScore.compute(
-          $qid, $ctxVar, graftCtxIdx, $qVar, $qtVar, $centVar, $dim);
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BatchCtxCentroidScore =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "graft_batch_ctx_centroid_score"
-}
-
+/** The batch phase-1 kernel entry ([[graft.query.BatchSearcher]]'s walk):
+  * scores one query against one [[CtxCodes]] snapshot position. */
 object BatchCtxCentroidScore {
-  import org.apache.spark.sql.graftbridge.Bridge
-
-  def apply(qid: Column, docId: Column,
-      bcQueries: Broadcast[Map[Long, Array[Float]]],
-      bcCentroids: Broadcast[Array[Float]],
-      bcCtx: Broadcast[CtxCodes], dim: Int): Column =
-    Bridge.column(BatchCtxCentroidScore(
-      Bridge.expression(qid), Bridge.expression(docId),
-      bcQueries, bcCentroids, bcCtx, dim))
-
+  /** `queries` is token-major, `queriesT` its dim-major twin (see
+    * [[transposeAll]]) — [[CentroidScore.computeDotAutoLRange]]
+    * width-dispatches between them per query. */
   def compute(qid: Long, ctx: CtxCodes, i: Int, queries: Map[Long, Array[Float]],
       queriesT: Map[Long, Array[Float]], cent: Array[Float], dim: Int): Double = {
     val q = queries.getOrElse(qid,
@@ -380,30 +240,8 @@ object BatchCtxCentroidScore {
     CentroidScore.computeDotAutoLRange(ctx.codes, ctx.offsets(i),
       ctx.offsets(i + 1), q, queriesT(qid), cent, q.length / dim, dim)
   }
-}
 
-object BatchCentroidScore {
-  import org.apache.spark.sql.graftbridge.Bridge
-
-  /** @param bcQueries qid -> row-major (nq x dim) flattened query tokens */
-  def apply(qid: Column, codes: Column,
-      bcQueries: Broadcast[Map[Long, Array[Float]]],
-      bcCentroids: Broadcast[Array[Float]], dim: Int): Column =
-    Bridge.column(BatchCentroidScore(
-      Bridge.expression(qid), Bridge.expression(codes), bcQueries, bcCentroids, dim))
-
-  /** `queries` is token-major, `queriesT` its dim-major twin (see
-    * [[transposeAll]]) — [[CentroidScore.computeDotAuto]] width-dispatches
-    * between them per query. */
-  def compute(qid: Long, codes: ArrayData, queries: Map[Long, Array[Float]],
-      queriesT: Map[Long, Array[Float]], cent: Array[Float], dim: Int): Double = {
-    val q = queries.getOrElse(qid,
-      throw new IllegalArgumentException(s"no query tokens for query_id $qid"))
-    CentroidScore.computeDotAuto(codes, q, queriesT(qid), cent, q.length / dim, dim)
-  }
-
-  /** Transpose every query to dim-major once per task — called from the
-    * generated code's init and the interpreted lazy val alike. */
+  /** Transpose every query to dim-major once per task. */
   def transposeAll(qs: Map[Long, Array[Float]], dim: Int): Map[Long, Array[Float]] =
     qs.map { case (k, v) => k -> CentroidScore.transposeQuery(v, dim) }
 }
@@ -460,7 +298,7 @@ object CentroidScore {
         k.getMethod("lanes").invoke(null).asInstanceOf[Int]))
     } catch { case _: Throwable => None }
 
-  /** The serving hot path of both scoring expressions: WIDTH-DISPATCHED
+  /** The serving hot path of the scoring expression: WIDTH-DISPATCHED
     * between [[computeDot]] (token-major scalar — narrow queries) and the
     * token-lane SIMD kernel over the transposed query ([[computeDotT]]).
     * Bit-identical either way (CentroidScoreSpec). The gate is one full
@@ -490,7 +328,7 @@ object CentroidScore {
   }
 
   /** [[computeDotAutoL]] over a [from, until) SLICE of a shared flat codes
-    * array — the CSR snapshot hot path ([[BatchCtxCentroidScore]]) scores
+    * array — the CSR snapshot walk ([[BatchCtxCentroidScore]]) scores
     * in place instead of Arrays.copyOfRange-ing ~tokens-per-doc longs per
     * scored (query, doc) pair (r16 verdict What's-wrong 3: at width 120
     * that copy is the first thing a profiler shows). Same width dispatch,

@@ -155,9 +155,7 @@ final class IndexIVF private (
     * foreign physical rewrite that changes neither rows nor epoch
     * (compactFiles — content-identical by contract, so serving the cached
     * snapshot is correct). Concurrent external writers during serving
-    * remain outside the engine's single-writer contract;
-    * `graft.batch.ctxBroadcastCache=false` restores the per-batch BHJ
-    * rebuild. */
+    * remain outside the engine's single-writer contract. */
   def contextCodesBroadcast(tenant: Long, field: String, visibleRows: Long,
       measuredBytes: Long, maxBytes: Long)
       : org.apache.spark.broadcast.Broadcast[graft.functions.CtxCodes] = {
@@ -300,11 +298,10 @@ final class IndexIVF private (
     * [[graft.functions.CtxCodes.build]] reproduces the arbitrary-winner
     * contract of the dropDuplicates it replaces), and the per-partition
     * `inverted` CSR view materializes lazily on first walk and stays with
-    * the cached partition object. Built ONCE per index state — the one
-    * corpus-sized shuffle here replaces the per-batch postings scan +
-    * fanout join + candidate distinct + semi-join prune + pair join of the
-    * over-gate scan shape ([[graft.query.BatchSearcher]],
-    * `graft.batch.distributedWalk`).
+    * the cached partition object. Built ONCE per index state: the one
+    * corpus-sized shuffle here is all the over-gate phase-1 walk
+    * ([[graft.query.BatchSearcher]]) ever reads; steady-state batches scan
+    * no table.
     *
     * Same JVM-global cache scope, freshness contract (mutation tick +
     * visible rows + persisted-epoch probe; openAt snapshot handles cache

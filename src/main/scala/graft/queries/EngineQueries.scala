@@ -636,9 +636,9 @@ object EngineQueries {
       }
     },
     // The batch product path, HASH-CHECKED: BatchSearcher end-to-end —
-    // driver-side per-query planning, the shared pruned postings pass, the
-    // batched phase-1 broadcast-centroid scoring (BatchCentroidScore), per-query
-    // pool cut, phase-2 rerank, per-query top-k windows — on the
+    // driver-side per-query planning, the phase-1 walk over the cached
+    // context snapshot, per-query pool cut, phase-2 rerank, per-query
+    // top-k windows — on the
     // fixed-centroid index, against the generated per-query-partitioned
     // DuckDB twin. Complements q_engine_search_oracle (single-query path).
     sql("q_engine_batch_search_oracle",

@@ -12,52 +12,23 @@ import org.apache.spark.sql.functions._
   * single process; a distributed engine must instead make ONE pass over the
   * index for N queries).
   *
-  * Plan shape: per-query planning (probe centroids + score matrix) happens
-  * on the driver over the small centroid matrix; one pruned scan of
-  * `postings` serves all queries via an exploded (query_id, centroid) probe
-  * table broadcast into the scan-side join; phase-1/phase-2 scoring are
-  * per-(query, doc) map work keyed by the broadcast query matrices; per-query
-  * top-k uses a row_number window partitioned by query_id (one shuffle).
+  * Plan shape — one regime, the partition-local index walk plus a global
+  * top-k merge:
+  *  - planning: per-query probe selection runs on the driver over the
+  *    small centroid matrix ([[Searcher.queryPlan]]);
+  *  - phase-1: the queries walk the inverted view of the cached
+  *    [[graft.functions.CtxCodes]] context snapshot — broadcast when the
+  *    measured relation fits [[BroadcastContextMaxBytesKey]], doc-partitioned
+  *    across executors past it — and cut each query's pool with a bounded
+  *    heap. No table is scanned in steady state;
+  *  - phase-2: the collected pool's residuals are multigot — a pruned
+  *    `doc_id IN (...)` context scan for a small pool, the
+  *    [[graft.index.PointStore]] past [[MaxDocIdInListKey]] — and reranked;
+  *  - per-query top-k is a row_number window partitioned by query_id.
   */
 object BatchSearcher {
 
-  /** Max literals in the pushed-down `centroid IN (...)` row-group-pruning
-    * predicate; beyond this the probe join alone filters centroids (the
-    * partition-level centroid_bucket filter is always pushed). */
-  val MaxCentroidInList = 256
-
-  /** Rerank-input shape (session conf). `false` (default): the phase-2 pool
-    * is collected after the per-query window cut and the residuals come
-    * from a SECOND, statically id-pruned context multiget (see
-    * [[RerankMultigetKey]]) — the row_number shuffle moves only
-    * (query_id, doc_id, score). `true`: residual bytes ride phase-1 through
-    * the window cut — one context scan, heavier shuffle. Measured at
-    * sf0.1 / batch 212 (ProfMain batch, numbers in COVERAGE.md): a wash
-    * locally at toy scale, so the default follows the scale asymmetry —
-    * the second pass reads only the pool's <= batch x numSecondPass rows
-    * at any corpus size while the carry shuffle payload grows with EVERY
-    * phase-1 candidate's residual bytes; the single-query path keeps
-    * the opposite choice because its pool cut is a driver-side limit, not
-    * a shuffle. */
-  val CarryResidualsKey = "graft.batch.carryResiduals"
-  private def carryResiduals(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.get(CarryResidualsKey, "false").toBoolean
-
-  /** Phase-2 input shape for the default (carry=false) path. `true`
-    * (default): the pool cut's (query_id, doc_id) pairs — bounded by
-    * batch x numSecondPass — are collected ONCE and phase-2 becomes a
-    * bucket-grouped context MULTIGET over the driver-known id set: the
-    * ids' doc_bucket set and the id IN-set ride the context scan as
-    * STATIC filters, so only the <= batch x numSecondPass matching rows
-    * (not the whole corpus' residual bytes) survive into the dedup and
-    * the rerank join, and the join's pool side is a broadcast of the
-    * collected pairs. `false`: the round-9 shape — re-join the FULL
-    * context table (a scan plus a dedup shuffle of every residual byte
-    * in the corpus, the fixed per-batch cost that dominated the 1M-doc
-    * profile) against the pool. Kept as an A/B hatch for ProfMain. */
-  val RerankMultigetKey = "graft.batch.rerankMultiget"
-  private def rerankMultiget(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.get(RerankMultigetKey, "true").toBoolean
+  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.BatchSearcher")
 
   /** Upper bound IN BYTES on the phase-2 pool collect: batch x
     * numSecondPass pairs of (query_id, doc_id) at [[PoolPairBytes]] each.
@@ -98,8 +69,7 @@ object BatchSearcher {
     * ranks around the cut falls below [[NspTieEpsKey]] — in which case
     * that query's pool escalates to this bound. Phase-2 cost grows only
     * for queries whose cut was provably arbitrary. Default 0 = off: the
-    * reference's fixed cut (SearchOptions.h:31-32), oracle-pinned.
-    * Applies to the default pool shape (heap cut + rerank multiget). */
+    * reference's fixed cut (SearchOptions.h:31-32), oracle-pinned. */
   val NspEscalateKey = "graft.batch.nspEscalate"
   private def nspEscalate(spark: org.apache.spark.sql.SparkSession): Int =
     spark.conf.get(NspEscalateKey, "0").toInt
@@ -228,42 +198,15 @@ object BatchSearcher {
       }
   }
 
-  /** Phase-1 join shape (session conf). `true` (default): the batch's
-    * DISTINCT candidate doc_id set — bounded by the UNION of per-query
-    * candidate sets, 8 B/row — is BROADCAST into the context scan as a
-    * semi-join prune, so the corpus' codes column crosses no exchange
-    * (the only corpus-sized work left in a batch is the columnar codes
-    * scan itself); the (query_id, doc_id) pair assignment then joins the
-    * PRUNED, candidate-sized codes by shuffle. The duplicate-add dedup
-    * that used to run as a corpus-wide pre-join Aggregate (a full shuffle
-    * of every doc's codes per batch, the scale-killer this shape removes)
-    * runs on the pruned side. Broadcasting the distinct ids, not the
-    * pairs, matters at shape: 212 queries x 13k candidates at the
-    * 10M-doc/K=49152 profile is ~2.8M pairs (a >1 GiB driver collect that
-    * tripped maxResultSize when pairs were broadcast) vs ~1.3M distinct
-    * ids (~10 MiB). `false`: pure shuffle-join fallback for a batch whose
-    * candidate-id UNION approaches the corpus itself. */
-  val BroadcastCandidatesKey = "graft.batch.broadcastCandidates"
-  private def broadcastCandidates(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.get(BroadcastCandidatesKey, "true").toBoolean
-
-  /** Pool-cut shape (session conf). `true` (default): the per-query
-    * numSecondPass cut is a bounded-heap aggregate ([[graft.functions
-    * .TopKByScore]]) — one streaming pass, no sort, no pair distinct;
-    * `false`: the window/row_number hatch (and the forced shape when
-    * residuals ride through the cut, which the heap cannot carry). */
-  val PoolHeapKey = "graft.batch.poolHeap"
-  private def poolHeap(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.get(PoolHeapKey, "true").toBoolean
-
   /** BYTE gate for broadcasting the deduplicated doc -> codes context
-    * relation into the phase-1 candidate stream — 1 GiB default, sized for
-    * the 8-16 GiB executors of a production cluster (the old 16M-ROW gate
-    * was ~1.1 GB only at 4 codes/doc; a 512-token ColBERT corpus is 64x
-    * fatter per row, and a row budget would have sailed a ~66 GiB relation
-    * onto every executor). Above the gate phase-1 falls back to the
-    * semi-join + shuffle-join shape. Bytes are MEASURED, not assumed — see
-    * [[measuredContextBytes]] for the size scan and its caching. */
+    * snapshot to every executor — 1 GiB default, sized for the 8-16 GiB
+    * executors of a production cluster (the old 16M-ROW gate was ~1.1 GB
+    * only at 4 codes/doc; a 512-token ColBERT corpus is 64x fatter per
+    * row, and a row budget would have sailed a ~66 GiB relation onto
+    * every executor). Above the gate phase-1 walks the doc-partitioned
+    * snapshot instead ([[IndexIVF.contextCodesPartitioned]]). Bytes are
+    * MEASURED, not assumed — see [[measuredContextBytes]] for the size
+    * scan and its caching. */
   val BroadcastContextMaxBytesKey = "graft.batch.broadcastContextMaxBytes"
   private def broadcastContextMaxBytes(spark: org.apache.spark.sql.SparkSession): Long =
     spark.conf.get(BroadcastContextMaxBytesKey, (1L << 30).toString).toLong
@@ -348,67 +291,6 @@ object BatchSearcher {
       (rows, measuredContextBytes(idx, thin, tenant, fid, rows))
     }
 
-  /** Phase-1 context shape when the relation fits the broadcast gate.
-    * `true` (default): score (query_id, doc_id) pairs against the
-    * handle-cached [[graft.functions.CtxCodes]] broadcast snapshot
-    * ([[IndexIVF.contextCodesBroadcast]]) — the context table is not
-    * scanned AT ALL in steady-state batches; the snapshot builds once per
-    * index state. Scores are bit-identical to the BHJ shape (same kernel,
-    * same codes; BatchSearchSpec pins A/B equality). `false`: the r15
-    * shape — rebuild the broadcast-hash-join relation per batch (context
-    * scan + dedup + ~GiB driver collect each call; the measured dominant
-    * term of the fixed per-batch cost, COVERAGE.md round 16). */
-  val CtxBroadcastCacheKey = "graft.batch.ctxBroadcastCache"
-  private def ctxBroadcastCache(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.get(CtxBroadcastCacheKey, "true").toBoolean
-
-  /** Phase-1 candidate generation when the [[CtxBroadcastCacheKey]]
-    * snapshot is active. `true` (default): WALK the snapshot's inverted
-    * (centroid -> doc positions) view in one task per query — candidates
-    * come from in-memory postings lists ([[graft.functions.CtxCodes
-    * .inverted]]), each candidate doc is scored exactly once (bitmap
-    * dedup across a query's probes), and the per-query [[graft.functions
-    * .TopKHeap]] applies the same (score desc, doc_id asc) cut as
-    * [[graft.functions.TopKByScore]] — so steady-state phase-1 reads NO
-    * table at all: no postings scan (34.3M rows / 44.4 core-s per batch
-    * at the 10M shape, the largest stage of the r17 breakdown), no
-    * repartition exchange, no fan-out join, no partial-heap shuffle, and
-    * none of the duplicate (query, doc) pair scoring the join shape
-    * produces when a doc matches several of a query's probes. Results
-    * are bit-identical to the scan shape (same candidate set by the
-    * postings = `explode(array_distinct(doc_codes))` write-path
-    * invariant; same kernel; same heap order) — BatchSearchSpec pins the
-    * A/B. `false`: the r17 scan -> BHJ -> score -> heap shape, kept as
-    * the fallback hatch. Scale note: this only applies in the
-    * under-the-byte-gate snapshot regime; past the gate the fully
-    * distributed scan shape runs regardless. */
-  val InvertedWalkKey = "graft.batch.invertedWalk"
-  private def invertedWalk(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.get(InvertedWalkKey, "true").toBoolean
-
-  /** Phase-1 candidate generation PAST the broadcast byte gate. `true`
-    * (default): walk the DOC-PARTITIONED context snapshot
-    * ([[IndexIVF.contextCodesPartitioned]]) — each executor inverts its
-    * partitions once (cached across batches with the same freshness
-    * contract as the broadcast snapshot), every batch then walks the local
-    * CSR postings for all queries and emits per-partition [[graft
-    * .functions.TopKHeap]] cuts, merged by one tiny partial-heap shuffle
-    * (<= partitions x queries x poolDepth rows). Steady-state over-gate
-    * phase-1 therefore reads NO table: no postings scan (44.4 core-s /
-    * batch at the 10M shape in the r17 breakdown), no fanout join, no
-    * candidate distinct, no semi-join context prune, no pair join — the
-    * same stage-shape win the under-gate inverted walk measured 3.1x, now
-    * carried across the gate instead of stepping back to the scan shape
-    * the moment the corpus outgrows 1 GiB of codes. Results are
-    * bit-identical to the scan shape (doc-disjoint partitions, same
-    * kernel, same heap order; BatchSearchSpec pins the A/B). `false`: the
-    * r17 scan -> distinct -> semi-join -> pair-join shape, kept as the
-    * fallback hatch. Applies only when the heap pool cut is active (the
-    * walk carries no residual payload). */
-  val DistributedWalkKey = "graft.batch.distributedWalk"
-  private def distributedWalk(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.get(DistributedWalkKey, "true").toBoolean
-
   /** Target bytes per partition of the doc-partitioned context snapshot
     * (measured relation bytes / this = partition count, floored at the
     * cluster's default parallelism). 256 MiB default: big enough that the
@@ -422,18 +304,19 @@ object BatchSearcher {
 
   /** Walk one [[graft.functions.CtxCodes]] snapshot (or one doc-partition
     * of it) for a stream of queries: per query, candidates come from the
-    * snapshot's inverted CSR postings, a bitmap dedups a doc matching
-    * several of the query's probes (so each candidate is scored exactly
-    * once — the scan shape's pair distinct did this with a shuffle), and a
-    * [[graft.functions.TopKHeap]] applies the (score desc NaN-first,
-    * doc_id asc) cut at `depth`. Emitted rows are exactly the rows
-    * [[groupTopK]]'s TopKByScore would keep from this snapshot's docs, in
-    * the heap's own total order — so per-partition cuts merged by one more
-    * groupTopK reproduce the global cut bit-identically (a global top-depth
-    * member is always inside its own partition's top-depth). Shared by the
-    * under-gate broadcast walk (one snapshot, queries partitioned) and the
-    * over-gate distributed walk (doc-partitioned snapshots, every query
-    * walks every partition). */
+    * snapshot's inverted CSR postings ([[graft.functions.CtxCodes
+    * .inverted]], the in-memory twin of the postings table by the
+    * `explode(array_distinct(doc_codes))` write-path invariant), a bitmap
+    * dedups a doc matching several of the query's probes (so each
+    * candidate is scored exactly once), and a [[graft.functions.TopKHeap]]
+    * applies the (score desc NaN-first, doc_id asc) cut at `depth`.
+    * Emitted rows are exactly the rows [[groupTopK]]'s TopKByScore would
+    * keep from this snapshot's docs, in the heap's own total order — so
+    * per-partition cuts merged by one more groupTopK reproduce the global
+    * cut bit-identically (a global top-depth member is always inside its
+    * own partition's top-depth). Shared by the under-gate broadcast walk
+    * (one snapshot, queries partitioned) and the over-gate distributed
+    * walk (doc-partitioned snapshots, every query walks every partition). */
   private[query] def walkQueries(ctx: graft.functions.CtxCodes,
       qProbes: Iterator[(Long, Array[Long])],
       queries: Map[Long, Array[Float]], queriesT: Map[Long, Array[Float]],
@@ -478,125 +361,110 @@ object BatchSearcher {
     * (worth real IO on a small interactive pool); above it the literals
     * cost more than the pruning returns — Spark re-ANALYZES the plan on
     * every transformation, walking batch x nsp literal nodes (measured
-    * 1.2 s/batch at the 212 x 256 shape, r17 breakdown), while a pool
-    * that large saturates the row groups' id ranges anyway — so the ids
-    * leave the scan shape entirely and hydrate through the
-    * [[graft.index.PointStore]] record-addressable multiget (or, with the
-    * store disabled, a broadcast left-semi join over the scan;
-    * BatchSearchSpec pins both A/Bs). Same guard class as
-    * [[MaxCentroidInList]]. */
+    * 1.2 s/batch at the 212 x 256 shape, r17 breakdown) — and the pool's
+    * id density saturates every granule a columnar scan can skip anyway (a
+    * 54k-id pool over 10M docs touches every `doc_bucket % 64` directory,
+    * row group and page: the r17 breakdown measured a scan decoding all 10M
+    * context rows / 40.6 core-s per batch to keep 54k). Past it the ids
+    * multiget the record-addressable [[graft.index.PointStore]] instead: IO
+    * and decode are O(pool) — the reference's analogue is an O(#ids)
+    * RocksDB MultiGet, RocksdbForwardIndex.cpp:44-92. The store builds once
+    * per index state (a corpus-sized shuffle, same class as the CtxCodes
+    * snapshot build; `warmBatchCaches` pre-builds it) and serves from
+    * immutable record files after. */
   val MaxDocIdInListKey = "graft.rerank.maxDocIdInList"
   private def maxDocIdInList(spark: org.apache.spark.sql.SparkSession): Int =
     spark.conf.get(MaxDocIdInListKey, "4096").toInt
 
-  /** Phase-2 hydration shape for a pool past [[MaxDocIdInListKey]].
-    * `true` (default): multiget the pooled ids' residuals from the
-    * [[graft.index.PointStore]] — IO and decode are O(pool), where ANY
-    * context-scan shape is O(corpus) once the pool saturates row groups
-    * (a 54k-id pool over 10M docs touches every `doc_bucket % 64`
-    * directory, row group and page: the r17 breakdown measured the
-    * semi-join scan decoding all 10M context rows / 40.6 core-s per batch
-    * to keep 54k — the one scan in the engine that grows with the corpus
-    * while its output stays pool-sized; the reference's analogue is an
-    * O(#ids) RocksDB MultiGet, RocksdbForwardIndex.cpp:44-92). The store
-    * builds once per index state (a corpus-sized shuffle, same class as
-    * the CtxCodes snapshot build; `warmBatchCaches` pre-builds it) and
-    * serves from immutable record files after. `false`: the r17 broadcast
-    * left-semi scan, kept as the fallback and A/B hatch. */
-  val PointStoreKey = "graft.rerank.pointStore"
-  private def pointStoreEnabled(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.get(PointStoreKey, "true").toBoolean
+  /** A point-store build started on a background thread ahead of the work
+    * that may need it, so two jobs are in flight. Its failure never
+    * goes unseen: [[await]] rethrows it to a consumer; [[release]] — called
+    * when the caller will not consume the build — attaches an
+    * already-failed build's error to the caller's own error as a
+    * suppressed exception, and otherwise logs a warning when the build
+    * fails, without waiting for it. */
+  private final class SpeculativeBuild[A](name: String, body: () => A) {
+    private val claimed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+    private val reported = new java.util.concurrent.atomic.AtomicBoolean(false)
+    private val task = new java.util.concurrent.FutureTask[A](() => body()) {
+      override def done(): Unit = if (released.get) report(None)
+    }
+    locally {
+      val th = new Thread(task, name)
+      th.setDaemon(true)
+      th.start()
+    }
+
+    def await(): A = {
+      claimed.set(true)
+      try task.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    }
+
+    /** No-op after [[await]]: the consumer already saw the outcome. A build
+      * still running reports from its own completion hook; the `reported`
+      * flag keeps a completion racing this call to one report. */
+    def release(primary: Option[Throwable]): Unit =
+      if (!claimed.get && released.compareAndSet(false, true) && task.isDone)
+        report(primary)
+
+    private def report(primary: Option[Throwable]): Unit =
+      if (!task.isCancelled) {
+        val failure =
+          try { task.get(); None }
+          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+        failure.filter(_ => reported.compareAndSet(false, true)).foreach { e =>
+          primary match {
+            case Some(p) => p.addSuppressed(e)
+            case None => log.warn(s"$name: speculative point-store build failed " +
+              "(the batch did not consume it; the next batch that needs the " +
+              "store retries the build)", e)
+          }
+        }
+      }
+  }
 
   /** Pre-builds the serving caches the FIRST batch after open()/a mutation
     * would otherwise pay in-band (r16 breakdown: at the 10M shape the
     * context-snapshot build — a gated ~839 MiB driver collect + CSR build +
     * broadcast — lands entirely on that cold batch; warmed, it shows as
-    * 0.000 s): the centroid-matrix broadcast and, when the relation fits
-    * the [[BroadcastContextMaxBytesKey]] gate, the [[IndexIVF
-    * .contextCodesBroadcast]] CtxCodes snapshot. Call once at open for
-    * latency-sensitive serving; a no-op (beyond the metadata-sized stats
-    * job) when the context outgrows the gate or the snapshot path is
-    * disabled. Idempotent until the next mutation.
-    *
-    * Mirrors searchBatch's FULL snapshot guard — `poolHeap &&
-    * !carryResiduals`, not just the cache switch: with the heap off or
-    * residual-carry on, the serving path never reads the snapshot, and
-    * warming would pin an up-to-gate-sized broadcast (1 GiB default) on
-    * every executor that nothing consumes until the next mutation drops
-    * it (r17 ADVICE). */
+    * 0.000 s): the centroid-matrix broadcast, the context snapshot phase-1
+    * walks — [[IndexIVF.contextCodesBroadcast]] under the
+    * [[BroadcastContextMaxBytesKey]] gate, [[IndexIVF
+    * .contextCodesPartitioned]] past it, inverted views materialized — and
+    * the phase-2 [[graft.index.PointStore]]. Call once at open for
+    * latency-sensitive serving. Idempotent until the next mutation. */
   def warmBatchCaches(idx: IndexIVF, tenant: Long, field: String): Unit = {
     val spark = idx.spark
     idx.centroidBroadcast(field)
-    // the broadcast and the doc-partitioned snapshots are independent
-    // serving paths (under vs over the byte gate); the heap guard is
-    // common — with the heap off or residual-carry on, neither walk runs
-    // and warming would pin state nothing reads (r17 ADVICE)
-    val wantSnapshot = (ctxBroadcastCache(spark) || distributedWalk(spark)) &&
-      poolHeap(spark) && !carryResiduals(spark)
-    // the phase-2 point store serves the (default) rerank-multiget path —
-    // its cold build is the other corpus-sized one-time cost a first big
-    // batch would otherwise pay in-band
-    val wantStore = pointStoreEnabled(spark) && rerankMultiget(spark) &&
-      !carryResiduals(spark)
-    val statsOpt =
-      if (wantSnapshot) Some(contextRelationStats(idx, tenant, field)) else None
-    // OVERLAP the two one-time corpus-sized builds (guide §2.6 — two jobs
-    // in flight): the point-store build is a distributed bucketed write,
-    // the snapshot build a gated driver collect + CSR (+ broadcast) or a
-    // partitioned shuffle — independent derived state with no ordering
-    // constraint, each behind its own build lock, so the warm wall is
-    // max(build, build) instead of their sum. Results are unaffected by
-    // the order (both are idempotent per index state); BatchSearchSpec
-    // pins warmed == unwarmed rows and the jobless idempotent re-warm.
-    val storeTask = if (wantStore) {
-      val t = new java.util.concurrent.FutureTask(
-        () => idx.pointStore(tenant, field, statsOpt.map(_._1)))
-      val th = new Thread(t, "graft-warm-pointstore")
-      th.setDaemon(true)
-      th.start()
-      Some(t)
-    } else None
-    statsOpt.foreach { case (rows, bytes) =>
+    val (rows, bytes) = contextRelationStats(idx, tenant, field)
+    // OVERLAP the two one-time corpus-sized builds: the point-store build
+    // is a distributed bucketed write, the snapshot build a gated driver
+    // collect + CSR (+ broadcast) or a partitioned shuffle — independent
+    // derived state, each behind its own build lock, so the warm wall is
+    // max(build, build) instead of their sum. BatchSearchSpec pins warmed
+    // == unwarmed rows and the jobless idempotent re-warm.
+    val store = new SpeculativeBuild("graft-warm-pointstore",
+      () => idx.pointStore(tenant, field, Some(rows)))
+    try {
       val gate = broadcastContextMaxBytes(spark)
-      if (bytes <= gate && ctxBroadcastCache(spark)) {
-        val b = idx.contextCodesBroadcast(tenant, field, rows, bytes, gate)
-        // materialize the inverted postings view the walk shape reads
-        // (lazy on the snapshot object): in local mode the broadcast
-        // value IS the driver's instance, so this removes the first
-        // batch's in-band inversion; on a cluster each executor still
-        // inverts once on first use (a few hundred ms at the 34M-code
-        // 10M-doc shape — the forward arrays it derives from are
-        // already resident)
-        if (invertedWalk(spark)) { b.value.inverted; () }
-      } else if (bytes > gate && distributedWalk(spark)) {
-        // past the gate the serving shape is the doc-partitioned walk:
-        // pre-build (and materialize the inverted views of) ITS snapshot
-        // so the first over-gate batch is a cache hit too
+      if (bytes <= gate) {
+        // materialize the inverted postings view the walk reads (lazy on
+        // the snapshot object): in local mode the broadcast value IS the
+        // driver's instance, so this removes the first batch's in-band
+        // inversion; on a cluster each executor still inverts once on
+        // first use (a few hundred ms at the 34M-code 10M-doc shape)
+        idx.contextCodesBroadcast(tenant, field, rows, bytes, gate).value.inverted
+      } else {
         idx.contextCodesPartitioned(tenant, field, rows, bytes,
           walkPartitionBytes(spark))
           .foreachPartition(_.foreach { ctx => ctx.inverted; () })
       }
-    }
-    storeTask.foreach { t =>
-      try { t.get(); () }
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-    }
+    } catch { case e: Throwable => store.release(Some(e)); throw e }
+    store.await()
+    ()
   }
-
-  /** Partition count for the round-robin spread of the pruned postings
-    * stream ahead of the map-side fan-out joins (0 disables). Default
-    * 8 x cores: fine enough that one hot centroid bucket cannot occupy a
-    * core for 8x the mean task time. */
-  val FanoutPartitionsKey = "graft.batch.fanoutPartitions"
-  private def fanoutPartitions(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.get(FanoutPartitionsKey,
-      (spark.sparkContext.defaultParallelism * 8).toString).toInt
-
-  /** Thin postings rows per fan-out task: the adaptive width divides the
-    * postings footer count by this before capping at [[FanoutPartitionsKey]],
-    * so small indexes never pay a wide exchange just to spread skew that
-    * cannot exceed one task's worth of work. */
-  private val FanoutRowsPerTask = 65536L
 
   /** groupBy(query_id) -> bounded-heap top-nsp -> explode back to
     * (query_id, doc_id, score) rows. Raises the ObjectHashAggregate
@@ -615,8 +483,9 @@ object BatchSearcher {
         col("e.score").as("score"))
   }
 
-  /** Session-conf side effect (documented, deliberate): when the heap
-    * pool cut is active, this RAISES
+  /** Session-conf side effect (documented, deliberate): when the context
+    * outgrows the broadcast gate, the per-partition pool cuts merge through
+    * [[groupTopK]], which RAISES
     * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` to 65536
     * for the WHOLE session if it is below — the conf is read at execution
     * time, after this function has returned its lazy plan, so it cannot be
@@ -633,11 +502,9 @@ object BatchSearcher {
       k: Int, opts: SearchOptions = SearchOptions()): DataFrame = {
     val spark = idx.spark
     val fid = idx.mapper.id(field)
-    val f = idx.schema.field(field)
-    val dim = f.parameters.dimensions
-    val cq = idx.coarse.getOrElse(field,
-      throw new IllegalStateException(s"field $field is not trained"))
-    val nc = cq.numCentroids
+    val dim = idx.schema.field(field).parameters.dimensions
+    if (!idx.coarse.contains(field))
+      throw new IllegalStateException(s"field $field is not trained")
 
     // driver-side per-query planning, capped by an explicit gate: the
     // limit() collects at most maxQueries+1 rows, and the require turns an
@@ -672,284 +539,138 @@ object BatchSearcher {
       import scala.collection.parallel.CollectionConverters._
       qRows.par.map { case (qid, toks) =>
         implicit val perQuery: Searcher.PlanCache = scala.collection.mutable.Map.empty
-        val (m, probes) = Searcher.queryPlan(idx, VectorQuery(field, toks), opts)
-        (qid, toks, m, probes)
+        val (_, probes) = Searcher.queryPlan(idx, VectorQuery(field, toks), opts)
+        (qid, toks, probes)
       }.seq.toIndexedSeq
     }
 
     import spark.implicits._
-    // lazy: the join shapes map centroid -> query_id through it; the
-    // default inverted walk never touches it
-    lazy val probeDf = prof("plan_probe_df") {
-      plans.flatMap { case (qid, _, _, probes) =>
-        probes.map(c => (qid, c))
-      }.toSeq.toDF("query_id", "centroid")
-    }
-
     // per-query token vectors ride in ONE small broadcast (batch x nq x dim
-    // floats, ~0.4 MiB for 212 queries) shared by the phase-1 scoring
-    // expression and the phase-2 rerank UDF; the centroid matrix rides in
-    // the per-index cached broadcast. The earlier design shipped the
-    // precomputed per-query (nq x numCentroids) score matrices as a plan
-    // constant — batch x K-proportional (159 MiB at 212 queries/K=49152),
-    // Java-deserialized per task, measured 4.1 s/query at the 10M-doc
-    // shape. Nothing K-proportional ships with the plan now.
+    // floats, ~0.4 MiB for 212 queries) shared by the phase-1 walk and the
+    // phase-2 rerank; the centroid matrix rides in the per-index cached
+    // broadcast. Nothing K-proportional ships with the plan (the earlier
+    // per-query score-matrix plan constant was 159 MiB at 212 queries/
+    // K=49152, measured 4.1 s/query at the 10M-doc shape).
     val bQueries = prof("plan_bquery_bcast") {
       spark.sparkContext.broadcast(
-        plans.map { case (qid, toks, _, _) => qid -> toks.flatten }.toMap)
+        plans.map { case (qid, toks, _) => qid -> toks.flatten }.toMap)
     }
     val bcCent = idx.centroidBroadcast(field)
+    // the probe lists ride in the task closures (batch x nProbe longs,
+    // ~50 KiB for 212 queries — nothing corpus- or K-proportional)
+    val qProbes = plans.map { case (qid, _, probes) => (qid, probes) }
 
-    // the UNION of all queries' probes is known at plan time: push it into
-    // the scan as static bucket/centroid predicates (partition + row-group
-    // pruning) — the broadcast join then just maps centroid -> query_id.
-    // The cheap centroid_bucket partition filter is ALWAYS pushed (its
-    // literal count is bounded by CentroidBuckets); the centroid IN-list is
-    // only added while it stays small — for a large batch it approaches
-    // numQueries x nProbe literals, which bloats the analyzed plan and
-    // codegen (the same pathological In-list compactTable guards against)
-    // while pruning little beyond what the bucket filter already did.
-    val allProbes = plans.flatMap(_._4).distinct
-    val allBuckets = allProbes.map(IndexIVF.bucketOf).distinct
-    val bucketPruned = idx.postingsDf
-      .filter(col("tenant") === tenant && col("field") === fid &&
-        col("centroid_bucket").isin(allBuckets: _*))
-    val scanned =
-      if (allProbes.length <= MaxCentroidInList)
-        bucketPruned.filter(col("centroid").isin(allProbes: _*))
-      else bucketPruned
-    // phase-1: native codegen'd expression scoring each (token, code) pair
-    // lazily against the broadcast centroid matrix (no UDF boxing on the
-    // (query x candidate) hot loop). Residuals optionally ride along — see
-    // CarryResidualsKey for the measured trade.
-    val carry = carryResiduals(spark) && opts.secondPass
-    val scoreCol = graft.functions.BatchCentroidScore(col("query_id"),
-      col("doc_codes"), bQueries, bcCent, dim).as("score")
-    val ctxAll = idx.contextDf
-      .filter(col("tenant") === tenant && col("field") === fid)
-      .select(col("doc_id") +: col("doc_codes") +:
-        (if (carry) Seq(col("doc_residuals")) else Nil): _*)
-
-    val heap = poolHeap(spark) && !carry
-    // broadcast-context gate: the count is footer-only metadata (tenant +
-    // field are partition columns, so even the listing is pruned); the
-    // measured-bytes lookup is cached against it — see measuredContextBytes
+    // broadcast-context gate: the stats are cached per index state — see
+    // contextRelationStats
     val ctxGateBytes = broadcastContextMaxBytes(spark)
     val (ctxRows, ctxBytes) = prof("gate_ctx_bytes") {
-      if (heap) contextRelationStats(idx, tenant, field) else (0L, Long.MaxValue)
+      contextRelationStats(idx, tenant, field)
     }
-    val bcastCtx = heap && ctxBytes <= ctxGateBytes
     // saturation-aware escalation (see NspEscalateKey): the heap keeps esc
     // candidates; the driver-side cut below decides per query
     val esc = nspEscalate(spark)
-    val adaptive = esc > opts.numSecondPass && heap && opts.secondPass &&
-      rerankMultiget(spark)
+    val adaptive = esc > opts.numSecondPass && opts.secondPass
     val poolDepth = if (adaptive) esc else opts.numSecondPass
 
-    // OVERLAP the phase-2 point-store resolve with phase-1 (guide §2.6):
-    // the pool's plan-time id bound (queries x poolDepth) can only exceed
-    // the IN-list threshold if the multiget will route through the store,
-    // so when it does, kick the (idempotent, build-locked, once-per-index-
-    // state) resolve on a background thread BEFORE the phase-1 action — a
-    // cold first batch then pays max(phase-1, store build) instead of
-    // their sum. When the deduped pool lands under the threshold after
-    // all, the speculative build still caches state every later
-    // over-threshold batch reads; steady-state resolves are cache hits
-    // either way. Failures surface at get() on the consuming path.
-    val storeTask: Option[java.util.concurrent.FutureTask[(String, Int)]] =
-      if (opts.secondPass && !carry && rerankMultiget(spark) &&
-          pointStoreEnabled(spark) &&
-          plans.length.toLong * poolDepth > maxDocIdInList(spark)) {
-        val t = new java.util.concurrent.FutureTask(
-          () => idx.pointStore(tenant, field, if (heap) Some(ctxRows) else None))
-        val th = new Thread(t, "graft-batch-pointstore")
-        th.setDaemon(true)
-        th.start()
-        Some(t)
-      } else None
+    // OVERLAP the phase-2 point-store resolve with phase-1: the pool's
+    // plan-time id bound (queries x poolDepth) can only exceed the IN-list
+    // threshold if the multiget will route through the store, so when it
+    // does, kick the (idempotent, build-locked, once-per-index-state)
+    // resolve BEFORE the phase-1 action — a cold first batch then pays
+    // max(phase-1, store build) instead of their sum. When the deduped
+    // pool lands under the threshold after all, the build still caches
+    // state every later over-threshold batch reads.
+    val inListMax = maxDocIdInList(spark)
+    val storeTask =
+      if (opts.secondPass && plans.length.toLong * poolDepth > inListMax)
+        Some(new SpeculativeBuild("graft-batch-pointstore",
+          () => idx.pointStore(tenant, field, Some(ctxRows))))
+      else None
 
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    val pool: DataFrame = if (bcastCtx && ctxBroadcastCache(spark) &&
-        invertedWalk(spark)) {
-      // SCAN-FREE phase-1 (see InvertedWalkKey): one task per query walks
-      // the snapshot's inverted postings view and heaps its own pool cut.
-      // The probe lists ride in the task closure (batch x nProbe longs,
-      // ~50 KiB for 212 queries — nothing corpus- or K-proportional).
-      val bcCtx = prof("ctx_bcast_build") {
-        idx.contextCodesBroadcast(tenant, field, ctxRows, ctxBytes,
-          ctxGateBytes)
-      }
-      val qProbes = plans.map { case (qid, _, _, probes) => (qid, probes) }
-      val depth = poolDepth
-      // pack queries into ~2 x cores partitions: the per-task fixed cost
-      // (launch, bitmap allocation, per-partition query transpose) was
-      // ~40 % of the walk stage at one-task-per-query x 212; per-query
-      // work varies little on a clustered corpus, so coarse packing
-      // loses negligible balance
-      val walkParts = math.max(1, math.min(qProbes.size,
-        spark.sparkContext.defaultParallelism * 2))
-      val walked = spark.sparkContext
-        .parallelize(qProbes, walkParts)
-        .mapPartitions { it =>
-          val ctx = bcCtx.value
+    val result = try {
+      val pool: DataFrame = if (ctxBytes <= ctxGateBytes) {
+        // under the gate: each walk task takes a slice of the queries and
+        // walks the broadcast snapshot's inverted view for each of them
+        val bcCtx = prof("ctx_bcast_build") {
+          idx.contextCodesBroadcast(tenant, field, ctxRows, ctxBytes,
+            ctxGateBytes)
+        }
+        // pack queries into ~2 x cores partitions: the per-task fixed cost
+        // (launch, bitmap allocation, per-partition query transpose) was
+        // ~40 % of the walk stage at one-task-per-query x 212; per-query
+        // work varies little on a clustered corpus, so coarse packing
+        // loses negligible balance
+        val walkParts = math.max(1, math.min(qProbes.size,
+          spark.sparkContext.defaultParallelism * 2))
+        spark.sparkContext.parallelize(qProbes, walkParts)
+          .mapPartitions { it =>
+            val queries = bQueries.value
+            val queriesT =
+              graft.functions.BatchCtxCentroidScore.transposeAll(queries, dim)
+            walkQueries(bcCtx.value, it, queries, queriesT, bcCent.value, dim,
+              poolDepth)
+          }
+          .toDF("query_id", "doc_id", "score")
+      } else {
+        // past the gate the snapshot is DOC-PARTITIONED across executors
+        // instead of replicated onto each; every query walks every
+        // partition's local inverted view, and the per-partition heap cuts
+        // merge through one partial-heap shuffle (<= partitions x queries x
+        // poolDepth rows)
+        val partsRdd = prof("ctx_part_build") {
+          idx.contextCodesPartitioned(tenant, field, ctxRows, ctxBytes,
+            walkPartitionBytes(spark))
+        }
+        val bcProbes = spark.sparkContext.broadcast(qProbes)
+        val walked = partsRdd.mapPartitions { ctxIt =>
           val queries = bQueries.value
           val queriesT =
-            graft.functions.BatchCentroidScore.transposeAll(queries, dim)
+            graft.functions.BatchCtxCentroidScore.transposeAll(queries, dim)
           val cent = bcCent.value
-          walkQueries(ctx, it, queries, queriesT, cent, dim, depth)
+          val qps = bcProbes.value
+          ctxIt.flatMap(ctx =>
+            walkQueries(ctx, qps.iterator, queries, queriesT, cent, dim, poolDepth))
         }
-      walked.toDF("query_id", "doc_id", "score")
-    } else if (!bcastCtx && heap && distributedWalk(spark)) {
-      // DISTRIBUTED inverted walk (see DistributedWalkKey): the context
-      // outgrew the broadcast gate, so the snapshot is DOC-PARTITIONED
-      // across executors instead of replicated onto each; every query
-      // walks every partition's local inverted view, per-partition heap
-      // cuts merge through one partial-heap shuffle. The probe lists ride
-      // in one small broadcast (batch x nProbe longs — nothing corpus- or
-      // K-proportional); steady-state phase-1 reads no table at all.
-      val partsRdd = prof("ctx_part_build") {
-        idx.contextCodesPartitioned(tenant, field, ctxRows, ctxBytes,
-          walkPartitionBytes(spark))
+        // per-partition cuts are local top-depth supersets of the global
+        // cut, so one more groupTopK reproduces it bit-exactly
+        groupTopK(walked.toDF("query_id", "doc_id", "score"), poolDepth)
       }
-      val qProbes = plans.map { case (qid, _, _, probes) => (qid, probes) }
-      val bcProbes = spark.sparkContext.broadcast(qProbes)
-      val depth = poolDepth
-      val walked = partsRdd.mapPartitions { ctxIt =>
-        val queries = bQueries.value
-        val queriesT =
-          graft.functions.BatchCentroidScore.transposeAll(queries, dim)
-        val cent = bcCent.value
-        val qps = bcProbes.value
-        ctxIt.flatMap(ctx =>
-          walkQueries(ctx, qps.iterator, queries, queriesT, cent, dim, depth))
-      }
-      // per-partition cuts are local top-depth supersets of the global cut,
-      // so one more groupTopK reproduces the scan shape's pool bit-exactly
-      groupTopK(walked.toDF("query_id", "doc_id", "score"), depth)
-    } else if (bcastCtx) {
-      // MAP-SIDE phase-1 (the high-fan-out scale shape): probe map and the
-      // deduplicated doc -> codes relation both broadcast, so the
-      // (query, doc) candidate stream — which at a skewed probe profile
-      // reaches ~1e9 pairs for a 212-query batch (10M docs, K=49152) —
-      // flows scan -> BHJ -> BHJ -> score -> partial heap aggregate inside
-      // ONE stage with no shuffle, no sort, and no pair-level distinct
-      // (TopKByScore dedups doc_id inside the heap; see its scaladoc for
-      // why that is exactly distinct + window + rank<=nsp). The window
-      // path this replaces sorted the full candidate stream per partition
-      // and spilled 73-81 GB per stage at that shape (387-480 s; heap
-      // path measured far below). Only numQueries x nsp partial-heap rows
-      // cross the one remaining (tiny) shuffle.
-      // round-robin the THIN pruned postings first: hot centroids
-      // concentrate the join fan-out on the few scan splits holding them
-      // (observed: 8/32 cores busy on stragglers at the 10M shape), and
-      // with no shuffle downstream AQE cannot re-split. The exchange moves
-      // only (doc_id, centroid) rows — never the fanned-out pairs. The
-      // width adapts to the postings volume (footer-count metadata job,
-      // like the broadcast gate above): ~64k thin rows per task keeps task
-      // overhead amortized, and a small index skips the exchange entirely
-      // — fanning a few-thousand-row scan across 8 x cores tasks only adds
-      // fixed scheduling cost (measured ~2x ms/query on the sf0.1 toy
-      // batch-212 harness) while skew cannot dominate a sub-task's work.
-      val fanCap = fanoutPartitions(spark)
-      val fanParts =
-        if (fanCap <= 0) 0
-        else prof("gate_fanout_count") {
-          math.min(fanCap.toLong,
-            (idx.postingsDf.count() + FanoutRowsPerTask - 1) / FanoutRowsPerTask).toInt
-        }
-      val spread = if (fanParts > 1) scanned.repartition(fanParts) else scanned
-      val pairs = spread
-        .join(broadcast(probeDf), Seq("centroid"))
-        .select(col("query_id"), col("doc_id"))
-      val scored =
-        if (ctxBroadcastCache(spark)) {
-          // handle-cached snapshot: steady-state batches never scan the
-          // context table in phase-1 — the (query_id, doc_id) pairs are
-          // scored by broadcast lookup; null = no context row for the doc,
-          // the same drop the BHJ inner join performed
-          val bcCtx = prof("ctx_bcast_build") {
-            idx.contextCodesBroadcast(tenant, field, ctxRows, ctxBytes,
-              ctxGateBytes)
-          }
-          pairs.select(col("query_id"), col("doc_id"),
-            graft.functions.BatchCtxCentroidScore(col("query_id"),
-              col("doc_id"), bQueries, bcCent, bcCtx, dim).as("score"))
-            .filter(col("score").isNotNull)
-        } else pairs
-          .join(broadcast(ctxAll.dropDuplicates("doc_id")), Seq("doc_id"))
-          .select(col("query_id"), col("doc_id"), scoreCol)
-      groupTopK(scored, poolDepth)
-    } else {
-      // shuffle shape for a corpus whose thin context outgrows a sane
-      // broadcast: distinct pairs, semi-join prune of the context scan,
-      // pair join, then the heap cut (or the window when residuals must
-      // ride through the cut — the heap carries no payload columns)
-      val candidates = scanned
-        .join(broadcast(probeDf), Seq("centroid"))
-        .select(col("query_id"), col("doc_id")).distinct()
-      val ctxPruned =
-        if (broadcastCandidates(spark))
-          ctxAll.join(broadcast(candidates.select(col("doc_id")).distinct()),
-            Seq("doc_id"), "left_semi")
-        else ctxAll
-      val phase1Cols = Seq(col("query_id"), col("doc_id"), scoreCol) ++
-        (if (carry) Seq(col("doc_codes"), col("doc_residuals")) else Nil)
-      // candidates is distinct (query_id, doc_id) and the pruned context is
-      // one row per doc_id after the dedup, so the pair join needs no
-      // further dedup
-      val phase1 = ctxPruned
-        .dropDuplicates("doc_id")
-        .join(candidates, Seq("doc_id"))
-        .select(phase1Cols: _*)
-      if (heap) groupTopK(phase1, poolDepth)
-      else phase1.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= opts.numSecondPass).drop("rn")
-    }
 
-    val bq = spark.sparkContext.broadcast(idx.quantizers(field))
-    // one decode+score kernel for both phase-2 shapes (scan rows feed it a
-    // token count from doc_codes; the point store derives it from the
-    // residual length, nTokens = bytes / codeSize — same value by the
-    // write-path invariant resLen == nTokens x codeSize)
-    val scoreFromResiduals: (Long, Int, Array[Byte]) => Double =
-      (qid, n, residuals) => {
-        val quant = bq.value
-        val doc = new Array[Float](n * dim)
-        var i = 0
-        while (i < n) {
-          val tok = quant.decode(java.util.Arrays.copyOfRange(
-            residuals, i * quant.codeSize, (i + 1) * quant.codeSize))
-          System.arraycopy(tok, 0, doc, i * dim, dim)
-          i += 1
-        }
-        val q = bQueries.value(qid)
-        Plaid.scoreByResiduals(q, q.length / dim, doc, n, dim, normalize = true).toDouble
-      }
-    val rerankUdf = udf { (qid: Long, codes: Seq[Long], residuals: Array[Byte]) =>
-      scoreFromResiduals(qid, codes.length, residuals)
-    }
-    val reranked =
       if (!opts.secondPass) pool
-      else if (carry)
-        pool.select(col("query_id"), col("doc_id"),
-          rerankUdf(col("query_id"), col("doc_codes"), col("doc_residuals")).as("score"))
-      else if (rerankMultiget(spark)) {
+      else {
+        val bq = spark.sparkContext.broadcast(idx.quantizers(field))
+        // one decode+score kernel for both phase-2 shapes (scan rows feed it
+        // a token count from doc_codes; the point store derives it from the
+        // residual length, nTokens = bytes / codeSize — same value by the
+        // write-path invariant resLen == nTokens x codeSize)
+        val scoreFromResiduals: (Long, Int, Array[Byte]) => Double =
+          (qid, n, residuals) => {
+            val quant = bq.value
+            val doc = new Array[Float](n * dim)
+            var i = 0
+            while (i < n) {
+              val tok = quant.decode(java.util.Arrays.copyOfRange(
+                residuals, i * quant.codeSize, (i + 1) * quant.codeSize))
+              System.arraycopy(tok, 0, doc, i * dim, dim)
+              i += 1
+            }
+            val q = bQueries.value(qid)
+            Plaid.scoreByResiduals(q, q.length / dim, doc, n, dim, normalize = true).toDouble
+          }
         // the pool cut is <= batch x poolDepth (query_id, doc_id[, score])
         // pairs — the bound is known at plan time, so guard BEFORE the
-        // collect (same style as the matrix plan-constant guard above);
-        // the adaptive shape carries the score (8 B more per pair) so the
-        // driver can judge boundary saturation
+        // collect; the adaptive shape carries the score (8 B more per pair)
+        // so the driver can judge boundary saturation
         val pairBytes = if (adaptive) PoolPairBytes + 8L else PoolPairBytes
-        val poolBound = plans.length.toLong * poolDepth
-        val poolBytes = poolBound * pairBytes
+        val poolBytes = plans.length.toLong * poolDepth * pairBytes
         require(poolBytes <= maxPoolBytes(spark),
           s"phase-2 pool would collect ~$poolBytes bytes on the driver " +
             s"(${plans.length} queries x poolDepth=$poolDepth " +
             s"x $pairBytes B/pair, limit ${maxPoolBytes(spark)}): split " +
             s"the batch into smaller searchBatch calls, lower " +
             s"numSecondPass, or raise $MaxPoolBytesKey")
-        // bounded: <= queries x poolDepth pairs, byte-gated just above
+        // bounded: <= queries x poolDepth pairs, byte-gated by the
+        // maxPoolBytes require just above
         val poolRows: Array[(Long, Long)] =
           if (adaptive) {
             val withScores = prof("phase1_pool_action") {
@@ -961,8 +682,8 @@ object BatchSearcher {
             if (prof.on) prof.buf("adaptive_escalated_queries") = escalated.toDouble
             kept
           } else prof("phase1_pool_action") {
-            // bounded: <= poolBound pairs, byte-gated by the maxPoolBytes
-            // require above
+            // bounded: <= poolDepth pairs per query, byte-gated by the
+            // maxPoolBytes require above
             pool.select(col("query_id"), col("doc_id"))
               .collect().map(r => (r.getLong(0), r.getLong(1)))
           }
@@ -977,85 +698,54 @@ object BatchSearcher {
               org.apache.spark.sql.types.StructField("score",
                 org.apache.spark.sql.types.DoubleType, nullable = true))))
         else prof("rerank_assembly") {
-          // phase-2 hydration, shape-switched on pool size. A small
-          // interactive pool's doc_id IN-set genuinely prunes the
-          // doc_id-sorted context files (directories via the bucket set,
-          // row groups via the IN-list), so it stays a scan. Past
-          // MaxDocIdInListKey the pool's id density saturates every
-          // granule a columnar scan can skip — directories, row groups
-          // AND pages (the r17 breakdown measured the semi-join scan
-          // decoding all 10M context rows per batch to keep 54k) — so the
-          // ids multiget the record-addressable PointStore instead:
-          // O(pool) bytes touched and records decoded, the distributed
-          // twin of the reference's RocksDB MultiGet
-          // (RocksdbForwardIndex.cpp:44-92). The r17 broadcast left-semi
-          // scan remains the PointStoreKey=false fallback/A-B hatch.
+          // phase-2 hydration, shape-switched on pool size (see
+          // MaxDocIdInListKey): a small pool's doc_id IN-set genuinely
+          // prunes the doc_id-sorted context files, so it stays a scan; a
+          // big one multigets the record-addressable PointStore
           val ids = poolRows.map(_._2).distinct
-          if (ids.length > maxDocIdInList(spark) && pointStoreEnabled(spark)) {
+          if (ids.length > inListMax) {
             val (storeDir, storeBuckets) = prof("pointstore_resolve") {
-              storeTask match {
-                case Some(t) =>
-                  try t.get()
-                  catch {
-                    case e: java.util.concurrent.ExecutionException =>
-                      throw e.getCause
-                  }
-                case None =>
-                  idx.pointStore(tenant, field, if (heap) Some(ctxRows) else None)
-              }
+              // started above: ids.length <= queries x poolDepth
+              storeTask.get.await()
             }
             graft.index.PointStore.multigetScore(spark, storeDir, storeBuckets,
               poolRows,
               (qid, _, res) =>
                 scoreFromResiduals(qid, res.length / bq.value.codeSize, res))
           } else {
-          val buckets = ids.map(IndexIVF.docBucketOf).distinct.toSeq
-          val ctxBase = idx.contextDf
-            .filter(col("tenant") === tenant && col("field") === fid &&
-              col("doc_bucket").isin(buckets: _*))
-          val ctxPicked =
-            if (ids.length <= maxDocIdInList(spark))
-              ctxBase.filter(col("doc_id").isInCollection(ids.toSeq))
-            else {
-              val idsDf = spark.createDataFrame(
-                spark.sparkContext.parallelize(ids.toIndexedSeq.map(i =>
-                  org.apache.spark.sql.Row(i)), 1),
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("doc_id",
-                    org.apache.spark.sql.types.LongType, nullable = false))))
-              ctxBase.join(broadcast(idsDf), Seq("doc_id"), "left_semi")
+            val buckets = ids.map(IndexIVF.docBucketOf).distinct.toSeq
+            val ctxM = idx.contextDf
+              .filter(col("tenant") === tenant && col("field") === fid &&
+                col("doc_bucket").isin(buckets: _*) &&
+                col("doc_id").isInCollection(ids.toSeq))
+              .select(col("doc_id"), col("doc_codes"), col("doc_residuals"))
+              .dropDuplicates("doc_id")
+            val poolDf = spark.createDataFrame(
+              spark.sparkContext.parallelize(poolRows.toIndexedSeq.map(p =>
+                org.apache.spark.sql.Row(p._1, p._2)), 1),
+              org.apache.spark.sql.types.StructType(Seq(
+                org.apache.spark.sql.types.StructField("query_id",
+                  org.apache.spark.sql.types.LongType, nullable = false),
+                org.apache.spark.sql.types.StructField("doc_id",
+                  org.apache.spark.sql.types.LongType, nullable = false))))
+            val rerankUdf = udf { (qid: Long, codes: Seq[Long], residuals: Array[Byte]) =>
+              scoreFromResiduals(qid, codes.length, residuals)
             }
-          val ctxM = ctxPicked
-            .select(col("doc_id"), col("doc_codes"), col("doc_residuals"))
-            .dropDuplicates("doc_id")
-          val poolDf = spark.createDataFrame(
-            spark.sparkContext.parallelize(poolRows.toIndexedSeq.map(p =>
-              org.apache.spark.sql.Row(p._1, p._2)), 1),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("query_id",
-                org.apache.spark.sql.types.LongType, nullable = false),
-              org.apache.spark.sql.types.StructField("doc_id",
-                org.apache.spark.sql.types.LongType, nullable = false))))
-          ctxM.join(broadcast(poolDf), Seq("doc_id"))
-            .select(col("query_id"), col("doc_id"),
-              rerankUdf(col("query_id"), col("doc_codes"), col("doc_residuals")).as("score"))
+            ctxM.join(broadcast(poolDf), Seq("doc_id"))
+              .select(col("query_id"), col("doc_id"),
+                rerankUdf(col("query_id"), col("doc_codes"), col("doc_residuals")).as("score"))
           }
         }
-      } else {
-        // r10-shape measurement hatch: re-join the FULL context table
-        // (corpus-wide dedup shuffle included — the shape the multiget
-        // replaced; see RerankMultigetKey)
-        val ctxFull = idx.contextDf
-          .filter(col("tenant") === tenant && col("field") === fid)
-          .dropDuplicates("doc_id")
-          .select(col("doc_id"), col("doc_codes"), col("doc_residuals"))
-        pool.join(ctxFull, Seq("doc_id"))
-          .select(col("query_id"), col("doc_id"),
-            rerankUdf(col("query_id"), col("doc_codes"), col("doc_residuals")).as("score"))
       }
+    } catch { case e: Throwable => storeTask.foreach(_.release(Some(e))); throw e }
+    // no-op when phase-2 consumed the build; otherwise its failure is
+    // logged rather than lost
+    storeTask.foreach(_.release(None))
 
     if (prof.on) lastProfile = prof.buf.toMap
-    reranked.withColumn("rn", row_number().over(w))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("doc_id"))
+    result.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k).drop("rn")
       .orderBy(col("query_id"), col("score").desc, col("doc_id"))
   }

@@ -535,11 +535,7 @@ object Searcher {
     val ctx = idx.contextDf
       .filter(col("tenant") === tenant && col("field") === fid)
       .select(col("doc_id"), col("doc_codes"))
-    val candSide =
-      if (spark.conf.get(BatchSearcher.BroadcastCandidatesKey, "true").toBoolean)
-        broadcast(candidates)
-      else candidates
-    val scored = ctx.join(candSide, Seq("doc_id"))
+    val scored = ctx.join(broadcast(candidates), Seq("doc_id"))
       .dropDuplicates("doc_id")
     scored.select(col("doc_id") +: scoreCol(col("doc_codes")).as("score") +:
       (if (mark) Seq(lit(true).as("vec_match")) else Seq.empty): _*)

@@ -3,11 +3,65 @@ package graft
 import graft.core._
 import graft.index.IndexIVF
 import graft.query._
+import org.apache.spark.graftbridge.ListenerBusAccess
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Batch search must agree with N independent single-query searches. */
 class BatchSearchSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  private type Ranked = Map[Long, Seq[(Long, Double)]]
+
+  private def batchRows(idx: IndexIVF, queries: Seq[(Long, Seq[Seq[Float]])],
+      k: Int, opts: SearchOptions): Ranked = {
+    import spark.implicits._
+    BatchSearcher.searchBatch(idx, 1, "colbert",
+      queries.toDF("query_id", "tokens"), k, opts)
+      .collect().groupBy(_.getLong(0))
+      .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq).toMap
+  }
+
+  /** The independent reference: each query through the single-query path. */
+  private def perQueryRows(idx: IndexIVF, queries: Seq[(Long, Seq[Seq[Float]])],
+      k: Int, opts: SearchOptions): Ranked =
+    queries.map { case (qid, toks) =>
+      qid -> idx.search(1, VectorQuery("colbert", toks.map(_.toArray).toArray),
+          k, opts)
+        .select("doc_id", "score").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    }.toMap
+
+  /** Same doc order per query, scores within 1e-6. */
+  private def assertSameRanking(batch: Ranked, reference: Ranked,
+      what: String): Unit = {
+    assert(batch.keySet == reference.keySet, s"$what: query sets differ")
+    reference.foreach { case (qid, ref) =>
+      assert(batch(qid).map(_._1) == ref.map(_._1),
+        s"$what: doc ranking for query $qid")
+      batch(qid).zip(ref).foreach { case ((_, a), (_, b)) =>
+        assert(math.abs(a - b) < 1e-6, s"$what: score for query $qid")
+      }
+    }
+  }
+
+  /** Executed plans of every SQL action `run` triggers. */
+  private def capturedPlans[A](run: => A): (A, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+        plans.add(qe.executedPlan.toString); ()
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = run
+      ListenerBusAccess.drain(spark.sparkContext)
+      (out, scala.jdk.CollectionConverters.CollectionHasAsScala(plans).asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("searchBatch == per-query search results") {
     import spark.implicits._
@@ -44,18 +98,6 @@ class BatchSearchSpec extends AnyFunSuite {
       }
     }
 
-    // both rerank-input shapes (re-join context after the window cut vs
-    // carrying residuals through it — see CarryResidualsKey) must return
-    // identical rows
-    spark.conf.set(BatchSearcher.CarryResidualsKey, "true")
-    try {
-      val carried = BatchSearcher.searchBatch(idx, 1, "colbert", queriesDf, k = 5, opts)
-        .collect()
-        .groupBy(_.getLong(0))
-        .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq).toMap
-      queryIds.foreach(qid => assert(carried(qid) == batch(qid),
-        s"carry-residuals shape diverged for query $qid"))
-    } finally spark.conf.unset(BatchSearcher.CarryResidualsKey)
     // (the old MaxMatrixBytes plan-constant guard is gone with the plan
     // constant itself: phase-1 now reads the centroid matrix through the
     // per-index broadcast, so nothing K-proportional ships with the plan)
@@ -95,10 +137,10 @@ class BatchSearchSpec extends AnyFunSuite {
     val unrestricted = run()
 
     // cap BELOW the measured bytes (but far above the row count): the gate
-    // must fall back to the shuffle shape and still return identical rows
+    // must route to the doc-partitioned walk and still return identical rows
     spark.conf.set(BatchSearcher.BroadcastContextMaxBytesKey, "1024")
     try assert(run() == unrestricted,
-      "shuffle-shape fallback under the byte gate diverged")
+      "over-gate distributed walk diverged from the broadcast walk")
     finally spark.conf.unset(BatchSearcher.BroadcastContextMaxBytesKey)
 
     // pool guard: 2 queries x 1024 numSecondPass x 16 B = 32 KiB — a
@@ -110,7 +152,7 @@ class BatchSearchSpec extends AnyFunSuite {
     } finally spark.conf.unset(BatchSearcher.MaxPoolBytesKey)
   }
 
-  test("over-gate distributed walk: identical rows to the scan shape, " +
+  test("over-gate distributed walk: identical rows to per-query search, " +
       "no postings reference in the walk plan, mutation visible") {
     import spark.implicits._
     val dim = 16
@@ -127,50 +169,32 @@ class BatchSearchSpec extends AnyFunSuite {
     idx.add(1, docs)
 
     val opts = SearchOptions(kTopCentroids = 3, nProbe = 6)
-    val queriesDf = Seq(3L, 20L, 41L).map(qid => (qid, corpus(qid)))
-      .toDF("query_id", "tokens")
-    def run(): (Map[Long, Seq[(Long, Double)]], String) = {
-      val df = BatchSearcher.searchBatch(idx, 1, "colbert", queriesDf, 5, opts)
-      val rows = df.collect().groupBy(_.getLong(0))
-        .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq).toMap
-      (rows, df.queryExecution.executedPlan.toString)
-    }
-
-    val (underGate, _) = run() // broadcast-snapshot walk (reference rows)
-    // force the over-gate regime: every shape below must reproduce the
-    // under-gate rows bit-identically
+    val queries = Seq(3L, 20L, 41L).map(qid => (qid, corpus(qid)))
+    val reference = perQueryRows(idx, queries, 5, opts)
+    val underGate = batchRows(idx, queries, 5, opts) // broadcast-snapshot walk
+    assertSameRanking(underGate, reference, "under-gate walk")
+    // force the over-gate regime
     spark.conf.set(BatchSearcher.BroadcastContextMaxBytesKey, "1024")
     try {
-      val (distWalked, _) = run() // DistributedWalkKey defaults true
+      val (distWalked, plans) = capturedPlans(batchRows(idx, queries, 5, opts))
+      assertSameRanking(distWalked, reference, "over-gate distributed walk")
       assert(distWalked == underGate,
         "over-gate distributed walk diverged from the broadcast-walk rows")
-      val (steady, _) = run() // second batch rides the cached partitions
-      assert(steady == underGate, "steady over-gate batch diverged")
-      spark.conf.set(BatchSearcher.DistributedWalkKey, "false")
-      try {
-        val (scanShape, _) = run()
-        assert(scanShape == underGate,
-          "over-gate scan-shape hatch diverged from the distributed walk")
-      } finally spark.conf.unset(BatchSearcher.DistributedWalkKey)
+      // second batch rides the cached partitions
+      assertSameRanking(batchRows(idx, queries, 5, opts), reference,
+        "steady over-gate batch")
 
-      // plan pin (multiget off keeps phase-1 in the returned lineage):
-      // the walk must not reference the postings relation — its
-      // centroid_bucket column is the marker — while the hatch must
-      // (canary that the marker still detects the scan shape)
-      spark.conf.set(BatchSearcher.RerankMultigetKey, "false")
-      try {
-        val (walkRows, walkPlan) = run()
-        assert(walkRows == underGate, "multiget-off distributed walk diverged")
-        assert(!walkPlan.contains("centroid_bucket"),
-          s"the distributed walk must not scan the postings table:\n$walkPlan")
-        spark.conf.set(BatchSearcher.DistributedWalkKey, "false")
-        try {
-          val (scanRows, scanPlan) = run()
-          assert(scanRows == underGate, "multiget-off scan shape diverged")
-          assert(scanPlan.contains("centroid_bucket"),
-            "the hatch must restore the postings-scan shape (plan-pin canary)")
-        } finally spark.conf.unset(BatchSearcher.DistributedWalkKey)
-      } finally spark.conf.unset(BatchSearcher.RerankMultigetKey)
+      // plan pin: no captured batch plan may reference the postings
+      // relation; the heap merge of the per-partition cuts is the only
+      // aggregate, never a full window sort of the candidate stream
+      assert(plans.nonEmpty, "no batch plan captured")
+      assert(plans.forall(p => !p.contains("postings")),
+        s"the distributed walk must not scan the postings table:\n" +
+          plans.mkString("\n---\n"))
+      assert(plans.exists(p => p.contains("ObjectHashAggregate") &&
+        p.contains("graft_topk_by_score")),
+        s"the per-partition cuts must merge through the bounded heap:\n" +
+          plans.mkString("\n---\n"))
 
       // freshness rides the partitioned snapshot's own invalidation: a doc
       // added after the build must be visible to the next over-gate batch
@@ -235,7 +259,7 @@ class BatchSearchSpec extends AnyFunSuite {
     val width = 120L
     val bytes = rows * (8L + 8L * width + 48L)
     assert(math.abs(BatchSearcher.avgDocWidth(rows, bytes) - 120.0) < 1e-9)
-    // no stats in hand (shuffle shape sentinel / empty corpus): falls back
+    // no stats in hand (unmeasured sentinel / empty corpus): falls back
     // to the width-4 calibration point
     assert(BatchSearcher.avgDocWidth(0L, 0L) == 4.0)
     assert(BatchSearcher.avgDocWidth(10L, Long.MaxValue) == 4.0)
@@ -312,8 +336,8 @@ class BatchSearchSpec extends AnyFunSuite {
     } finally spark.conf.unset(BatchSearcher.NspEscalateKey)
   }
 
-  test("cached context-codes snapshot: identical to the per-batch BHJ " +
-      "shape, and a mutation invalidates it") {
+  test("cached context-codes snapshot: identical to per-query search, " +
+      "and a mutation invalidates it") {
     import spark.implicits._
     val dim = 16
     val rnd = new scala.util.Random(21)
@@ -329,49 +353,26 @@ class BatchSearchSpec extends AnyFunSuite {
     idx.add(1, docs)
 
     val opts = SearchOptions(kTopCentroids = 3, nProbe = 6)
-    val queriesDf = Seq(5L, 17L, 31L).map(qid => (qid, corpus(qid)))
-      .toDF("query_id", "tokens")
-    def run(): Map[Long, Seq[(Long, Double)]] =
-      BatchSearcher.searchBatch(idx, 1, "colbert", queriesDf, k = 5, opts)
-        .collect().groupBy(_.getLong(0))
-        .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq).toMap
-
-    val cachedShape = run()
-    val cachedAgain = run() // second batch rides the cache — same rows
+    val queries = Seq(5L, 17L, 31L).map(qid => (qid, corpus(qid)))
+    val reference = perQueryRows(idx, queries, 5, opts)
+    val cachedShape = batchRows(idx, queries, 5, opts)
+    assertSameRanking(cachedShape, reference, "cached-snapshot batch")
+    val cachedAgain = batchRows(idx, queries, 5, opts) // rides the cache
     assert(cachedAgain == cachedShape, "cache-hit batch diverged")
-    spark.conf.set(BatchSearcher.CtxBroadcastCacheKey, "false")
-    try assert(run() == cachedShape,
-      "per-batch BHJ shape diverged from the cached-snapshot shape")
-    finally spark.conf.unset(BatchSearcher.CtxBroadcastCacheKey)
 
-    // phase-2 multiget shape switch: forcing the big-pool broadcast
-    // left-semi join (threshold 0, point store disabled — the store path
-    // has its own A/B in PointStoreSpec) must return the exact rows the
-    // doc_id IN-list path returns, and the ids must arrive as a
-    // BROADCAST left-semi (a shuffled semi over the pool would defeat
-    // the point of the switch)
+    // phase-2 multiget shape switch: threshold 0 routes every pool through
+    // the point store, which must return the reference rows without the
+    // ids ever re-entering a context scan as a join
     spark.conf.set(BatchSearcher.MaxDocIdInListKey, "0")
-    spark.conf.set(BatchSearcher.PointStoreKey, "false")
     try {
-      val df = BatchSearcher.searchBatch(idx, 1, "colbert", queriesDf, 5, opts)
+      val df = BatchSearcher.searchBatch(idx, 1, "colbert",
+        queries.toDF("query_id", "tokens"), 5, opts)
       val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("LeftSemi"),
-        s"threshold 0 must route the multiget through a semi-join:\n$plan")
-      // assert the POSITIVE physical shape, not just the absence of
-      // SortMergeJoin: a planner change dropping the broadcast hint to a
-      // ShuffledHashJoin left-semi would invert the switch's win while
-      // still passing a no-SMJ check (r17 ADVICE) — every LeftSemi in the
-      // plan must execute as a BroadcastHashJoin
-      plan.linesIterator.filter(_.contains("LeftSemi")).foreach { l =>
-        assert(l.contains("BroadcastHashJoin"),
-          s"LeftSemi must be a BroadcastHashJoin, got: $l\n$plan")
-      }
-      assert(run() == cachedShape,
-        "semi-join multiget diverged from the IN-list multiget")
-    } finally {
-      spark.conf.unset(BatchSearcher.MaxDocIdInListKey)
-      spark.conf.unset(BatchSearcher.PointStoreKey)
-    }
+      assert(!plan.contains("LeftSemi") && !plan.contains("/context"),
+        s"the point-store multiget must not scan or semi-join context:\n$plan")
+      assertSameRanking(batchRows(idx, queries, 5, opts), reference,
+        "point-store multiget")
+    } finally spark.conf.unset(BatchSearcher.MaxDocIdInListKey)
 
     // freshness: an add() on this handle must invalidate the snapshot —
     // a query matching ONLY the new doc has to find it in the next batch
@@ -386,7 +387,7 @@ class BatchSearchSpec extends AnyFunSuite {
       s"doc added after the snapshot build must be visible, got $after")
   }
 
-  test("inverted walk: identical rows to the scan shape, and steady " +
+  test("inverted walk: identical rows to per-query search, and steady " +
       "phase-1 touches no postings files") {
     import spark.implicits._
     val dim = 16
@@ -403,43 +404,22 @@ class BatchSearchSpec extends AnyFunSuite {
     idx.add(1, docs)
 
     val opts = SearchOptions(kTopCentroids = 3, nProbe = 6)
-    val queriesDf = Seq(4L, 19L, 42L).map(qid => (qid, corpus(qid)))
-      .toDF("query_id", "tokens")
-    def run(): (Map[Long, Seq[(Long, Double)]], String) = {
-      val df = BatchSearcher.searchBatch(idx, 1, "colbert", queriesDf, 5, opts)
-      val rows = df.collect().groupBy(_.getLong(0))
-        .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq).toMap
-      (rows, df.queryExecution.executedPlan.toString)
-    }
+    val queries = Seq(4L, 19L, 42L).map(qid => (qid, corpus(qid)))
+    val (reference, singlePlans) =
+      capturedPlans(perQueryRows(idx, queries, 5, opts))
+    val (walked, walkPlans) = capturedPlans(batchRows(idx, queries, 5, opts))
+    assertSameRanking(walked, reference, "inverted walk")
 
-    val (walked, _) = run() // InvertedWalkKey defaults true
-    spark.conf.set(BatchSearcher.InvertedWalkKey, "false")
-    try {
-      val (scanShape, _) = run()
-      assert(scanShape == walked,
-        "inverted walk diverged from the postings-scan shape")
-    } finally spark.conf.unset(BatchSearcher.InvertedWalkKey)
-
-    // plan pin: with the rerank multiget off the returned frame keeps the
-    // FULL lineage (the multiget collects the pool eagerly, hiding
-    // phase-1 from the final plan), so the phase-1 shape is assertable:
-    // the walk must not reference the postings relation anywhere (its
-    // `centroid_bucket` column is the marker — no other table has one),
-    // the hatch must (canary that the marker still detects the scan)
-    spark.conf.set(BatchSearcher.RerankMultigetKey, "false")
-    try {
-      val (walkRows, walkPlan) = run()
-      assert(walkRows == walked, "multiget-off walk shape diverged")
-      assert(!walkPlan.contains("centroid_bucket"),
-        s"the walk shape must not scan the postings table:\n$walkPlan")
-      spark.conf.set(BatchSearcher.InvertedWalkKey, "false")
-      try {
-        val (scanRows, scanPlan) = run()
-        assert(scanRows == walked, "multiget-off scan shape diverged")
-        assert(scanPlan.contains("centroid_bucket"),
-          "the hatch must restore the postings-scan shape (plan-pin canary)")
-      } finally spark.conf.unset(BatchSearcher.InvertedWalkKey)
-    } finally spark.conf.unset(BatchSearcher.RerankMultigetKey)
+    // plan pin over every SQL action the batch ran: the walk must not
+    // reference the postings relation anywhere, while the single-query
+    // path — which does scan postings — shows the marker in the same
+    // capture (canary that the capture sees phase-1 scans)
+    assert(walkPlans.nonEmpty, "no batch plan captured")
+    assert(walkPlans.forall(p => !p.contains("postings")),
+      s"the walk shape must not scan the postings table:\n" +
+        walkPlans.mkString("\n---\n"))
+    assert(singlePlans.exists(_.contains("postings")),
+      "plan-pin canary: the single-query path's postings scan was not captured")
 
     // freshness rides the snapshot's own invalidation: a new doc is
     // visible to the walk's next batch (the inverted view hangs off the
@@ -493,7 +473,7 @@ class BatchSearchSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(l)
     try {
       idx.warmBatchCaches(1, "colbert")
-      Thread.sleep(800) // listener events drain asynchronously
+      ListenerBusAccess.drain(spark.sparkContext)
       assert(jobs.get() == 0,
         s"repeat warmBatchCaches ran ${jobs.get()} jobs — the overlapped " +
           "builds must be idempotent cache hits")
@@ -617,7 +597,7 @@ class BatchSearchSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(l)
     try {
       val s2 = BatchSearcher.contextRelationStats(idx, 1, "colbert")
-      Thread.sleep(800) // listener events drain asynchronously
+      ListenerBusAccess.drain(spark.sparkContext)
       assert(s2 == s1, "cached stats diverged from the measured stats")
       assert(jobs.get() == 0,
         s"steady-state stats repeat ran ${jobs.get()} jobs — the cache " +
@@ -633,7 +613,7 @@ class BatchSearchSpec extends AnyFunSuite {
         Map("epoch" -> (idx.currentEpoch() + 1L)))
       val before = jobs.get()
       val s4 = BatchSearcher.contextRelationStats(idx, 1, "colbert")
-      Thread.sleep(800)
+      ListenerBusAccess.drain(spark.sparkContext)
       assert(s4._1 == 20L)
       assert(jobs.get() > before,
         "a foreign epoch advance must force a stats recompute")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{BatchCentroidScore, CentroidScore}
+import graft.functions.{BatchCtxCentroidScore, CentroidScore, CtxCodes}
 import graft.quantizers.CoarseQuantizer
 import graft.scoring.Plaid
 import org.apache.spark.sql.functions._
@@ -185,24 +185,24 @@ class CentroidScoreSpec extends AnyFunSuite {
     }
   }
 
-  test("batch expression routes each query_id to its own token vectors") {
-    import spark.implicits._
+  test("batch kernel routes each query_id to its own token vectors") {
     val q2 = Array.fill(2 * dim)(rnd.nextFloat() * 2 - 1) // nq=2 second query
-    val bq = spark.sparkContext.broadcast(Map(7L -> queryFlat, 8L -> q2))
+    val queries = Map(7L -> queryFlat, 8L -> q2)
+    val queriesT = BatchCtxCentroidScore.transposeAll(queries, dim)
     val m2 = new CoarseQuantizer(centroids).scoreBlock(q2, 2)
-    val rows = (0 until 100).map { i =>
-      (if (i % 2 == 0) 7L else 8L,
-        Seq.fill(1 + rnd.nextInt(6))(rnd.nextInt(nc).toLong), i)
-    }
-    val df = rows.toDF("qid", "codes", "i")
-      .select(col("i"), col("qid"),
-        BatchCentroidScore(col("qid"), col("codes"), bq, bcCent, dim).as("s"))
-    val got = df.collect().map(r => r.getInt(0) -> r.getDouble(2)).toMap
-    rows.foreach { case (qid, codes, i) =>
-      val expected =
-        if (qid == 7L) Plaid.colbertCentroidScore(codes.toArray, matrix, nq, nc)
-        else Plaid.colbertCentroidScore(codes.toArray, m2, 2, nc)
-      assert(got(i) == expected.toDouble, s"row $i qid $qid")
+    val docs = Array.tabulate(50)(i =>
+      (i.toLong, Array.fill(1 + rnd.nextInt(6))(rnd.nextInt(nc).toLong)))
+    val snap = CtxCodes.build(docs)
+    val cent = bcCent.value
+    docs.foreach { case (id, codes) =>
+      val pos = CtxCodes.indexOf(snap, id)
+      Seq(7L -> Plaid.colbertCentroidScore(codes, matrix, nq, nc),
+          8L -> Plaid.colbertCentroidScore(codes, m2, 2, nc)).foreach {
+        case (qid, expected) =>
+          val got = BatchCtxCentroidScore.compute(qid, snap, pos, queries,
+            queriesT, cent, dim)
+          assert(got == expected.toDouble, s"doc $id qid $qid")
+      }
     }
   }
 

@@ -3,6 +3,7 @@ package graft
 import graft.core._
 import graft.index.IndexIVF
 import graft.query._
+import org.apache.spark.graftbridge.ListenerBusAccess
 import org.scalatest.funsuite.AnyFunSuite
 
 case class Doc(id: Long, colbert: Seq[Seq[Float]], cat: String, num: Long)
@@ -407,9 +408,7 @@ class IndexSpec extends AnyFunSuite {
     // worth pinning), so the over-clamp warning path is live
     IndexIVF.lastSmallAddRows.set(-1L)
     freshIndex(QuantizerKind.NONE) // add() routes small postings appends single-task
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (IndexIVF.lastSmallAddRows.get() < 0 && System.nanoTime() < deadline)
-      Thread.sleep(50) // listener bus is async
+    ListenerBusAccess.drain(spark.sparkContext) // the listener bus is async
     val rows = IndexIVF.lastSmallAddRows.get()
     assert(rows > 0, "small-add observe metric never reached the listener")
   }
@@ -436,9 +435,7 @@ class IndexSpec extends AnyFunSuite {
     idx.train(docsOnly)
     IndexIVF.lastSmallAddRows.set(-1L)
     idx.add(tenant = 3, docsOnly) // default gate: small path, exact count out
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (IndexIVF.lastSmallAddRows.get() < 0 && System.nanoTime() < deadline)
-      Thread.sleep(50)
+    ListenerBusAccess.drain(spark.sparkContext)
     val rows = IndexIVF.lastSmallAddRows.get()
     assert(rows > 0, "baseline add never reported through the clamp hook")
     val gate = rows * IndexIVF.SmallAddPostingRowBytes
@@ -447,16 +444,14 @@ class IndexSpec extends AnyFunSuite {
     spark.conf.set(IndexIVF.SmallAddMaxBytesKey, gate.toString)
     try {
       idx.add(tenant = 4, docsOnly) // rows*32 <= gate: single-task, same count
-      val d2 = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (IndexIVF.lastSmallAddRows.get() < 0 && System.nanoTime() < d2)
-        Thread.sleep(50)
+      ListenerBusAccess.drain(spark.sparkContext)
       assert(IndexIVF.lastSmallAddRows.get() == rows,
         s"probe count drifted: ${IndexIVF.lastSmallAddRows.get()} vs $rows")
 
       IndexIVF.lastSmallAddRows.set(-1L)
       spark.conf.set(IndexIVF.SmallAddMaxBytesKey, (gate - 1).toString)
       idx.add(tenant = 5, docsOnly) // rows*32 > gate: bulk path, no observation
-      Thread.sleep(1500) // listener bus drain window
+      ListenerBusAccess.drain(spark.sparkContext)
       assert(IndexIVF.lastSmallAddRows.get() == -1L,
         "bulk-path add must not run the single-task observed write")
     } finally spark.conf.unset(IndexIVF.SmallAddMaxBytesKey)

@@ -270,104 +270,69 @@ class PlanSpec extends AnyFunSuite {
       val res = BatchSearcher.searchBatch(idx, 1, "colbert", queriesDf, k = 2,
         SearchOptions(kTopCentroids = 4, nProbe = 4, numSecondPass = 2))
       assert(res.collect().nonEmpty)
-      val deadline = System.nanoTime() + 10e9.toLong
-      var multiget = false
-      while (!multiget && System.nanoTime() < deadline) {
-        val snap = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
-        // phase-2 runs as its OWN job (no postings in its plan): the context
-        // read carries the pool ids' IN-set AND the doc_bucket partition
-        // filter, and the (query_id, doc_id) pool side joins as a broadcast
-        // — the corpus' residual bytes never enter a shuffle
-        multiget = snap.exists(p => p.contains("context") &&
-          !p.contains("postings") && p.contains("In(doc_id") &&
-          p.contains("doc_bucket") && p.contains("BroadcastHashJoin"))
-        if (!multiget) Thread.sleep(50)
-      }
-      val all = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
-        .mkString("\n---\n")
+      org.apache.spark.graftbridge.ListenerBusAccess.drain(spark.sparkContext)
+      val snap = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
+      // phase-2 runs as its OWN job (no postings in its plan): the context
+      // read carries the pool ids' IN-set AND the doc_bucket partition
+      // filter, and the (query_id, doc_id) pool side joins as a broadcast
+      // — the corpus' residual bytes never enter a shuffle
+      val multiget = snap.exists(p => p.contains("context") &&
+        !p.contains("postings") && p.contains("In(doc_id") &&
+        p.contains("doc_bucket") && p.contains("BroadcastHashJoin"))
+      val all = snap.mkString("\n---\n")
       assert(multiget,
         s"no batch plan multigets context with bucket + id pruning + broadcast pool:\n$all")
-      // DEFAULT phase-1 (r18 inverted walk): no SQL job reads ANY table —
-      // candidates come from the snapshot's in-memory inverted view in an
-      // RDD job the listener never sees a table plan for. Postings must
-      // not appear in any captured plan (the r17 scan shape put it in
-      // phase-1's; the walk removes that scan entirely).
+      // UNDER the gate phase-1 walks the broadcast snapshot: no SQL job
+      // reads ANY table — candidates come from the snapshot's in-memory
+      // inverted view in an RDD job the listener never sees a table plan
+      // for, so postings must not appear in any captured plan
       assert(all.linesIterator.forall(l => !l.contains("postings")),
-        s"the default (inverted-walk) batch must not scan postings:\n$all")
+        s"the under-gate batch must not scan postings:\n$all")
 
-      // the r17 scan shape survives as the InvertedWalkKey=false hatch:
-      // postings scan -> broadcast probe join -> snapshot-lookup scoring ->
-      // bounded-heap cut, with residuals and the context table untouched
-      plans.clear()
-      spark.conf.set(graft.query.BatchSearcher.InvertedWalkKey, "false")
-      try {
-        assert(BatchSearcher.searchBatch(idx, 1, "colbert", queriesDf, k = 2,
-          SearchOptions(kTopCentroids = 4, nProbe = 4, numSecondPass = 2))
-          .collect().nonEmpty)
-        val dl1 = System.nanoTime() + 10e9.toLong
-        var phase1Thin = false
-        while (!phase1Thin && System.nanoTime() < dl1) {
-          val snap = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
-          // the phase-1 pool job must not touch the context TABLE at all
-          // (r16): candidates are scored against the handle-cached CtxCodes
-          // broadcast snapshot by expression lookup, so the only corpus
-          // scan left in phase-1 is postings — and residual bytes stay
-          // phase-2's
-          phase1Thin = snap.exists(p => p.contains("postings") &&
-            p.contains("graft_batch_ctx_centroid_score") &&
-            !p.contains("/context") && !p.contains("doc_residuals"))
-          if (!phase1Thin) Thread.sleep(50)
+      // the batch rows are the independent per-query reference's rows:
+      // same doc order per query, scores within 1e-6
+      val opts = SearchOptions(kTopCentroids = 4, nProbe = 4, numSecondPass = 2)
+      val batch = res.collect().groupBy(_.getLong(0))
+        .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq).toMap
+      Seq(0L, 3L, 5L).foreach { q =>
+        val single = idx.search(1,
+            graft.query.VectorQuery("colbert", corpus(q).map(_.toArray).toArray),
+            k = 2, opts)
+          .select("doc_id", "score").collect()
+          .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(batch(q).map(_._1) == single.map(_._1), s"doc ranking for query $q")
+        batch(q).zip(single).foreach { case ((_, a), (_, b)) =>
+          assert(math.abs(a - b) < 1e-6, s"score for query $q")
         }
-        val allH = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
-          .mkString("\n---\n")
-        assert(phase1Thin, "hatch phase-1 must score via the cached snapshot " +
-          s"lookup with no context scan and no doc_residuals:\n$allH")
-        // phase-1 join shape: only the tiny probe map joins (broadcast); a
-        // SortMerge/ShuffledHash join would mean corpus rows crossed an
-        // exchange for the candidate pairing (the pre-r11 corpus-wide shape)
-        val p1 = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
-          .filter(p => p.contains("postings") &&
-            p.contains("graft_batch_ctx_centroid_score"))
-        assert(p1.nonEmpty, s"no phase-1 plan captured:\n$allH")
-        assert(p1.exists(p => p.contains("BroadcastHashJoin") && p.contains("BuildRight")),
-          s"phase-1 probe join is not a broadcast:\n$allH")
-        assert(p1.forall(p => !p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin")),
-          s"phase-1 shuffles corpus rows for the candidate pairing:\n$allH")
-        // pool cut shape: the per-query numSecondPass cut is the bounded-
-        // heap aggregate (ObjectHashAggregate over graft_topk_by_score) — a
-        // Window in the phase-1 plan would mean the full candidate stream
-        // is sorted (the 73-81 GB/stage spill shape at the 10M-doc
-        // high-fan-out profile)
-        assert(p1.exists(p => p.contains("ObjectHashAggregate") &&
+      }
+
+      // OVER the broadcast gate phase-1 walks the doc-partitioned snapshot:
+      // still no postings in any captured plan, and the per-partition pool
+      // cuts merge through the bounded-heap aggregate (ObjectHashAggregate
+      // over graft_topk_by_score) — never a Window sorting the full
+      // candidate stream (the 73-81 GB/stage spill shape at the 10M-doc
+      // high-fan-out profile)
+      plans.clear()
+      // a 1-byte gate: this 8-doc context measures ~600 bytes
+      spark.conf.set(BatchSearcher.BroadcastContextMaxBytesKey, "1")
+      try {
+        val over = BatchSearcher.searchBatch(idx, 1, "colbert", queriesDf, k = 2, opts)
+          .collect().groupBy(_.getLong(0))
+          .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq).toMap
+        assert(over == batch, "over-gate batch diverged from the under-gate batch")
+        org.apache.spark.graftbridge.ListenerBusAccess.drain(spark.sparkContext)
+        val overPlans = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
+        val allO = overPlans.mkString("\n---\n")
+        assert(overPlans.nonEmpty, "no over-gate batch plan captured")
+        assert(overPlans.forall(p => !p.contains("postings")),
+          s"the over-gate batch must not scan postings:\n$allO")
+        assert(overPlans.exists(p => p.contains("ObjectHashAggregate") &&
           p.contains("graft_topk_by_score")),
-          s"phase-1 pool cut is not the bounded-heap aggregate:\n$allH")
-        assert(p1.forall(p => !p.contains("RunningWindowFunction") &&
-          !p.contains("Window [row_number")),
-          s"phase-1 pool cut fell back to a full window sort:\n$allH")
-      } finally spark.conf.unset(graft.query.BatchSearcher.InvertedWalkKey)
-
-      // the per-batch BHJ hatch (ctxBroadcastCache=false) keeps the r15
-      // shape: context joins phase-1 as a BuildRight broadcast, codes-only
-      plans.clear()
-      spark.conf.set(graft.query.BatchSearcher.CtxBroadcastCacheKey, "false")
-      try {
-        assert(BatchSearcher.searchBatch(idx, 1, "colbert", queriesDf, k = 2,
-          SearchOptions(kTopCentroids = 4, nProbe = 4, numSecondPass = 2))
-          .collect().nonEmpty)
-        val dl2 = System.nanoTime() + 10e9.toLong
-        var hatchThin = false
-        while (!hatchThin && System.nanoTime() < dl2) {
-          val snap = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
-          hatchThin = snap.exists(p => p.contains("postings") &&
-            p.contains("/context") && !p.contains("doc_residuals") &&
-            p.contains("BroadcastHashJoin") && p.contains("BuildRight"))
-          if (!hatchThin) Thread.sleep(50)
-        }
-        assert(hatchThin, "BHJ hatch phase-1 must join a codes-only context " +
-          "scan as a broadcast:\n" +
-          scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
-            .mkString("\n---\n"))
-      } finally spark.conf.unset(graft.query.BatchSearcher.CtxBroadcastCacheKey)
+          s"over-gate pool cut is not the bounded-heap aggregate:\n$allO")
+        assert(overPlans.filter(_.contains("graft_topk_by_score")).forall(p =>
+          !p.contains("RunningWindowFunction") && !p.contains("Window [row_number")),
+          s"over-gate pool cut fell back to a full window sort:\n$allO")
+      } finally spark.conf.unset(BatchSearcher.BroadcastContextMaxBytesKey)
     } finally spark.listenerManager.unregister(listener)
   }
 

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The phase-2 residual point store: the record-addressable multiget must
   * return exactly the rows the scan-shaped hydration returns, build once
   * per index state, pick up mutations (including foreign-state adoption
-  * after a simulated restart), and GC superseded state dirs. */
+  * after a simulated restart), GC superseded state dirs, and never lose a
+  * failed speculative build. */
 class PointStoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -81,12 +82,19 @@ class PointStoreSpec extends AnyFunSuite {
         .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq).toMap
 
     val inList = run() // default threshold: small pool stays an IN-list scan
+    // the independent reference: every query through the single-query path
+    Seq(5L, 17L, 31L).foreach { qid =>
+      val single = idx.search(1,
+          VectorQuery("colbert", corpus(qid).map(_.toArray).toArray), 5, opts)
+        .select("doc_id", "score").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(inList(qid).map(_._1) == single.map(_._1), s"doc ranking for query $qid")
+      inList(qid).zip(single).foreach { case ((_, a), (_, b)) =>
+        assert(math.abs(a - b) < 1e-6, s"score for query $qid")
+      }
+    }
     spark.conf.set(BatchSearcher.MaxDocIdInListKey, "0")
     try {
-      spark.conf.set(BatchSearcher.PointStoreKey, "false")
-      val semiJoin = try run() finally spark.conf.unset(BatchSearcher.PointStoreKey)
-      assert(semiJoin == inList, "semi-join scan diverged from IN-list scan")
-
       val builds0 = PointStore.buildsForTest.get()
       val viaStore = run()
       assert(viaStore == inList, "point-store multiget diverged from the scan")
@@ -130,6 +138,63 @@ class PointStoreSpec extends AnyFunSuite {
       assert(!gone.contains(17L),
         s"tombstoned doc 17 served from a stale point store: $gone")
     } finally spark.conf.unset(BatchSearcher.MaxDocIdInListKey)
+  }
+
+  test("a failed speculative store build surfaces: logged when the batch " +
+      "does not consume it, thrown when it does, thrown by warmBatchCaches") {
+    import spark.implicits._
+    val (idx, corpus, path) = buildIndex(30L, seed = 41)
+    // a regular file where the store's root directory must be created
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path, "_cache"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(path, "_cache", "points"),
+      Array[Byte](1))
+    val opts = SearchOptions(kTopCentroids = 3, nProbe = 6)
+    val queriesDf = Seq(2L, 9L, 20L).map(qid => (qid, corpus(qid)))
+      .toDF("query_id", "tokens")
+    def run(): Array[org.apache.spark.sql.Row] =
+      BatchSearcher.searchBatch(idx, 1, "colbert", queriesDf, k = 5, opts).collect()
+
+    val warned = new java.util.concurrent.CountDownLatch(1)
+    val warnedWith = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "speculative-build-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        if (e.getLevel == org.apache.logging.log4j.Level.WARN &&
+            e.getMessage.getFormattedMessage.contains("point-store build failed")) {
+          warnedWith.set(e.getThrown)
+          warned.countDown()
+        }
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager.getLogger("graft.BatchSearcher")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    logger.addAppender(appender)
+    try {
+      // unconsumed: the plan-time bound (3 queries x 1024) starts the
+      // build, but the <= 30-id pool stays under the IN-list threshold —
+      // the batch answers without waiting, and the failure is logged
+      spark.conf.set(BatchSearcher.MaxDocIdInListKey, "100")
+      try assert(run().nonEmpty, "the small batch must not fail on the build")
+      finally spark.conf.unset(BatchSearcher.MaxDocIdInListKey)
+      assert(warned.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the unconsumed store build's failure was never logged")
+      assert(warnedWith.get() != null, "the warning must carry the build's error")
+    } finally logger.removeAppender(appender)
+
+    // consumed: threshold 0 routes the pool through the store, so the
+    // batch itself fails with the build's error
+    spark.conf.set(BatchSearcher.MaxDocIdInListKey, "0")
+    val consumed =
+      try intercept[Exception](run())
+      finally spark.conf.unset(BatchSearcher.MaxDocIdInListKey)
+    assert(consumed.getClass == warnedWith.get().getClass,
+      s"consumed build error differs from the logged one: $consumed")
+
+    // warm: the overlapped store build's failure is the warm call's error
+    val warm = intercept[Exception](idx.warmBatchCaches(1, "colbert"))
+    assert(warm.getClass == warnedWith.get().getClass,
+      s"warmBatchCaches error differs from the store build's: $warm")
   }
 
   test("auto bucket count scales with rows and clamps") {

@@ -96,10 +96,6 @@ object ProfMain {
     // fallback crossing on clustered geometry) with GRAFT_CTX_BCAST_MAX=1
     sys.env.get("GRAFT_CTX_BCAST_MAX").foreach(v =>
       spark.conf.set("graft.batch.broadcastContextMaxBytes", v))
-    // phase-1 inverted-walk A/B (r18): GRAFT_INVERTED_WALK=false restores
-    // the postings-scan shape under identical conditions
-    sys.env.get("GRAFT_INVERTED_WALK").foreach(v =>
-      spark.conf.set(graft.query.BatchSearcher.InvertedWalkKey, v))
 
     what match {
       case "engine" => profEngine(spark, dir)
@@ -575,9 +571,8 @@ object ProfMain {
         println(s"[prof] kept rows: $plain")
 
       case "batch_scale" =>
-        // A/B of the phase-2 rerank shape (full-table re-join vs the
-        // driver-known bucket-grouped multiget) on ONE production-shaped
-        // index, built once at a FIXED path and reused by later
+        // batch212 timing, success@5 and single-search files touched on ONE
+        // production-shaped index, built once at a FIXED path and reused by later
         // invocations — the build (~6 min at 1M docs) would otherwise
         // swamp every measurement session. args: [nDocs] [K] [codec]
         // (codec in none|sq8|pq|binarizer; default none — the r11 campaign
@@ -653,28 +648,14 @@ object ProfMain {
         // codegen warm-up on a small batch before anything is measured
         BatchSearcher.searchBatch(idxB, 1, "colbert",
           queriesB.limit(8), k = 10, optsB).count()
-        Seq(true, false, true, false).zipWithIndex.foreach { case (mg, i) =>
-          spark.conf.set(BatchSearcher.RerankMultigetKey, mg.toString)
+        (0 until 4).foreach { i =>
           val t0 = System.nanoTime()
           val n = BatchSearcher.searchBatch(idxB, 1, "colbert", queriesB,
             k = 10, optsB).count()
           val ms = (System.nanoTime() - t0) / 1e6
-          println(f"[prof] batch 212 #$i multiget=$mg%5s ${ms / 1000}%7.2f s " +
+          println(f"[prof] batch 212 #$i ${ms / 1000}%7.2f s " +
             f"total ${ms / 212}%7.1f ms/query  $n rows")
         }
-        spark.conf.unset(BatchSearcher.RerankMultigetKey)
-        // phase-1 join-shape A/B: broadcast candidates into the context
-        // scan (default) vs the shuffle-join fallback
-        Seq(true, false, true, false).zipWithIndex.foreach { case (bc, i) =>
-          spark.conf.set(BatchSearcher.BroadcastCandidatesKey, bc.toString)
-          val t0 = System.nanoTime()
-          val n = BatchSearcher.searchBatch(idxB, 1, "colbert", queriesB,
-            k = 10, optsB).count()
-          val ms = (System.nanoTime() - t0) / 1e6
-          println(f"[prof] batch 212 #$i bcastCands=$bc%5s ${ms / 1000}%7.2f s " +
-            f"total ${ms / 212}%7.1f ms/query  $n rows")
-        }
-        spark.conf.unset(BatchSearcher.BroadcastCandidatesKey)
         // quality at shape (VERDICT r12 stretch #7): query i IS doc i's
         // token set, so "doc i in the top-5" is the natural qrel — the
         // first success@5 number at the 10M scale, per codec
@@ -740,12 +721,10 @@ object ProfMain {
       case "batch_gate_cross" =>
         // r19: the gate-crossing A/B for the over-gate DISTRIBUTED inverted
         // walk — the same 212-query batch measured (a) under the broadcast
-        // gate (broadcast-snapshot walk), (b) past a FORCED gate with the
-        // doc-partitioned distributed walk (default), (c) past the gate
-        // with the walk hatched off (the r17 scan -> distinct -> semi-join
-        // -> pair-join shape). Rows are asserted identical across arms.
-        // Reuses the batch_scale index path/builder. args: [nDocs] [K]
-        // [codec] [iters] [geom] [tpd]
+        // gate (broadcast-snapshot walk), (b) past a FORCED gate
+        // (doc-partitioned distributed walk). Rows are asserted identical
+        // across arms. Reuses the batch_scale index path/builder.
+        // args: [nDocs] [K] [codec] [iters] [geom] [tpd]
         import graft.core._
         import graft.query._
         import spark.implicits._
@@ -826,15 +805,10 @@ object ProfMain {
         // force the over-gate regime well below the measured bytes
         spark.conf.set(BatchSearcher.BroadcastContextMaxBytesKey, "1024")
         val distWalk = arm("over-gate distributed walk")
-        spark.conf.set(BatchSearcher.DistributedWalkKey, "false")
-        val scanShape = arm("over-gate scan shape (r17)")
-        spark.conf.unset(BatchSearcher.DistributedWalkKey)
         spark.conf.unset(BatchSearcher.BroadcastContextMaxBytesKey)
         require(distWalk == underGate,
           "over-gate distributed walk rows diverged from the under-gate walk")
-        require(scanShape == underGate,
-          "over-gate scan-shape rows diverged from the under-gate walk")
-        println("[prof] gate_cross: all three arms returned identical rows")
+        println("[prof] gate_cross: both arms returned identical rows")
 
       case "batch_width" =>
         // r13 verdict item 1: pair the nq=4 and nq=32 serving floors on
@@ -1101,7 +1075,7 @@ object ProfMain {
         // this pipeline overhead, not per-candidate compute. Runs repeated
         // 212-query batches with graft.batch.profile=true and prints, per
         // batch: the named in-call segments (queries collect, driver probe
-        // selection, ctx byte gate, fanout count, phase-1 pool action), the
+        // selection, ctx byte gate, snapshot resolve, phase-1 pool action), the
         // searchBatch call wall, the final-action wall (phase-2 multiget +
         // rerank + top-k window) and the unattributed remainder. Batch 1
         // vs 2+ separates one-time costs (ctx size scan, codegen) from the
@@ -1141,21 +1115,13 @@ object ProfMain {
         // collect + CSR build + broadcast the first batch after open/mutation
         // would otherwise absorb in-band (prior rounds' breakdowns showed
         // 0.000 s here because the codegen warmup batch had already built it)
-        // r18: warmBatchCaches now also builds the phase-2 point store —
-        // time the two one-time builds separately (conf-gating the store
-        // off for the first call isolates the snapshot build)
-        spark.conf.set(BatchSearcher.PointStoreKey, "false")
+        // r18: warmBatchCaches also builds the phase-2 point store,
+        // overlapped with the snapshot build — the row is their max
         val tWarm0 = System.nanoTime()
         idxB.warmBatchCaches(1, "colbert")
-        println(f"[prof]   ctx_snapshot_cold_build ${(System.nanoTime() - tWarm0) / 1e9}%8.3f s" +
-          "  (one-time per index state; warmBatchCaches at open hides it)")
-        spark.conf.unset(BatchSearcher.PointStoreKey)
-        if (spark.conf.get(BatchSearcher.PointStoreKey, "true").toBoolean) {
-          val tPs0 = System.nanoTime()
-          idxB.pointStore(1, "colbert")
-          println(f"[prof]   pointstore_cold_build  ${(System.nanoTime() - tPs0) / 1e9}%8.3f s" +
-            "  (one-time per index state; adopt-from-disk on reopen)")
-        }
+        println(f"[prof]   cold_warm_build        ${(System.nanoTime() - tWarm0) / 1e9}%8.3f s" +
+          "  (snapshot + point store; one-time per index state, " +
+          "warmBatchCaches at open hides it)")
         // codegen warmup on a small batch BEFORE any timed rep
         BatchSearcher.searchBatch(idxB, 1, "colbert", queriesB.limit(8), 10,
           SearchOptions(kTopCentroids = 2, nProbe = 8, numSecondPass = nspB)).count()
@@ -2400,21 +2366,6 @@ object ProfMain {
     // warmup pass so the first measured batch isn't paying codegen
     BatchSearcher.searchBatch(idx, 1, "colbert", batch(32), k = 3,
       SearchOptions(kTopCentroids = 4, nProbe = 8)).count()
-    // rerank-input A/B (VERDICT r7 #6): re-join context after the window
-    // cut (carry=false, two scans, light shuffle) vs carrying residuals
-    // through it (carry=true, one scan, heavy shuffle) — interleaved twice
-    // to average drift; results must be identical
-    Seq(false, true, false, true).zipWithIndex.foreach { case (carry, i) =>
-      spark.conf.set(BatchSearcher.CarryResidualsKey, carry.toString)
-      val q = batch(212)
-      val t0 = System.nanoTime()
-      val rows = BatchSearcher.searchBatch(idx, 1, "colbert", q, k = 3,
-        SearchOptions(kTopCentroids = 4, nProbe = 8)).count()
-      val ms = (System.nanoTime() - t0) / 1e6
-      println(f"[prof] rerank A/B #$i carry=$carry%5s  ${ms / 212}%6.2f ms/query  " +
-        f"${ms / 1000}%6.2f s total  $rows%6d rows")
-    }
-    spark.conf.unset(BatchSearcher.CarryResidualsKey)
     Seq(212, 512, 1024).foreach { size =>
       val q = batch(size)
       val t0 = System.nanoTime()
