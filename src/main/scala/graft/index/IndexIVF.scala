@@ -72,21 +72,16 @@ final class IndexIVF private (
     * tombstones up to it applied; every mutator refuses. None = writable. */
   private[index] var snapshotEpoch: Option[Long] = None
 
-  /** Per-(field, probes) cache for the harness-only two-level assignment
-    * plan ([[addWithApproxAssignForHarness]]) — valid while the field's
-    * CoarseQuantizer INSTANCE is unchanged (train() installs a fresh
-    * instance, which misses the identity check and rebuilds). Keeps
-    * trickle ingest (foreachBatch -> add per micro-batch) from paying the
-    * O(K·sqrt(K)·dim) driver-side plan build on every call. The cached
-    * value is the BROADCAST of the plan, not the plan: one Broadcast per
-    * (field, probes, model instance) for the handle's lifetime, so trickle
-    * ingest doesn't accumulate one undestroyed ~K·dim-float broadcast per
-    * micro-batch on the driver. A stale entry's broadcast (fresh quantizer
-    * after re-train) is destroyed when it is replaced. */
-  @transient private lazy val addPlanCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int),
-      (CoarseQuantizer,
-        org.apache.spark.broadcast.Broadcast[CoarseQuantizer.TwoLevelPlan])]()
+  /** Per-(field, probes) broadcast of the harness-only two-level assignment
+    * plan ([[addWithApproxAssignForHarness]]), stamped with the field's
+    * CoarseQuantizer INSTANCE: train() installs a fresh instance, which
+    * rebuilds. Keeps trickle ingest (foreachBatch -> add per micro-batch)
+    * from paying the O(K·sqrt(K)·dim) driver-side plan build, or leaving
+    * one undestroyed ~K·dim-float broadcast behind, on every call. A
+    * superseded plan's broadcast is destroyed. */
+  @transient private lazy val addPlans = new DerivedCache[(String, Int),
+    CoarseQuantizer, org.apache.spark.broadcast.Broadcast[CoarseQuantizer.TwoLevelPlan]](
+    DerivedCache.Unbounded, _.destroy())
 
   /** The snapshot ceiling of this handle, if it is one. */
   def snapshot: Option[Long] = snapshotEpoch
@@ -95,23 +90,24 @@ final class IndexIVF private (
     s"index handle is a read-only snapshot at epoch ${snapshotEpoch.getOrElse(0L)}; " +
       "IndexIVF.open() a writable handle instead")
 
+  /** Per-field centroid broadcasts, stamped with the CoarseQuantizer
+    * instance (see [[centroidBroadcast]]). */
+  @transient private lazy val centroidBroadcasts = new DerivedCache[String,
+    CoarseQuantizer, org.apache.spark.broadcast.Broadcast[Array[Float]]](
+    DerivedCache.Unbounded, _ => ())
+
   /** Row-major (numCentroids x dim) centroid matrix as a REAL Spark
     * broadcast, built lazily and cached per field for the lifetime of this
-    * handle (keyed by CoarseQuantizer identity, so a retrain that swaps
-    * [[coarse]] transparently rebuilds). Shipped to each executor ONCE and
-    * reused by every query and batch — the scoring expressions read it via
-    * the broadcast handle instead of a K-proportional plan constant, which
-    * at K=49152 cost a 159 MiB task binary deserialized per task (measured
-    * 4.1 s/query at the 10M-doc batch shape before this). */
-  @transient private lazy val centroidBcastCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (CoarseQuantizer, org.apache.spark.broadcast.Broadcast[Array[Float]])]()
+    * handle (stamped with the CoarseQuantizer instance, so a retrain that
+    * swaps [[coarse]] transparently rebuilds). Shipped to each executor ONCE
+    * and reused by every query and batch — the scoring expressions read it
+    * via the broadcast handle instead of a K-proportional plan constant,
+    * which at K=49152 cost a 159 MiB task binary deserialized per task
+    * (measured 4.1 s/query at the 10M-doc batch shape before this). */
   def centroidBroadcast(field: String): org.apache.spark.broadcast.Broadcast[Array[Float]] = {
     val cq = coarse.getOrElse(field,
       throw new IllegalStateException(s"field $field is not trained"))
-    val cached = centroidBcastCache.get(field)
-    if (cached != null && (cached._1 eq cq)) cached._2
-    else {
+    centroidBroadcasts.get(field, cq) {
       val d = cq.dim
       val flat = new Array[Float](cq.numCentroids * d)
       var c = 0
@@ -119,133 +115,80 @@ final class IndexIVF private (
         System.arraycopy(cq.centroids(c), 0, flat, c * d, d)
         c += 1
       }
-      val b = spark.sparkContext.broadcast(flat)
-      centroidBcastCache.put(field, (cq, b))
-      b
+      spark.sparkContext.broadcast(flat)
     }
   }
+
+  /** Key of this handle's slot in the JVM-global derived-state caches of
+    * the companion: the QUALIFIED path (like [[IndexIVF.writeLocks]]), so
+    * sibling handles on one path share one artifact and one build, and the
+    * snapshot epoch, so an [[IndexIVF.openAt]] handle gets its own slot. */
+  private def derivedKey(tenant: Long, field: String): IndexIVF.DerivedKey =
+    (lockKey, tenant, mapper.id(field), snapshotEpoch)
+
+  /** Freshness stamp of derived state over `rows` visible rows (the
+    * [[DerivedCache]] contract). On a live handle it is (mutation tick,
+    * persisted epoch, rows): the tick covers a write-lock section on ANY
+    * in-process handle for this path; the one metadata read of
+    * `_meta/epoch.json` covers a mutation committed by a FOREIGN PROCESS,
+    * even one that keeps the row count (removeDeferred + add both advance
+    * the epoch). The residual cross-process hole is a foreign physical
+    * rewrite that changes neither rows nor epoch (compactFiles —
+    * content-identical by contract, so serving the cached state is correct);
+    * concurrent external writers during serving are outside the engine's
+    * single-writer contract. An [[IndexIVF.openAt]] handle's visible set is immutable, so its stamp
+    * is a constant plus rows. Read it BEFORE the build it guards. */
+  private def stamp(rows: Long): IndexIVF.Stamp =
+    if (snapshotEpoch.isEmpty) (mutationTick.get(), currentEpoch(), rows)
+    else (-1L, -1L, rows)
 
   /** JVM-global cached broadcast of the deduped (doc_id -> codes) context
     * snapshot one batch search scores against ([[graft.functions.CtxCodes]]).
     * The BHJ shape this replaces rebuilt the relation EVERY batch — a full
     * context scan + dedup shuffle + an 839 MiB driver collect at the
     * 10M-doc shape, the dominant term of the fixed per-batch serving cost
-    * (COVERAGE.md round 16 breakdown). Built once per index state and
-    * shipped to executors once; steady-state batches pay a map lookup.
-    *
-    * The cache lives in [[IndexIVF.ctxCodesSnapshots]], keyed by the
-    * QUALIFIED path (like [[IndexIVF.writeLocks]]/[[IndexIVF.mutationTicks]])
-    * rather than per handle: two sibling handles on one path share ONE
-    * snapshot and ONE build lock, instead of concurrently running the gated
-    * hundreds-of-MiB collect and holding duplicate executor-resident
-    * broadcasts for the same (tenant, field) (r17 ADVICE). A read-only
-    * [[IndexIVF.openAt]] snapshot handle gets its own slot per snapshot
-    * epoch — its visible set is immutable by construction, so the slot
-    * never invalidates and never collides with the live handle's.
-    *
-    * Freshness contract for the live slot — invalidated by: (a) any
-    * write-lock section on ANY in-process handle for this path
-    * ([[mutationTick]] is JVM-global per qualified path); (b) a change in
-    * the VISIBLE row count the caller already computed for its byte gate;
-    * (c) an advance of the PERSISTED `_meta/epoch.json` counter, read once
-    * per call (one tiny metadata read) — so a mutation committed by a
-    * FOREIGN PROCESS invalidates on the next batch even when the row count
-    * happens to match (same-count update: removeDeferred + add both
-    * advance the persisted epoch). The residual cross-process hole is a
-    * foreign physical rewrite that changes neither rows nor epoch
-    * (compactFiles — content-identical by contract, so serving the cached
-    * snapshot is correct). Concurrent external writers during serving
-    * remain outside the engine's single-writer contract. */
+    * (COVERAGE.md round 16 breakdown). Built once per index state
+    * ([[stamp]] of the caller's visible row count) and shipped to executors
+    * once; steady-state batches pay a map lookup. */
   def contextCodesBroadcast(tenant: Long, field: String, visibleRows: Long,
       measuredBytes: Long, maxBytes: Long)
-      : org.apache.spark.broadcast.Broadcast[graft.functions.CtxCodes] = {
-    val fid = mapper.id(field)
-    val key = (lockKey, tenant, fid, snapshotEpoch)
-    val live = snapshotEpoch.isEmpty
-    // one metadata read per call: the cross-process invalidation probe
-    // (snapshot handles skip it — their visible set cannot change)
-    val persistedEpoch = if (live) currentEpoch() else -1L
-    def freshHit(): org.apache.spark.broadcast.Broadcast[graft.functions.CtxCodes] = {
-      val cached = IndexIVF.ctxCodesSnapshots.get(key)
-      if (cached != null && cached.rows == visibleRows &&
-        (!live || (cached.tick == mutationTick.get() &&
-          cached.epoch == persistedEpoch))) cached.bcast
-      else null
-    }
-    val hit = freshHit()
-    if (hit != null) hit
-    else IndexIVF.ctxCodesBuildLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      val won = freshHit() // another thread may have built while we waited
-      if (won != null) won
-      else {
-        require(measuredBytes <= maxBytes,
-          s"context relation for ($tenant, $field) measures $measuredBytes B " +
-            s"> broadcast budget $maxBytes B — callers must gate before asking " +
-            "for the broadcast snapshot")
-        // read the tick BEFORE the collect: a mutation landing mid-build
-        // makes the entry stale-on-arrival and the next call rebuilds
-        val tick = mutationTick.get()
-        val thin = contextDf
-          .filter(col("tenant") === tenant && col("field") === fid)
-          .select(col("doc_id"), col("doc_codes"))
-        // bounded: measuredBytes <= maxBytes required just above — the same
-        // byte budget the old per-batch BroadcastExchange collect ran under
-        val rows = thin.collect().map { r =>
-          r.getLong(0) -> r.getSeq[Long](1).toArray
-        }
-        val snap = graft.functions.CtxCodes.build(rows)
-        val b = spark.sparkContext.broadcast(snap)
-        val stale = IndexIVF.ctxCodesSnapshots.put(key,
-          IndexIVF.CtxSnapshotEntry(tick, visibleRows, persistedEpoch, b))
-        // unpersist (not destroy) the replaced slot's broadcast: an
-        // in-flight batch may still hold it — executor blocks are released
-        // now, the driver copy stays readable until ContextCleaner collects
-        if (stale != null)
-          try { stale.bcast.unpersist(); () } catch { case _: Exception => () }
-        b
+      : org.apache.spark.broadcast.Broadcast[graft.functions.CtxCodes] =
+    IndexIVF.ctxCodesBroadcasts.get(derivedKey(tenant, field), stamp(visibleRows)) {
+      require(measuredBytes <= maxBytes,
+        s"context relation for ($tenant, $field) measures $measuredBytes B " +
+          s"> broadcast budget $maxBytes B — callers must gate before asking " +
+          "for the broadcast snapshot")
+      val thin = contextDf
+        .filter(col("tenant") === tenant && col("field") === mapper.id(field))
+        .select(col("doc_id"), col("doc_codes"))
+      // bounded: measuredBytes <= maxBytes required just above — the same
+      // byte budget the old per-batch BroadcastExchange collect ran under
+      val rows = thin.collect().map { r =>
+        r.getLong(0) -> r.getSeq[Long](1).toArray
       }
+      spark.sparkContext.broadcast(graft.functions.CtxCodes.build(rows))
     }
-  }
 
   /** Per-batch gate stats (visible rows, measured relation bytes) for
-    * (tenant, field), cached under the same freshness discipline as
-    * [[contextCodesBroadcast]] (JVM-global by qualified path; in-process
-    * mutation tick + persisted-epoch probe for foreign writers; snapshot
-    * handles cache forever — their visible set is immutable). The stats
-    * only change when the visible set does, yet the batch path re-ran the
-    * footer count + byte measure on EVERY call — 0.27 s/batch, ~15 % of
-    * the steady 10M batch after the r18 inverted walk. `compute` runs the
-    * real jobs on miss ([[graft.query.BatchSearcher.contextRelationStats]]
-    * owns the byte pricing). */
+    * (tenant, field), cached JVM-wide under the tick + persisted-epoch
+    * [[stamp]] (rows are what `compute` measures, so they are not part of
+    * it; snapshot handles cache forever). The stats only change when the
+    * visible set does, yet the batch path re-ran the footer count + byte
+    * measure on EVERY call — 0.27 s/batch, ~15 % of the steady 10M batch
+    * after the r18 inverted walk. `compute` runs the real job on miss
+    * ([[graft.query.BatchSearcher.contextRelationStats]] owns the byte
+    * pricing). */
   private[graft] def cachedContextStats(tenant: Long, field: String)(
-      compute: => (Long, Long)): (Long, Long) = {
-    val fid = mapper.id(field)
-    val key = (lockKey, tenant, fid, snapshotEpoch)
-    val live = snapshotEpoch.isEmpty
-    val persistedEpoch = if (live) currentEpoch() else -1L
-    val cached = IndexIVF.ctxStatsCache.get(key)
-    if (cached != null && (!live || (cached.tick == mutationTick.get() &&
-        cached.epoch == persistedEpoch))) (cached.rows, cached.bytes)
-    else {
-      // tick read BEFORE the jobs, like the snapshot build: a mutation
-      // landing mid-measure makes the entry stale-on-arrival
-      val tick = mutationTick.get()
-      val (rows, bytes) = compute
-      IndexIVF.ctxStatsCache.put(key,
-        IndexIVF.CtxStatsEntry(tick, persistedEpoch, rows, bytes))
-      (rows, bytes)
-    }
-  }
+      compute: => (Long, Long)): (Long, Long) =
+    IndexIVF.ctxStats.get(derivedKey(tenant, field), stamp(0L))(compute)
 
   /** Resolve (building if needed) the [[PointStore]] for this handle's
     * visible (tenant, field) context — the record-addressable residual
     * layout batch phase-2 hydration multigets against once the pool
-    * outgrows scan pruning. Same freshness contract, cache scope (JVM-
-    * global by qualified path + handle snapshot epoch) and build-lock
-    * discipline as [[contextCodesBroadcast]]; additionally the state tag
-    * encodes (visible rows, persisted epoch), so a RESTARTED process
-    * adopts a matching on-disk store instead of rebuilding. Returns the
-    * store directory and its bucket count.
+    * outgrows scan pruning. Cached JVM-wide under [[stamp]]; additionally
+    * the store's state tag encodes (visible rows, persisted epoch), so a
+    * RESTARTED process adopts a matching on-disk store instead of
+    * rebuilding. Returns the store directory and its bucket count.
     *
     * `visibleRowsHint`: the caller's already-computed visible row count
     * (the batch byte-gate stats), so the steady-state resolve is one
@@ -253,39 +196,18 @@ final class IndexIVF private (
   def pointStore(tenant: Long, field: String,
       visibleRowsHint: Option[Long] = None): (String, Int) = {
     val fid = mapper.id(field)
-    val key = (lockKey, tenant, fid, snapshotEpoch)
-    val live = snapshotEpoch.isEmpty
-    val persistedEpoch = if (live) currentEpoch() else -1L
     def thin = contextDf
       .filter(col("tenant") === tenant && col("field") === fid)
       .select(col("doc_id"), col("doc_residuals"))
-    lazy val visibleRows = visibleRowsHint.getOrElse(thin.count())
-    def freshHit(): (String, Int) = {
-      val c = IndexIVF.pointStoreDirs.get(key)
-      if (c != null && c.rows == visibleRows &&
-        (!live || (c.tick == mutationTick.get() &&
-          c.epoch == persistedEpoch))) (c.dir, c.buckets)
-      else null
+    val st @ (_, epoch, rows) = stamp(visibleRowsHint.getOrElse(thin.count()))
+    IndexIVF.pointStores.get(derivedKey(tenant, field), st) {
+      val root = p(s"_cache/points/t${tenant}_f$fid")
+      val tag = snapshotEpoch
+        .map(e => s"snap${e}_r$rows")
+        .getOrElse(s"r${rows}_e$epoch")
+      val (dir, meta) = PointStore.build(spark, thin, root, tag)
+      (dir, meta.buckets)
     }
-    val hit = freshHit()
-    if (hit != null) hit
-    else IndexIVF.pointStoreBuildLocks.computeIfAbsent(key, _ => new Object)
-      .synchronized {
-        val won = freshHit()
-        if (won != null) won
-        else {
-          val tick = mutationTick.get()
-          val root = p(s"_cache/points/t${tenant}_f$fid")
-          val tag = snapshotEpoch
-            .map(e => s"snap${e}_r$visibleRows")
-            .getOrElse(s"r${visibleRows}_e$persistedEpoch")
-          val (dir, meta) = PointStore.build(spark, thin, root, tag)
-          IndexIVF.pointStoreDirs.put(key,
-            IndexIVF.PointStoreEntry(tick, visibleRows, persistedEpoch,
-              dir, meta.buckets))
-          (dir, meta.buckets)
-        }
-      }
   }
 
   /** The DOC-PARTITIONED context snapshot: one deduped
@@ -298,73 +220,43 @@ final class IndexIVF private (
     * [[graft.functions.CtxCodes.build]] reproduces the arbitrary-winner
     * contract of the dropDuplicates it replaces), and the per-partition
     * `inverted` CSR view materializes lazily on first walk and stays with
-    * the cached partition object. Built ONCE per index state: the one
-    * corpus-sized shuffle here is all the over-gate phase-1 walk
+    * the cached partition object. Built ONCE per index state ([[stamp]]):
+    * the one corpus-sized shuffle here is all the over-gate phase-1 walk
     * ([[graft.query.BatchSearcher]]) ever reads; steady-state batches scan
     * no table.
     *
-    * Same JVM-global cache scope, freshness contract (mutation tick +
-    * visible rows + persisted-epoch probe; openAt snapshot handles cache
-    * forever) and build-lock discipline as [[contextCodesBroadcast]] —
-    * see [[IndexIVF.ctxPartSnapshots]]. Partition count derives from the
-    * MEASURED relation bytes over `bytesPerPart` (floored at the cluster's
-    * default parallelism) — scale-adaptive, never a local-mode constant.
-    * MEMORY_AND_DISK: a partition evicted under memory pressure re-reads
-    * from local disk (or recomputes from lineage), never fails the batch. */
+    * Partition count derives from the MEASURED relation bytes over
+    * `bytesPerPart` (floored at the cluster's default parallelism) —
+    * scale-adaptive, never a local-mode constant. MEMORY_AND_DISK: a
+    * partition evicted under memory pressure re-reads from local disk (or
+    * recomputes from lineage), never fails the batch. */
   def contextCodesPartitioned(tenant: Long, field: String, visibleRows: Long,
       measuredBytes: Long, bytesPerPart: Long)
-      : org.apache.spark.rdd.RDD[graft.functions.CtxCodes] = {
-    val fid = mapper.id(field)
-    val key = (lockKey, tenant, fid, snapshotEpoch)
-    val live = snapshotEpoch.isEmpty
-    val persistedEpoch = if (live) currentEpoch() else -1L
-    def freshHit(): org.apache.spark.rdd.RDD[graft.functions.CtxCodes] = {
-      val c = IndexIVF.ctxPartSnapshots.get(key)
-      if (c != null && c.rows == visibleRows &&
-        (!live || (c.tick == mutationTick.get() &&
-          c.epoch == persistedEpoch))) c.rdd
-      else null
-    }
-    val hit = freshHit()
-    if (hit != null) hit
-    else IndexIVF.ctxPartBuildLocks.computeIfAbsent(key, _ => new Object)
-      .synchronized {
-        val won = freshHit()
-        if (won != null) won
-        else {
-          // tick read BEFORE the build: a mutation landing mid-build makes
-          // the entry stale-on-arrival and the next batch rebuilds
-          val tick = mutationTick.get()
-          val thin = contextDf
-            .filter(col("tenant") === tenant && col("field") === fid)
-            .select(col("doc_id"), col("doc_codes"))
-          val parts = math.max(spark.sparkContext.defaultParallelism.toLong,
-            (measuredBytes + math.max(1L, bytesPerPart) - 1)
-              / math.max(1L, bytesPerPart))
-          require(parts <= Int.MaxValue,
-            s"context partition count overflow: $parts")
-          val rdd = thin.repartition(parts.toInt, col("doc_id")).rdd
-            .mapPartitions { it =>
-              val rows = it.map(r =>
-                r.getLong(0) -> r.getSeq[Long](1).toArray).toArray
-              Iterator.single(graft.functions.CtxCodes.build(rows))
-            }
-            .setName(s"graft ctx-codes partitioned t${tenant} f$fid")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // materialize eagerly: the one-time build cost lands HERE (and in
-          // warmBatchCaches when pre-warmed), not silently inside the first
-          // batch's phase-1 stage
-          rdd.count()
-          val stale = IndexIVF.ctxPartSnapshots.put(key,
-            IndexIVF.CtxPartSnapshotEntry(tick, visibleRows, persistedEpoch,
-              rdd))
-          if (stale != null)
-            try { stale.rdd.unpersist(blocking = false); () }
-            catch { case _: Exception => () }
-          rdd
+      : org.apache.spark.rdd.RDD[graft.functions.CtxCodes] =
+    IndexIVF.ctxCodesPartitions.get(derivedKey(tenant, field), stamp(visibleRows)) {
+      val fid = mapper.id(field)
+      val thin = contextDf
+        .filter(col("tenant") === tenant && col("field") === fid)
+        .select(col("doc_id"), col("doc_codes"))
+      val parts = math.max(spark.sparkContext.defaultParallelism.toLong,
+        (measuredBytes + math.max(1L, bytesPerPart) - 1)
+          / math.max(1L, bytesPerPart))
+      require(parts <= Int.MaxValue,
+        s"context partition count overflow: $parts")
+      val rdd = thin.repartition(parts.toInt, col("doc_id")).rdd
+        .mapPartitions { it =>
+          val rows = it.map(r =>
+            r.getLong(0) -> r.getSeq[Long](1).toArray).toArray
+          Iterator.single(graft.functions.CtxCodes.build(rows))
         }
-      }
-  }
+        .setName(s"graft ctx-codes partitioned t${tenant} f$fid")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // materialize eagerly: the one-time build cost lands HERE (and in
+      // warmBatchCaches when pre-warmed), not silently inside the first
+      // batch's phase-1 stage
+      rdd.count()
+      rdd
+    }
 
   /** Warm the batch-serving caches for (tenant, field) so the first
     * searchBatch doesn't pay the one-time snapshot build in-band — see
@@ -403,9 +295,8 @@ final class IndexIVF private (
   /** Bumped by every write-lock section on ANY in-process handle for this
     * path: the tick lives beside the JVM-global [[IndexIVF.writeLocks]]
     * entry (keyed by [[lockKey]]), so a mutation performed through a
-    * sibling handle in the same JVM invalidates this handle's snapshot
-    * cache too — the staleness bound is cross-PROCESS only, matching the
-    * [[contextCodesBroadcast]] doc. Conservative — read-only recovery
+    * sibling handle in the same JVM invalidates this handle's derived
+    * state too (see [[stamp]]). Conservative — read-only recovery
     * calls bump it too, which only costs a rebuild. */
   @transient private lazy val mutationTick =
     IndexIVF.mutationTicks.computeIfAbsent(lockKey,
@@ -1034,23 +925,10 @@ final class IndexIVF private (
         if (assignProbes <= 0) None
         else {
           val cq0 = coarse(f.name)
-          val key = (f.name, assignProbes)
-          val cached = addPlanCache.get(key)
-          val bcast =
-            if (cached != null && (cached._1 eq cq0)) cached._2
-            else {
-              val built = CoarseQuantizer.TwoLevelPlan
-                .buildIp(cq0.centroids, assignProbes, seed = 42L)
-              val b = spark.sparkContext.broadcast(built)
-              addPlanCache.put(key, (cq0, b))
-              // the replaced entry's broadcast (pre-re-train model) can no
-              // longer be handed out — release its blocks now instead of
-              // waiting on driver GC + ContextCleaner
-              if (cached != null)
-                try cached._2.destroy() catch { case _: Exception => () }
-              b
-            }
-          Some(bcast)
+          Some(addPlans.get((f.name, assignProbes), cq0) {
+            spark.sparkContext.broadcast(CoarseQuantizer.TwoLevelPlan
+              .buildIp(cq0.centroids, assignProbes, seed = 42L))
+          })
         }
 
       if (f.needsContext) {
@@ -2002,124 +1880,60 @@ object IndexIVF {
 
   /** JVM-global mutation ticks, keyed like [[writeLocks]] by the
     * filesystem-qualified path: the invalidation signal for handle-cached
-    * derived state (the context-codes snapshot) must be as global as the
+    * derived state (see the instance `stamp`) must be as global as the
     * write lock itself, or a mutation performed through a SIBLING handle on
     * the same path in the same JVM would leave this handle's snapshot
     * serving stale codes (wrong scores) until a row-count change. */
   private val mutationTicks = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.atomic.AtomicLong]()
 
-  private[index] final case class CtxSnapshotEntry(tick: Long, rows: Long,
-      epoch: Long,
-      bcast: org.apache.spark.broadcast.Broadcast[graft.functions.CtxCodes])
+  /** JVM-global derived-state caches ([[DerivedCache]]), keyed by
+    * (qualified path, tenant, field id, handle snapshot epoch — None on live
+    * handles) and stamped with the handle's tick / persisted epoch / visible
+    * rows (see the instance `derivedKey` and `stamp`). */
+  private[index] type DerivedKey = (String, Long, Int, Option[Long])
+  private[index] type Stamp = (Long, Long, Long)
 
-  /** JVM-global CtxCodes snapshot cache, keyed like [[writeLocks]] by the
-    * filesystem-qualified path (+ tenant, field id, and the handle's
-    * snapshot epoch — None for live handles): sibling handles on one path
-    * share one executor-resident snapshot instead of holding duplicates
-    * (r17 ADVICE). Access-order LRU capped at [[CtxSnapshotSlots]] entries:
-    * each entry pins an up-to-broadcast-gate-sized block on every executor,
-    * so an unbounded global map would leak serving memory one openAt-epoch
-    * slot at a time on a session that batch-searches many historical
-    * snapshots. Eviction and replacement unpersist (not destroy) the old
-    * broadcast: an in-flight batch may still hold it — executor blocks are
-    * released now, the driver copy stays readable until ContextCleaner
-    * collects it. All mutation goes through the synchronized wrapper; the
-    * per-key [[ctxCodesBuildLocks]] additionally serialize the expensive
-    * builds so two cache-missing batches never both run the gated collect. */
-  private[index] val CtxSnapshotSlots = 16
-  private[index] val ctxCodesSnapshots: java.util.Map[
-      (String, Long, Int, Option[Long]), CtxSnapshotEntry] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Int, Option[Long]),
-          CtxSnapshotEntry](CtxSnapshotSlots * 2, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Int, Option[Long]),
-              CtxSnapshotEntry]): Boolean = {
-          val evict = size() > CtxSnapshotSlots
-          if (evict)
-            try { e.getValue.bcast.unpersist(); () }
-            catch { case _: Exception => () }
-          evict
-        }
-      })
+  /** CtxCodes broadcast snapshots. Each pins an up-to-broadcast-gate-sized
+    * block on every executor, so 16 LRU slots bound what a session that
+    * batch-searches many openAt epochs can hold. Released with `unpersist`,
+    * not `destroy`: an in-flight batch may still hold the broadcast —
+    * executor blocks are released now, the driver copy stays readable
+    * until ContextCleaner collects it. */
+  private[index] val ctxCodesBroadcasts = new DerivedCache[DerivedKey, Stamp,
+    org.apache.spark.broadcast.Broadcast[graft.functions.CtxCodes]](16,
+    _.unpersist())
 
-  /** Per-key build locks for `contextCodesBroadcast` — see
-    * [[ctxCodesSnapshots]]. */
-  private[index] val ctxCodesBuildLocks =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Long, Int, Option[Long]), Object]()
+  /** Per-batch gate stats: two longs per entry, no eviction needed. */
+  private[index] val ctxStats = new DerivedCache[DerivedKey, Stamp,
+    (Long, Long)](DerivedCache.Unbounded, _ => ())
 
-  private[index] final case class CtxStatsEntry(tick: Long, epoch: Long,
-      rows: Long, bytes: Long)
+  /** Resolved point-store (directory, buckets). The heavy state lives on
+    * disk and is GC'd by the next [[PointStore.build]] of the same root, so
+    * nothing is released here and no eviction is needed. */
+  private[index] val pointStores = new DerivedCache[DerivedKey, Stamp,
+    (String, Int)](DerivedCache.Unbounded, _ => ())
 
-  /** JVM-global per-batch gate stats, keyed and validated exactly like
-    * [[ctxCodesSnapshots]] — see [[IndexIVF.cachedContextStats]]. Entries
-    * are four longs; no LRU needed. */
-  private[index] val ctxStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Long, Int, Option[Long]), CtxStatsEntry]()
-
-  private[index] final case class PointStoreEntry(tick: Long, rows: Long,
-      epoch: Long, dir: String, buckets: Int)
-
-  /** JVM-global resolved point-store directories, keyed and validated
-    * exactly like [[ctxCodesSnapshots]] (qualified path + tenant + field +
-    * handle snapshot epoch; tick/rows/persisted-epoch freshness). Entries
-    * are just strings — the heavy state lives on disk, GC'd by the next
-    * build — so no LRU is needed. */
-  private[index] val pointStoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Long, Int, Option[Long]), PointStoreEntry]()
-
-  private[index] val pointStoreBuildLocks =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Long, Int, Option[Long]), Object]()
-
-  private[index] final case class CtxPartSnapshotEntry(tick: Long, rows: Long,
-      epoch: Long,
-      rdd: org.apache.spark.rdd.RDD[graft.functions.CtxCodes])
-
-  /** JVM-global cache of the DOC-PARTITIONED context snapshot RDDs — the
-    * distributed twin of [[ctxCodesSnapshots]] for a context that outgrows
-    * the broadcast gate ([[IndexIVF.contextCodesPartitioned]]). Keyed and
-    * freshness-validated exactly like the broadcast cache (qualified path +
-    * tenant + field id + handle snapshot epoch; tick / rows / persisted
-    * epoch). Access-order LRU with FEWER slots than the broadcast cache:
-    * each entry pins an over-the-gate-sized (multi-GiB at production shape)
-    * persisted RDD distributed across executor storage memory, so holding
-    * many is the faster path to eviction churn than to hits. Replacement
-    * and eviction unpersist the old RDD non-blocking — an in-flight batch's
-    * tasks keep computing from lineage if their block vanishes mid-run
-    * (slower, never wrong). */
-  private[index] val CtxPartSnapshotSlots = 4
-  private[index] val ctxPartSnapshots: java.util.Map[
-      (String, Long, Int, Option[Long]), CtxPartSnapshotEntry] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Int, Option[Long]),
-          CtxPartSnapshotEntry](CtxPartSnapshotSlots * 2, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Int, Option[Long]),
-              CtxPartSnapshotEntry]): Boolean = {
-          val evict = size() > CtxPartSnapshotSlots
-          if (evict)
-            try { e.getValue.rdd.unpersist(blocking = false); () }
-            catch { case _: Exception => () }
-          evict
-        }
-      })
-
-  /** Per-key build locks for `contextCodesPartitioned` — see
-    * [[ctxPartSnapshots]]. */
-  private[index] val ctxPartBuildLocks =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Long, Int, Option[Long]), Object]()
+  /** Doc-partitioned context snapshot RDDs — the distributed twin of
+    * [[ctxCodesBroadcasts]] for a context past the broadcast gate. FEWER
+    * slots (4): each entry pins an over-the-gate-sized (multi-GiB at
+    * production shape) RDD across executor storage memory, so holding many
+    * leads to eviction churn sooner than to hits. Released with a
+    * non-blocking `unpersist`. A batch still running on a released RDD
+    * recomputes its lost partitions from lineage: the build's shuffle
+    * output while that exists, else the build-time file listing of the
+    * context table. It therefore sees the pre-mutation rows or fails
+    * loudly on files a rewrite deleted; it never sees post-mutation rows
+    * (BatchSearchSpec "a superseded partitioned snapshot…" pins this). */
+  private[index] val ctxCodesPartitions = new DerivedCache[DerivedKey, Stamp,
+    org.apache.spark.rdd.RDD[graft.functions.CtxCodes]](4,
+    _.unpersist(blocking = false))
 
   /** Drop the in-memory point-store resolve (NOT the disk state) — spec
     * hook simulating a process restart, which must ADOPT a still-valid
     * on-disk store instead of rebuilding. */
   private[graft] def clearPointStoreResolveForTest(): Unit =
-    pointStoreDirs.clear()
+    pointStores.clear()
 
   private[graft] val MaxTargetedPartitionsKey = "graft.index.maxTargetedPartitions"
   private[graft] def maxTargetedPartitions(spark: SparkSession): Int =

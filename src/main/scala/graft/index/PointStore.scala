@@ -51,12 +51,11 @@ import org.apache.spark.sql.functions._
   * format: no version bump, no migration, nothing the journal must make
   * atomic — a torn build leaves a `.tmp.` directory no reader ever
   * resolves, and a reader that finds no valid store just rebuilds (or the
-  * caller falls back to the scan shape). Freshness reuses the snapshot
-  * cache's exact contract: keyed by the qualified index path + (tenant,
-  * field) + the handle's snapshot epoch, validated by (JVM mutation tick,
-  * visible row count, persisted `_meta/epoch.json`) — a mutation in this
-  * process, a sibling handle, or a FOREIGN process all route the next
-  * batch to a rebuild; the `<stateTag>` encodes (rows, epoch) so a
+  * caller falls back to the scan shape). Its resolve is one
+  * [[DerivedCache]] instance with the snapshots' key and stamp
+  * ([[IndexIVF.pointStore]]) — a mutation in this process, a sibling
+  * handle, or a FOREIGN process all route the next batch to a rebuild;
+  * the `<stateTag>` encodes (rows, epoch) so a
   * restarted process ADOPTS a matching store from disk instead of
   * rebuilding.
   *

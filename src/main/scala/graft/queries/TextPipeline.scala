@@ -731,7 +731,16 @@ object TextPipeline {
     * come from a projection UDF rather than signature columns. Applies the
     * per-(band, bucket) hot cap by NULLING the doc's entry in `bks`
     * (row-local against the one collected hot row) and explodes the kept
-    * bands with `bks` riding along for [[firstCappedBandCollision]]. */
+    * bands with `bks` riding along for [[firstCappedBandCollision]].
+    *
+    * Size bound: the hot set is ONE row, built by a global collect_set
+    * aggregate on a single reducer and broadcast. An UnsafeRow is capped at
+    * 2 GiB, and each hot (band, bucket) costs 8 bytes in it, so past about
+    * 2^28 hot buckets in total (minus array headers) the aggregate or the
+    * broadcast fails loudly. The row-per-bucket anti-join relation it
+    * replaced had no single-row cap. Hot buckets are stop-cluster-sized by
+    * construction (> `bucketCap` members each), so reaching the bound needs
+    * over 2^28 x `bucketCap` band memberships. */
   private def cappedBandedFromArrays(s: SparkSession, withArr: DataFrame,
       bands: Int, bucketCap: Int, dropMsg: String): DataFrame = {
     val exploded = withArr.select(col("doc_id"),

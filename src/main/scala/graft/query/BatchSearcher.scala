@@ -103,7 +103,7 @@ object BatchSearcher {
   }
 
   /** Average doc width (codes per doc) recovered from the byte-gate stats
-    * the batch already has in hand: [[measuredContextBytes]] sums
+    * the batch already has in hand: [[contextRelationStats]] sums
     * `8 + 8 x size(doc_codes) + 48` per row, so
     * `avgWidth = (bytes/rows - 56) / 8` — no extra job. */
   private[graft] def avgDocWidth(ctxRows: Long, ctxBytes: Long): Double =
@@ -205,67 +205,11 @@ object BatchSearcher {
     * row, and a row budget would have sailed a ~66 GiB relation onto
     * every executor). Above the gate phase-1 walks the doc-partitioned
     * snapshot instead ([[IndexIVF.contextCodesPartitioned]]). Bytes are
-    * MEASURED, not assumed — see [[measuredContextBytes]] for the size
-    * scan and its caching. */
+    * MEASURED, not assumed — see [[contextRelationStats]] for the size
+    * aggregate and its caching. */
   val BroadcastContextMaxBytesKey = "graft.batch.broadcastContextMaxBytes"
   private def broadcastContextMaxBytes(spark: org.apache.spark.sql.SparkSession): Long =
     spark.conf.get(BroadcastContextMaxBytesKey, (1L << 30).toString).toLong
-
-  /** Measured hashed-relation bytes of the broadcastable doc -> codes
-    * relation: one column-pruned `sum(8 + 8*size(doc_codes) + 48)`
-    * aggregate (doc_id + int64 codes + per-row hashed-relation overhead —
-    * the same accounting the writeContext size gate applies to its codes
-    * term), cached per (index path, tenant, field) and invalidated by the
-    * footer row count. The count is the same metadata-only job the old row
-    * gate ran per batch, so steady-state serving pays exactly what it used
-    * to (count + map lookup); the one size scan per (index, count) reads
-    * only array lengths of the column phase-1 is about to scan anyway.
-    * Staleness bound: a mutation that changes row WIDTHS without changing
-    * the row count (an update() replacing docs with same-count, longer
-    * ones) serves one batch on the previous measure — a sizing heuristic
-    * miss of at most that mutation's delta, never a correctness issue. */
-  private val ctxBytesCache =
-    scala.collection.concurrent.TrieMap[(String, Long, Int), Map[Long, Long]]()
-  private def measuredContextBytes(idx: IndexIVF, ctx: DataFrame,
-      tenant: Long, fid: Int, rows: Long): Long = {
-    // a BOUNDED handful of (rows -> bytes) entries per (path, tenant,
-    // field): keying by the count alone left one stale entry behind per
-    // mutation (unbounded driver growth on a frequently-appended index,
-    // r13 ADVICE), while a single replace-on-mismatch slot made a session
-    // that interleaves a live handle and an openAt snapshot of the same
-    // index (different visible row counts) evict each other and re-run
-    // the size scan on every alternating batch. Four slots let live +
-    // snapshots coexist; eviction beyond that is arbitrary and only costs
-    // one re-measure.
-    val key = (idx.path, tenant, fid)
-    val cached = ctxBytesCache.getOrElse(key, Map.empty)
-    cached.get(rows) match {
-      case Some(b) => b
-      case None =>
-        val b =
-          if (rows == 0L) 0L
-          else ctx.select(coalesce(
-              sum(lit(8L) + size(col("doc_codes")).cast("long") * 8L + lit(48L)),
-              lit(0L)))
-            .first().getLong(0)
-        // publish via compare-and-swap, not read-modify-put: two concurrent
-        // batches measuring different row counts for the same key would
-        // otherwise overwrite each other's 4-slot map and drop a
-        // just-measured sibling entry (r14 ADVICE — cost was only a
-        // redundant re-measure, but the loop is two lines)
-        var published = false
-        while (!published) {
-          ctxBytesCache.get(key) match {
-            case None =>
-              published = ctxBytesCache.putIfAbsent(key, Map(rows -> b)).isEmpty
-            case Some(cur) =>
-              val trimmed = if (cur.size >= 4) cur - cur.head._1 else cur
-              published = ctxBytesCache.replace(key, cur, trimmed + (rows -> b))
-          }
-        }
-        b
-    }
-  }
 
   /** Measured broadcastable-relation bytes for (tenant, field) — exactly
     * the left side of the [[BroadcastContextMaxBytesKey]] gate compare
@@ -274,21 +218,25 @@ object BatchSearcher {
       field: String): Long = contextRelationStats(idx, tenant, field)._2
 
   /** (visible rows, measured relation bytes) in one call — the batch path
-    * needs both (rows keys the [[IndexIVF.contextCodesBroadcast]] cache,
-    * bytes feeds the gate) and must not run the count job twice. Cached
-    * through [[IndexIVF.cachedContextStats]] (tick + persisted-epoch
-    * freshness): the per-batch footer count was 0.27 s of the 1.9 s
-    * steady 10M batch, re-measuring a value that only changes on
-    * mutation. */
+    * needs both (rows stamps the [[IndexIVF.contextCodesBroadcast]] cache,
+    * bytes feeds the gate). Bytes are the hashed-relation size of the
+    * broadcastable doc -> codes relation, `sum(8 + 8*size(doc_codes) + 48)`
+    * per row (doc_id + int64 codes + per-row hashed-relation overhead — the
+    * same accounting the writeContext size gate applies to its codes term).
+    * Both come from ONE column-pruned aggregate, run only on a miss of
+    * [[IndexIVF.cachedContextStats]] (tick + persisted-epoch freshness):
+    * the per-batch footer count was 0.27 s of the 1.9 s steady 10M batch,
+    * re-measuring a value that only changes on mutation. */
   private[graft] def contextRelationStats(idx: IndexIVF, tenant: Long,
       field: String): (Long, Long) =
     idx.cachedContextStats(tenant, field) {
-      val fid = idx.mapper.id(field)
-      val thin = idx.contextDf
-        .filter(col("tenant") === tenant && col("field") === fid)
-        .select(col("doc_id"), col("doc_codes"))
-      val rows = thin.count()
-      (rows, measuredContextBytes(idx, thin, tenant, fid, rows))
+      val r = idx.contextDf
+        .filter(col("tenant") === tenant && col("field") === idx.mapper.id(field))
+        .select(count(lit(1)), coalesce(
+          sum(lit(8L) + size(col("doc_codes")).cast("long") * 8L + lit(48L)),
+          lit(0L)))
+        .first()
+      (r.getLong(0), r.getLong(1))
     }
 
   /** Target bytes per partition of the doc-partitioned context snapshot

@@ -619,4 +619,91 @@ class BatchSearchSpec extends AnyFunSuite {
         "a foreign epoch advance must force a stats recompute")
     } finally spark.sparkContext.removeSparkListener(l)
   }
+
+  test("openAt snapshot handle: batch search serves its pre-add rows, equal " +
+      "to its per-query search, while the live handle sees the add") {
+    import spark.implicits._
+    val dim = 16
+    val rnd = new scala.util.Random(91)
+    def tokens() = Seq.fill(4)(Seq.fill(dim)(rnd.nextFloat() * 2f - 1f))
+    val corpus = (0L until 40L).map(i => i -> tokens()).toMap
+    val path = java.nio.file.Files.createTempDirectory("idx_openat_batch").toString
+    val idx = IndexIVF.create(spark, path, GSchema(Seq(
+      GField.colbert("colbert", dim, numCentroids = 6, numIterations = 4))))
+    def docsDf(rows: Seq[(Long, Seq[Seq[Float]])]) =
+      rows.map { case (i, t) => Doc(i, t, "x", 0L) }.toDF()
+        .select(org.apache.spark.sql.functions.col("id"),
+          org.apache.spark.sql.functions.col("colbert"))
+    val docs = docsDf(corpus.toSeq.sortBy(_._1))
+    idx.train(docs)
+    idx.add(1, docs)
+
+    val opts = SearchOptions(kTopCentroids = 3, nProbe = 6)
+    val queries = Seq(3L, 17L, 33L).map(qid => (qid, corpus(qid)))
+    val before = batchRows(idx, queries, 5, opts) // live batch: warms the slot
+    val preAdd = idx.currentEpoch()
+    idx.add(1, docsDf(Seq(500L -> corpus(3L).map(_.map(_ + 0.001f)))))
+
+    val snap = IndexIVF.openAt(spark, path, preAdd)
+    val snapBatch = batchRows(snap, queries, 5, opts)
+    assertSameRanking(snapBatch, perQueryRows(snap, queries, 5, opts),
+      "openAt batch vs openAt per-query search")
+    assertSameRanking(snapBatch, before, "openAt batch vs the pre-add live batch")
+    assert(!snapBatch(3L).exists(_._1 == 500L),
+      "a doc added after the snapshot epoch leaked into the snapshot batch")
+
+    val live = batchRows(idx, queries, 5, opts)
+    assert(live(3L).exists(_._1 == 500L),
+      s"the live handle must see the add, got ${live(3L)}")
+    // the two handles hold separate slots: the snapshot still serves pre-add
+    assertSameRanking(batchRows(snap, queries, 5, opts), snapBatch,
+      "openAt batch after the live rebuild")
+  }
+
+  test("a superseded partitioned snapshot recomputes pre-mutation rows or " +
+      "fails, never post-mutation rows") {
+    import spark.implicits._
+    val dim = 16
+    val rnd = new scala.util.Random(92)
+    def tokens() = Seq.fill(4)(Seq.fill(dim)(rnd.nextFloat() * 2f - 1f))
+    val corpus = (0L until 40L).map(i => i -> tokens()).toMap
+    val path = java.nio.file.Files.createTempDirectory("idx_superseded").toString
+    val idx = IndexIVF.create(spark, path, GSchema(Seq(
+      GField.colbert("colbert", dim, numCentroids = 6, numIterations = 4))))
+    val docs = corpus.toSeq.sortBy(_._1).map { case (i, t) => Doc(i, t, "x", 0L) }
+      .toDF().select(org.apache.spark.sql.functions.col("id"),
+        org.apache.spark.sql.functions.col("colbert"))
+    idx.train(docs)
+    idx.add(1, docs)
+    def docIds(rdd: org.apache.spark.rdd.RDD[graft.functions.CtxCodes]): Set[Long] =
+      rdd.flatMap(_.docIds.iterator).collect().toSet
+
+    val opts = SearchOptions(kTopCentroids = 3, nProbe = 6)
+    val queries = Seq(3L, 17L).map(qid => (qid, corpus(qid)))
+    spark.conf.set(BatchSearcher.BroadcastContextMaxBytesKey, "1")
+    try {
+      batchRows(idx, queries, 5, opts) // builds the partitioned snapshot
+      val (rows, bytes) = BatchSearcher.contextRelationStats(idx, 1, "colbert")
+      val old = idx.contextCodesPartitioned(1, "colbert", rows, bytes, 1L << 28)
+      assert(idx.contextCodesPartitioned(1, "colbert", rows, bytes, 1L << 28) eq old,
+        "expected the batch-built snapshot from the cache")
+      val preIds = docIds(old)
+      assert(preIds == corpus.keySet)
+
+      idx.remove(1, Seq(17L))
+      val post = batchRows(idx, queries, 5, opts) // replaces the slot
+      assert(!post.values.flatten.exists(_._1 == 17L))
+      assert(old.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        "the superseded snapshot must be unpersisted when its slot is replaced")
+      old.unpersist(blocking = true) // its blocks are gone before the recompute
+
+      scala.util.Try(docIds(old)) match {
+        case scala.util.Success(ids) =>
+          assert(ids == preIds, "a recompute must return the pre-remove rows")
+          info(s"recompute served the ${ids.size} pre-remove docs")
+        case scala.util.Failure(e) =>
+          info(s"recompute failed loudly: $e")
+      }
+    } finally spark.conf.unset(BatchSearcher.BroadcastContextMaxBytesKey)
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.{Relational, Similarity}
+import org.apache.spark.graftbridge.ListenerBusAccess
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -145,17 +146,12 @@ class PlanSpec extends AnyFunSuite {
       val res = idx.search(1, VectorQuery("colbert", corpus(3L).map(_.toArray).toArray),
         k = 3, SearchOptions(kTopCentroids = 4, nProbe = 4))
       assert(res.collect().map(_.getAs[Long]("doc_id")).contains(3L))
-      // the listener bus is async — poll until the multiget plan arrives
-      val deadline = System.nanoTime() + 10e9.toLong
-      var seen = false
-      var bucketPruned = false
-      while (!seen && System.nanoTime() < deadline) {
-        val snap = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
-        seen = snap.exists(p => p.contains("In(doc_id") && p.contains("docs"))
-        bucketPruned = snap.exists(p => p.contains("In(doc_id") &&
-          p.contains("docs") && p.contains("doc_bucket"))
-        if (!seen) Thread.sleep(50)
-      }
+      // the listener bus is async — drain it so every plan has arrived
+      ListenerBusAccess.drain(spark.sparkContext)
+      val snap = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
+      val seen = snap.exists(p => p.contains("In(doc_id") && p.contains("docs"))
+      val bucketPruned = snap.exists(p => p.contains("In(doc_id") &&
+        p.contains("docs") && p.contains("doc_bucket"))
       assert(seen, s"no executed plan pushed the top-k ids into the docs scan:\n" +
         scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala.mkString("\n---\n"))
       // v4: the same multiget also carries the ids' bucket set as a
@@ -212,23 +208,17 @@ class PlanSpec extends AnyFunSuite {
       val res = idx.search(1, VectorQuery("colbert", corpus(3L).map(_.toArray).toArray),
         k = 2, SearchOptions(kTopCentroids = 4, nProbe = 4, numSecondPass = 2))
       assert(res.collect().nonEmpty)
-      val deadline = System.nanoTime() + 10e9.toLong
-      var multiget = false
-      var phase1ThinScan = false
-      while (!(multiget && phase1ThinScan) && System.nanoTime() < deadline) {
-        val snap = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
-        // phase-2: the context read carries BOTH the id IN-list and the
-        // bucket partition filter (v5 directory pruning)
-        multiget = snap.exists(p => p.contains("context") &&
-          p.contains("In(doc_id") && p.contains("doc_bucket"))
-        // phase-1: the plan that scans context TOGETHER with postings (the
-        // candidate join) must not read doc_residuals — codes only
-        phase1ThinScan = snap.exists(p => p.contains("context") &&
-          p.contains("postings") && !p.contains("doc_residuals"))
-        if (!(multiget && phase1ThinScan)) Thread.sleep(50)
-      }
-      val all = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
-        .mkString("\n---\n")
+      ListenerBusAccess.drain(spark.sparkContext)
+      val snap = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
+      // phase-2: the context read carries BOTH the id IN-list and the
+      // bucket partition filter (v5 directory pruning)
+      val multiget = snap.exists(p => p.contains("context") &&
+        p.contains("In(doc_id") && p.contains("doc_bucket"))
+      // phase-1: the plan that scans context TOGETHER with postings (the
+      // candidate join) must not read doc_residuals — codes only
+      val phase1ThinScan = snap.exists(p => p.contains("context") &&
+        p.contains("postings") && !p.contains("doc_residuals"))
+      val all = snap.mkString("\n---\n")
       assert(multiget,
         s"no executed plan multigets context with bucket + id pruning:\n$all")
       assert(phase1ThinScan,
@@ -270,7 +260,7 @@ class PlanSpec extends AnyFunSuite {
       val res = BatchSearcher.searchBatch(idx, 1, "colbert", queriesDf, k = 2,
         SearchOptions(kTopCentroids = 4, nProbe = 4, numSecondPass = 2))
       assert(res.collect().nonEmpty)
-      org.apache.spark.graftbridge.ListenerBusAccess.drain(spark.sparkContext)
+      ListenerBusAccess.drain(spark.sparkContext)
       val snap = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
       // phase-2 runs as its OWN job (no postings in its plan): the context
       // read carries the pool ids' IN-set AND the doc_bucket partition
@@ -320,7 +310,7 @@ class PlanSpec extends AnyFunSuite {
           .collect().groupBy(_.getLong(0))
           .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq).toMap
         assert(over == batch, "over-gate batch diverged from the under-gate batch")
-        org.apache.spark.graftbridge.ListenerBusAccess.drain(spark.sparkContext)
+        ListenerBusAccess.drain(spark.sparkContext)
         val overPlans = scala.jdk.CollectionConverters.SetHasAsScala(plans).asScala
         val allO = overPlans.mkString("\n---\n")
         assert(overPlans.nonEmpty, "no over-gate batch plan captured")

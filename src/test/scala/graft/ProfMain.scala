@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftbridge.ListenerBusAccess
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -428,7 +429,7 @@ object ProfMain {
                 qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
           }
           spark.listenerManager.register(listener)
-          try { run; Thread.sleep(1500) } finally
+          try { run; ListenerBusAccess.drain(spark.sparkContext) } finally
             spark.listenerManager.unregister(listener)
           import scala.jdk.CollectionConverters._
           qes.asScala.toVector.flatMap(_.executedPlan.collect {
@@ -679,7 +680,7 @@ object ProfMain {
                 qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
           }
           spark.listenerManager.register(listener)
-          try { run; Thread.sleep(1500) } finally
+          try { run; ListenerBusAccess.drain(spark.sparkContext) } finally
             spark.listenerManager.unregister(listener)
           import scala.jdk.CollectionConverters._
           qes.asScala.toVector.flatMap(_.executedPlan.collect {
@@ -1172,7 +1173,7 @@ object ProfMain {
           val n = out.count()
           val tDone = System.nanoTime()
           val segs = BatchSearcher.lastProfile
-          Thread.sleep(1500) // listener bus is async
+          ListenerBusAccess.drain(spark.sparkContext) // listener bus is async
           import scala.jdk.CollectionConverters._
           val jobs = jobLog.asScala.toVector.sortBy(-_._2)
           jobLog.clear()
@@ -1281,7 +1282,7 @@ object ProfMain {
                 queriesDf(g), 10, optsG).count()
             }
             val ms = (System.nanoTime() - t0) / 1e6
-            Thread.sleep(1200) // listener bus is async
+            ListenerBusAccess.drain(spark.sparkContext) // listener bus is async
             val distinctProbes = groups.map(g =>
               g.map(probeSets(_)).reduce(_ ++ _).size)
             println(f"[prof] probe_group $name%-14s rep=$rep " +
@@ -1566,10 +1567,13 @@ object ProfMain {
         }
         spark.sparkContext.addSparkListener(lstW)
         val tW0 = System.nanoTime()
-        try armW.add(1, docsW)
-        finally spark.sparkContext.removeSparkListener(lstW)
-        val addWall = (System.nanoTime() - tW0) / 1e9
-        Thread.sleep(2000)
+        val addWall =
+          try { armW.add(1, docsW); (System.nanoTime() - tW0) / 1e9 }
+          finally {
+            // drain BEFORE removal: task events still queued would be lost
+            ListenerBusAccess.drain(spark.sparkContext)
+            spark.sparkContext.removeSparkListener(lstW)
+          }
         import scala.jdk.CollectionConverters._
         val byStageW = tasksW.asScala.toVector.groupBy(_._1)
         println(f"[prof] add_warmup fresh-JVM add wall ${addWall}%.1f s " +
@@ -1989,7 +1993,7 @@ object ProfMain {
           BatchSearcher.searchBatch(idxS2, 1, "colbert", queriesS2, 10, opts)
             .count()
           val wallMs = (System.nanoTime() - t0) / 1e6
-          Thread.sleep(2000) // listener bus is async — let task events drain
+          ListenerBusAccess.drain(spark.sparkContext) // listener bus is async
           import scala.jdk.CollectionConverters._
           val byStage = taskQ.asScala.toVector.groupBy(_._1)
             .map { case (st, ts) => (st, ts.map(_._2).sorted) }

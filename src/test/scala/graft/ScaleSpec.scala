@@ -207,12 +207,21 @@ class ScaleSpec extends AnyFunSuite {
 
   test("IVF-clustered embedding near-dup: linear when centroids scale with n") {
     // the scale knob: K centroids proportional to n keeps per-cluster
-    // population ~constant, so candidate volume sum(cluster^2) stays linear
-    val (e1, c1) = ScaleData.embWithCentroids(spark, dir1, n1 / 150)
-    val (eN, cN) = ScaleData.embWithCentroids(spark, dirN, n1 * factor / 150)
+    // population ~constant, so candidate volume sum(cluster^2) stays linear.
+    // The corpora's K anchors are their first K embeddings and embedding id
+    // belongs to anchor id % K (ScaleData.embVec), so the first K x pop ids
+    // give every cluster pop members: 240 of the 1x corpus, 2400 of the 10x
+    // one. Held at the 1x K instead, the 10x arm's clusters grow 10x and its
+    // candidates ~100x, far outside the row-ratio bound.
+    val pop = 30
+    val (k1, kN) = (n1 / 150, n1 * factor / 150)
+    val (e1, c1) = ScaleData.embWithCentroids(spark, dir1, k1)
+    val (eN, cN) = ScaleData.embWithCentroids(spark, dirN, kN)
     // minCos = -1: count ALL candidates (the work), not the filtered tail
-    val (rows1, t1) = timed(Similarity.neardupIvfPairs(e1, c1, minCos = -1.0).count())
-    val (rowsN, tN) = timed(Similarity.neardupIvfPairs(eN, cN, minCos = -1.0).count())
+    val (rows1, t1) = timed(Similarity.neardupIvfPairs(
+      e1.filter(col("vec_id") < k1 * pop), c1, minCos = -1.0).count())
+    val (rowsN, tN) = timed(Similarity.neardupIvfPairs(
+      eN.filter(col("vec_id") < kN * pop), cN, minCos = -1.0).count())
     checkRatios("ivf-neardup", rows1, t1, rowsN, tN, 5, 15)
   }
 }
