@@ -6,15 +6,15 @@ import jdk.incubator.vector.VectorMask;
 import jdk.incubator.vector.VectorSpecies;
 
 /**
- * SIMD per-candidate centroid-score micro-kernel for the phase-1 serving
- * path (the CentroidScore expression and the batch snapshot walk): updates the
+ * SIMD per-candidate centroid-score micro-kernel of the phase-1 walk
+ * (every search scores through {@code CentroidScore.computeDotAutoLRange}): updates the
  * per-query-token running MAX of {@code dot(q_token, centroid[code])} for
  * one doc code, vectorizing ACROSS QUERY TOKENS.
  *
  * <p>Bit-parity contract (the same one {@link graft.quantizers.AssignKernel}
  * holds): each token's accumulator lives in a SINGLE lane and accumulates
  * dim-ascending — the identical op sequence to the scalar loop in
- * {@code CentroidScore.computeDot} — and {@code add(mul)} is used instead of
+ * {@code CentroidScore.computeDotLRange} — and {@code add(mul)} is used instead of
  * fma because the scalar path rounds the product before adding. The max
  * update uses an explicit GT compare + blend, NOT vector max: the scalar
  * path's {@code if (acc > perToken[k])} keeps the old value when acc is NaN,
@@ -35,17 +35,17 @@ public final class ScoreKernel {
     private ScoreKernel() {}
 
     /** Lane count of the preferred species — the dispatch threshold: below
-     * one full vector of tokens the body is empty and the scalar twin in
-     * CentroidScore.computeDotT wins. A narrow-species path for nq &lt; 16
-     * was measured and REJECTED (r18, ProfMain score_kernel): 128/256-bit
+     * one full vector of tokens the body is empty and the scalar twin
+     * CentroidScore.computeDotLRange wins. A narrow-species path for nq &lt; 16
+     * was measured and REJECTED (r18 receipt, DESIGN.md): 128/256-bit
      * kernels win 2.0x/3.5x in a single-species JVM, but the FIRST compile
      * of a second species de-intrinsifies the Vector API's shared virtual
      * sites for every other width — one nq=4 batch dropped the production
      * nq=32 path from 6.1x to 0.8x vs scalar for the JVM's lifetime. A
      * serving process cannot promise width purity, so the kernel stays
      * single-species ON PURPOSE; do not reintroduce a width-dispatched
-     * species without re-measuring the mixed-width run
-     * (score_kernel 200000 4,32). */
+     * species without re-measuring a mixed-width run (nq=4 then nq=32 in
+     * one JVM). */
     public static int lanes() {
         return S.length();
     }
@@ -71,23 +71,14 @@ public final class ScoreKernel {
         }
     }
 
-    /** One candidate row: approximate MaxSim of dim-major query tokens
-     * against the codes' centroids — sum over tokens of the running max
-     * {@link #maxDotInto} maintains. Resolved reflectively (one call per
-     * candidate ROW) by {@code CentroidScore.computeDotT}; the scalar twin
-     * lives there with the identical accumulation order. */
-    public static double scoreCodesT(long[] codes, float[] qt, int nq,
-            float[] cent, int d) {
-        return scoreCodesTRange(codes, 0, codes.length, qt, nq, cent, d);
-    }
-
-    /** {@link #scoreCodesT} over a [from, to) slice of a SHARED flat codes
-     * array (the CSR CtxCodes snapshot): scores in place, so the snapshot
-     * phase-1 path pays no per-pair {@code Arrays.copyOfRange} — at width
-     * 120 tok/doc that copy is ~1 KiB of allocation per scored pair, and a
-     * 212-query batch on a 10M corpus evaluates up to ~1e9 pairs. Identical
-     * op sequence to the full-array entry (which now delegates here), so
-     * bit-parity is structural. */
+    /** One candidate: approximate MaxSim of dim-major query tokens against
+     * the centroids of codes[from, to) — a slice of the CSR CtxCodes
+     * snapshot's SHARED flat codes array, scored in place (no per-pair
+     * copy) — as the sum over tokens of the running max {@link #maxDotInto}
+     * maintains. Resolved reflectively (one call per scored pair) by
+     * {@code CentroidScore.computeDotAutoLRange}; the scalar twin
+     * {@code CentroidScore.computeDotLRange} has the identical accumulation
+     * order. */
     public static double scoreCodesTRange(long[] codes, int from, int to,
             float[] qt, int nq, float[] cent, int d) {
         float[] perToken = new float[nq];

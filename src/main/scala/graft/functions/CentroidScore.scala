@@ -1,91 +1,5 @@
 package graft.functions
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
-
-/** Native phase-1 PLAID scoring expression: the approximate MaxSim over a
-  * document's centroid codes (reference colbert_centroid_score,
-  * lintdb/scoring/plaid.cpp:65-95) as a codegen'd Catalyst expression.
-  *
-  * Scores are computed LAZILY per (query token, doc code) pair as a
-  * sequential f32 inner product against the row-major centroid matrix,
-  * which ships as a REAL Spark broadcast — shipped to each executor once
-  * per index lifetime (it is cached on the IndexIVF handle and reused
-  * across queries and batches), never serialized into the task binary.
-  * The earlier design precomputed the full (numQueryTokens x numCentroids)
-  * score matrix on the driver and attached it as a plan constant via
-  * `addReferenceObj`; at production K that constant is K-proportional
-  * (786 KB/query at K=49152, and the batch twin shipped 212 x that =
-  * 159 MiB Java-deserialized per task — measured 4.1 s/query at the
-  * 10M-doc shape). The lazy dot moves the cost to the candidate rows:
-  * codes x nq x dim FLOPs per row, candidate-proportional and
-  * corpus/K-independent.
-  *
-  * Bit-parity: CoarseQuantizer.scoreBlock accumulates each centroid's
-  * score dim-ascending with one lane per centroid (no cross-lane
-  * reduction), i.e. exactly the op sequence of a sequential f32 dot —
-  * so the lazy dot reproduces the precomputed matrix entries bit-exactly
-  * (pinned by CentroidScoreSpec against Plaid.colbertCentroidScore over
-  * a scoreBlock matrix).
-  */
-case class CentroidScore(
-    child: Expression,
-    queryFlat: Array[Float],
-    bcCentroids: Broadcast[Array[Float]],
-    numQueryTokens: Int,
-    dim: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_centroid_score expects array<bigint>, got ${other.simpleString}")
-    }
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  // Broadcast.getValue() is a SYNCHRONIZED method (SoftReference
-  // memoization) — it must be resolved once per task/expression instance,
-  // never per row: 32 threads contending on the one broadcast monitor
-  // serialized the whole scoring stage (measured 387 s for a 2.8M-pair
-  // phase-1 at the 10M-doc shape before this was hoisted).
-  @transient private lazy val centLocal: Array[Float] = bcCentroids.value
-  // dim-major query for the token-lane SIMD kernel — once per task
-  @transient private lazy val qtLocal: Array[Float] =
-    CentroidScore.transposeQuery(queryFlat, dim)
-
-  override def nullSafeEval(codes: Any): Any =
-    CentroidScore.computeDotAuto(codes.asInstanceOf[ArrayData], queryFlat,
-      qtLocal, centLocal, numQueryTokens, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qRef = ctx.addReferenceObj("centroidScoreQuery", queryFlat, "float[]")
-    val bcRef = ctx.addReferenceObj("centroidScoreBc", bcCentroids,
-      "org.apache.spark.broadcast.Broadcast")
-    // hoist the synchronized Broadcast.value() call into the generated
-    // class's init (once per task) — see centLocal; the query transpose
-    // rides the same once-per-task init
-    val centVar = ctx.addMutableState("float[]", "centroidMatrix",
-      v => s"$v = (float[]) $bcRef.value();")
-    val qtVar = ctx.addMutableState("float[]", "centroidQueryT",
-      v => s"$v = graft.functions.CentroidScore.transposeQuery($qRef, $dim);")
-    nullSafeCodeGen(ctx, ev, codes =>
-      s"${ev.value} = graft.functions.CentroidScore.computeDotAuto(" +
-        s"$codes, $qRef, $qtVar, $centVar, $numQueryTokens, $dim);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CentroidScore =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_centroid_score"
-}
-
 /** Compact deduped (doc_id -> centroid codes) snapshot of one
   * (tenant, field)'s context table, CSR-flat for broadcast: sorted doc ids,
   * offsets into one flat codes array. ~40% the bytes of the BHJ hashed
@@ -101,8 +15,9 @@ final class CtxCodes(
   def numDocs: Int = docIds.length
 
   /** Inverted (centroid -> doc positions) view of this snapshot — the
-    * in-memory postings the batch phase-1 walk traverses instead of
-    * scanning the postings table ([[graft.query.BatchSearcher]]). The
+    * in-memory postings every search's phase-1 walk traverses
+    * ([[graft.query.BatchSearcher.walkQueries]]); no search reads the
+    * postings table. The
     * entry for centroid c lists the
     * POSITIONS (indexes into [[docIds]]/[[offsets]], ascending) of every
     * doc whose deduped codes contain c — exactly the visible postings
@@ -226,8 +141,9 @@ object CtxCodes {
   }
 }
 
-/** The batch phase-1 kernel entry ([[graft.query.BatchSearcher]]'s walk):
-  * scores one query against one [[CtxCodes]] snapshot position. */
+/** The phase-1 walk's kernel entry ([[graft.query.BatchSearcher
+  * .walkQueries]]): scores one query against one [[CtxCodes]] snapshot
+  * position. */
 object BatchCtxCentroidScore {
   /** `queries` is token-major, `queriesT` its dim-major twin (see
     * [[transposeAll]]) — [[CentroidScore.computeDotAutoLRange]]
@@ -246,14 +162,23 @@ object BatchCtxCentroidScore {
     qs.map { case (k, v) => k -> CentroidScore.transposeQuery(v, dim) }
 }
 
+/** The phase-1 PLAID kernel: the approximate MaxSim over one document's
+  * centroid codes (reference colbert_centroid_score,
+  * lintdb/scoring/plaid.cpp:65-95), each (query token, doc code) dot
+  * computed lazily as a sequential f32 inner product against the
+  * row-major centroid matrix ([[graft.index.IndexIVF.centroidBroadcast]]).
+  * Every search scores through it: the phase-1 walk
+  * ([[graft.query.BatchSearcher.walkQueries]]) calls
+  * [[computeDotAutoLRange]] on a slice of the snapshot's flat codes array.
+  *
+  * Bit-parity: CoarseQuantizer.scoreBlock accumulates each centroid's
+  * score dim-ascending with one lane per centroid (no cross-lane
+  * reduction), i.e. exactly the op sequence of a sequential f32 dot, so
+  * the lazy dot reproduces Plaid.colbertCentroidScore over a precomputed
+  * scoreBlock matrix bit-exactly (CentroidScoreSpec, ExhaustiveReferenceSpec).
+  * The reference's unique-code set (plaid.cpp:75-87) is dropped: per-token
+  * MAX is idempotent, so repeated codes cannot change the result. */
 object CentroidScore {
-  import org.apache.spark.sql.graftbridge.Bridge
-
-  def apply(codes: Column, queryFlat: Array[Float],
-      bcCentroids: Broadcast[Array[Float]], nq: Int, dim: Int): Column =
-    Bridge.column(CentroidScore(Bridge.expression(codes), queryFlat,
-      bcCentroids, nq, dim))
-
   /** Row-major (nq x dim) query tokens -> dim-major (dim x nq): one SIMD
     * register then holds dim i of adjacent tokens ([[ScoreKernel]]). Done
     * once per task per query, never per candidate row. */
@@ -269,25 +194,13 @@ object CentroidScore {
     qt
   }
 
-  /** [[ScoreKernel.scoreCodesT]] (+ the species lane count, the dispatch
-    * threshold) resolved once by reflection under the same incubator-module
-    * probe as [[graft.quantizers.CoarseQuantizer]]'s kernels — the scalar
-    * twin below takes over when the module is absent. One boxed reflective
-    * call per candidate ROW (the kernel loops the row's codes internally)
-    * — noise next to the nq x codes x dim FLOPs it vectorizes. */
-  private lazy val simdScoreCodes: Option[(java.lang.reflect.Method, Int)] =
-    try {
-      Class.forName("jdk.incubator.vector.FloatVector")
-      val k = Class.forName("graft.functions.ScoreKernel")
-      Some((k.getMethod("scoreCodesT",
-        classOf[Array[Long]], classOf[Array[Float]], classOf[Int],
-        classOf[Array[Float]], classOf[Int]),
-        k.getMethod("lanes").invoke(null).asInstanceOf[Int]))
-    } catch { case _: Throwable => None }
-
-  /** The [from, until) slice twin of [[simdScoreCodes]] — the CSR snapshot
-    * path scores directly out of the shared flat codes array, no per-pair
-    * copy. Resolved under the same incubator-module probe. */
+  /** [[ScoreKernel.scoreCodesTRange]] (+ the species lane count, the
+    * dispatch threshold) resolved once by reflection under the same
+    * incubator-module probe as [[graft.quantizers.CoarseQuantizer]]'s
+    * kernels — the scalar twin [[computeDotLRange]] takes over when the
+    * module is absent. One boxed reflective call per scored (query, doc)
+    * pair (the kernel loops the doc's codes internally) — noise next to
+    * the nq x codes x dim FLOPs it vectorizes. */
   private lazy val simdScoreCodesRange: Option[(java.lang.reflect.Method, Int)] =
     try {
       Class.forName("jdk.incubator.vector.FloatVector")
@@ -298,43 +211,17 @@ object CentroidScore {
         k.getMethod("lanes").invoke(null).asInstanceOf[Int]))
     } catch { case _: Throwable => None }
 
-  /** The serving hot path of the scoring expression: WIDTH-DISPATCHED
-    * between [[computeDot]] (token-major scalar — narrow queries) and the
-    * token-lane SIMD kernel over the transposed query ([[computeDotT]]).
-    * Bit-identical either way (CentroidScoreSpec). The gate is one full
-    * vector of tokens: below it the SIMD body is empty and the reflective
-    * call + strided layout only cost (measured 0.5-0.75x at nq=4-8 on a
-    * 16-lane host); at or past it the kernel measured 4.7-5.9x (nq=16)
-    * and 5.3-5.8x (nq=32) on the dominant phase-1 per-pair cost (ProfMain
-    * score_kernel, dim=128). */
-  def computeDotAuto(codes: ArrayData, q: Array[Float], qt: Array[Float],
-      cent: Array[Float], nq: Int, dim: Int): Double = simdScoreCodes match {
-    case Some((m, lanes)) if nq >= lanes =>
-      m.invoke(null, codes.toLongArray(), qt, Int.box(nq), cent, Int.box(dim))
-        .asInstanceOf[Double]
-    case _ => computeDot(codes, q, cent, nq, dim)
-  }
-
-  /** [[computeDotAuto]] over a plain long[] codes slice (the [[CtxCodes]]
-    * lookup path, which has no ArrayData to hand) — same width dispatch,
-    * same kernel, bit-identical results (CentroidScoreSpec pins the L
-    * twins against the ArrayData originals). */
-  def computeDotAutoL(codes: Array[Long], q: Array[Float], qt: Array[Float],
-      cent: Array[Float], nq: Int, dim: Int): Double = simdScoreCodes match {
-    case Some((m, lanes)) if nq >= lanes =>
-      m.invoke(null, codes, qt, Int.box(nq), cent, Int.box(dim))
-        .asInstanceOf[Double]
-    case _ => computeDotL(codes, q, cent, nq, dim)
-  }
-
-  /** [[computeDotAutoL]] over a [from, until) SLICE of a shared flat codes
-    * array — the CSR snapshot walk ([[BatchCtxCentroidScore]]) scores
-    * in place instead of Arrays.copyOfRange-ing ~tokens-per-doc longs per
-    * scored (query, doc) pair (r16 verdict What's-wrong 3: at width 120
-    * that copy is the first thing a profiler shows). Same width dispatch,
-    * same kernel op order — bit-identical to the copy-then-score it
-    * replaces (CentroidScoreSpec pins the slice variant against the full
-    * arrays). */
+  /** The scoring entry over a [from, until) SLICE of a shared flat codes
+    * array — the CSR snapshot walk ([[BatchCtxCentroidScore]]) scores in
+    * place instead of copying ~tokens-per-doc longs per scored (query,
+    * doc) pair. WIDTH-DISPATCHED between the token-major scalar
+    * [[computeDotLRange]] (narrow queries) and the token-lane SIMD kernel
+    * over the transposed query `qt`; bit-identical either way
+    * (CentroidScoreSpec). The gate is one full vector of tokens: below it
+    * the SIMD body is empty and the reflective call + strided layout only
+    * cost (measured 0.5-0.75x at nq=4-8 on a 16-lane host); at or past it
+    * the kernel measured 4.7-5.9x (nq=16) and 5.3-5.8x (nq=32) on the
+    * per-pair phase-1 cost (dim=128). */
   def computeDotAutoLRange(codes: Array[Long], from: Int, until: Int,
       q: Array[Float], qt: Array[Float], cent: Array[Float], nq: Int,
       dim: Int): Double = simdScoreCodesRange match {
@@ -344,8 +231,11 @@ object CentroidScore {
     case _ => computeDotLRange(codes, from, until, q, cent, nq, dim)
   }
 
-  /** [[computeDotL]]'s slice twin — identical op sequence over
-    * codes(from until until), so bit-identical results. */
+  /** The scalar kernel over codes(from until until): loop order, float
+    * accumulation and the `>` max compare (a NaN dot keeps the running
+    * max) are the op sequence the SIMD kernel reproduces per lane, so the
+    * two are bit-identical. The float total widens to double last, so the
+    * result equals Plaid.colbertCentroidScore(...).toDouble. */
   def computeDotLRange(codes: Array[Long], from: Int, until: Int,
       q: Array[Float], cent: Array[Float], nq: Int, dim: Int): Double = {
     val perToken = new Array[Float](nq)
@@ -364,103 +254,6 @@ object CentroidScore {
       }
       j += 1
     }
-    var score = 0.0f
-    var k = 0
-    while (k < nq) { score += perToken(k); k += 1 }
-    score.toDouble
-  }
-
-  /** [[computeDot]]'s long[] twin — identical op sequence (loop order,
-    * float accumulation, `>` max compare), so bit-identical results. */
-  def computeDotL(codes: Array[Long], q: Array[Float], cent: Array[Float],
-      nq: Int, dim: Int): Double = {
-    val perToken = new Array[Float](nq)
-    java.util.Arrays.fill(perToken, -9999.0f)
-    var j = 0
-    while (j < codes.length) {
-      val base = codes(j).toInt * dim
-      var k = 0
-      while (k < nq) {
-        val qo = k * dim
-        var acc = 0.0f
-        var i = 0
-        while (i < dim) { acc += q(qo + i) * cent(base + i); i += 1 }
-        if (acc > perToken(k)) perToken(k) = acc
-        k += 1
-      }
-      j += 1
-    }
-    var score = 0.0f
-    var k = 0
-    while (k < nq) { score += perToken(k); k += 1 }
-    score.toDouble
-  }
-
-  /** [[computeDot]] over a TRANSPOSED (dim-major) query: the SIMD kernel
-    * whenever the incubator module is present (NO width gate here — the
-    * parity spec drives the vector body and its tails directly at every
-    * width), the strided scalar twin otherwise. Vector lanes run ACROSS
-    * query tokens with each token's accumulation dim-ascending in one
-    * lane, so results are bit-identical to [[computeDot]] at any vector
-    * width, including the NaN-keeps-old-max edge the scalar `>` compare
-    * implies. Production callers use [[computeDotAuto]]. */
-  def computeDotT(codes: ArrayData, qt: Array[Float], cent: Array[Float],
-      nq: Int, dim: Int): Double = simdScoreCodes match {
-    case Some((m, _)) =>
-      m.invoke(null, codes.toLongArray(), qt, Int.box(nq), cent, Int.box(dim))
-        .asInstanceOf[Double]
-    case _ =>
-      val perToken = new Array[Float](nq)
-      java.util.Arrays.fill(perToken, -9999.0f)
-      val n = codes.numElements()
-      var j = 0
-      while (j < n) {
-        val base = codes.getLong(j).toInt * dim
-        var k = 0
-        while (k < nq) {
-          var acc = 0.0f
-          var i = 0
-          while (i < dim) { acc += qt(i * nq + k) * cent(base + i); i += 1 }
-          if (acc > perToken(k)) perToken(k) = acc
-          k += 1
-        }
-        j += 1
-      }
-      var score = 0.0f
-      var k = 0
-      while (k < nq) { score += perToken(k); k += 1 }
-      score.toDouble
-  }
-
-  /** The kernel over raw ArrayData — results bit-identical to
-    * Plaid.colbertCentroidScore over a CoarseQuantizer.scoreBlock matrix;
-    * static + JIT-friendly so generated code stays a one-liner. The
-    * reference's unique-code set (plaid.cpp:75-87) is dropped here:
-    * per-token MAX is idempotent, so deduping repeated codes cannot change
-    * the result — it only trades a few redundant dots for a per-row
-    * HashSet allocation and one boxed Long per code, which is the wrong
-    * trade on the per-candidate hot loop (typical docs repeat few codes). */
-  def computeDot(codes: ArrayData, q: Array[Float], cent: Array[Float],
-      nq: Int, dim: Int): Double = {
-    val perToken = new Array[Float](nq)
-    java.util.Arrays.fill(perToken, -9999.0f)
-    val n = codes.numElements()
-    var j = 0
-    while (j < n) {
-      val base = codes.getLong(j).toInt * dim
-      var k = 0
-      while (k < nq) {
-        val qo = k * dim
-        var acc = 0.0f
-        var i = 0
-        while (i < dim) { acc += q(qo + i) * cent(base + i); i += 1 }
-        if (acc > perToken(k)) perToken(k) = acc
-        k += 1
-      }
-      j += 1
-    }
-    // float accumulation, then widen — bit-identical to
-    // Plaid.colbertCentroidScore(...).toDouble (the UDF it replaces)
     var score = 0.0f
     var k = 0
     while (k < nq) { score += perToken(k); k += 1 }

@@ -143,7 +143,8 @@ final class IndexIVF private (
     else (-1L, -1L, rows)
 
   /** JVM-global cached broadcast of the deduped (doc_id -> codes) context
-    * snapshot one batch search scores against ([[graft.functions.CtxCodes]]).
+    * snapshot every search's phase-1 walk scores against
+    * ([[graft.functions.CtxCodes]], [[graft.query.BatchSearcher.phase1]]).
     * The BHJ shape this replaces rebuilt the relation EVERY batch — a full
     * context scan + dedup shuffle + an 839 MiB driver collect at the
     * 10M-doc shape, the dominant term of the fixed per-batch serving cost
@@ -258,7 +259,7 @@ final class IndexIVF private (
       rdd
     }
 
-  /** Warm the batch-serving caches for (tenant, field) so the first
+  /** Warm the serving caches for (tenant, field) so the first search or
     * searchBatch doesn't pay the one-time snapshot build in-band — see
     * [[graft.query.BatchSearcher.warmBatchCaches]] for what is built and
     * when it's a no-op. The idiom for latency-sensitive serving:

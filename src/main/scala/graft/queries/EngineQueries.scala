@@ -205,7 +205,7 @@ object EngineQueries {
     * arithmetic in DuckDB FLOAT — FLOAT*FLOAT and FLOAT+FLOAT stay float32
     * in DuckDB, and every sum is an explicit left-associated term chain, so
     * each kernel is bit-identical to the engine's f32 loops
-    * (CoarseQuantizer.ip/assign, CentroidScore.compute,
+    * (CoarseQuantizer.ip/assign, CentroidScore.computeDotLRange,
     * Plaid.scoreByResiduals with normalize=true). With `binarized`, the
     * phase-2 doc token is first passed through [[OracleBinarizer]]'s
     * bucketize -> weight ladder (the engine encodes the RAW token, so
@@ -303,7 +303,7 @@ object EngineQueries {
     val candWhere = if (variant == "and_odd") " WHERE label % 2 = 1" else ""
     // Or: p1 union with the term leg (SUM combiner over coalesced legs,
     // scoring_methods.cpp:61-85 OR identity), pool cut over the union; the
-    // engine combines in DOUBLE (CentroidScore upcasts its f32 total), so
+    // engine combines in DOUBLE (the phase-1 kernel upcasts its f32 total), so
     // the f32 p1s is cast before the +1.0
     val poolCte = variant match {
       case "or_odd" =>

@@ -15,12 +15,14 @@ import org.apache.spark.sql.functions._
   * Plan shape — one regime, the partition-local index walk plus a global
   * top-k merge:
   *  - planning: per-query probe selection runs on the driver over the
-  *    small centroid matrix ([[Searcher.queryPlan]]);
-  *  - phase-1: the queries walk the inverted view of the cached
-  *    [[graft.functions.CtxCodes]] context snapshot — broadcast when the
-  *    measured relation fits [[BroadcastContextMaxBytesKey]], doc-partitioned
-  *    across executors past it — and cut each query's pool with a bounded
-  *    heap. No table is scanned in steady state;
+  *    small centroid matrix ([[Searcher.probes]]);
+  *  - phase-1: [[phase1]], the one phase-1 of every search (single-query
+  *    vector leaves call it too): the queries walk the inverted view of
+  *    the cached [[graft.functions.CtxCodes]] context snapshot — broadcast
+  *    when the measured relation fits [[BroadcastContextMaxBytesKey]],
+  *    doc-partitioned across executors past it — and the batch cuts each
+  *    query's pool with a bounded heap. No table is scanned in steady
+  *    state;
   *  - phase-2: the collected pool's residuals are multigot — a pruned
   *    `doc_id IN (...)` context scan for a small pool, the
   *    [[graft.index.PointStore]] past [[MaxDocIdInListKey]] — and reranked;
@@ -254,27 +256,27 @@ object BatchSearcher {
     * of it) for a stream of queries: per query, candidates come from the
     * snapshot's inverted CSR postings ([[graft.functions.CtxCodes
     * .inverted]], the in-memory twin of the postings table by the
-    * `explode(array_distinct(doc_codes))` write-path invariant), a bitmap
-    * dedups a doc matching several of the query's probes (so each
-    * candidate is scored exactly once), and a [[graft.functions.TopKHeap]]
-    * applies the (score desc NaN-first, doc_id asc) cut at `depth`.
-    * Emitted rows are exactly the rows [[groupTopK]]'s TopKByScore would
-    * keep from this snapshot's docs, in the heap's own total order — so
-    * per-partition cuts merged by one more groupTopK reproduce the global
-    * cut bit-identically (a global top-depth member is always inside its
-    * own partition's top-depth). Shared by the under-gate broadcast walk
-    * (one snapshot, queries partitioned) and the over-gate distributed
-    * walk (doc-partitioned snapshots, every query walks every partition). */
+    * `explode(array_distinct(doc_codes))` write-path invariant), and a
+    * bitmap dedups a doc matching several of the query's probes, so each
+    * candidate is scored exactly once.
+    *
+    * With a `depth`, a [[graft.functions.TopKHeap]] applies the (score desc
+    * NaN-first, doc_id asc) cut: emitted rows are exactly the rows
+    * [[groupTopK]]'s TopKByScore would keep from this snapshot's docs, in
+    * the heap's own total order — so per-partition cuts merged by one more
+    * groupTopK reproduce the global cut bit-identically (a global
+    * top-depth member is always inside its own partition's top-depth).
+    * Without one, every candidate is emitted once, in walk order. */
   private[query] def walkQueries(ctx: graft.functions.CtxCodes,
       qProbes: Iterator[(Long, Array[Long])],
       queries: Map[Long, Array[Float]], queriesT: Map[Long, Array[Float]],
-      cent: Array[Float], dim: Int, depth: Int): Iterator[(Long, Long, Double)] = {
+      cent: Array[Float], dim: Int,
+      depth: Option[Int]): Iterator[(Long, Long, Double)] = {
     val inv = ctx.inverted
     // one bitmap per snapshot walk, cleared per query
     val seen = new java.util.BitSet(ctx.numDocs)
-    qProbes.flatMap { case (qid, probes) =>
+    def candidates(qid: Long, probes: Array[Long])(emit: (Long, Double) => Unit): Unit = {
       seen.clear()
-      val heap = new graft.functions.TopKHeap(depth)
       var pi = 0
       while (pi < probes.length) {
         val c = probes(pi)
@@ -286,21 +288,95 @@ object BatchSearcher {
             val pos = inv.docPos(j)
             if (!seen.get(pos)) {
               seen.set(pos)
-              heap.insert(ctx.docIds(pos),
-                graft.functions.BatchCtxCentroidScore.compute(
-                  qid, ctx, pos, queries, queriesT, cent, dim))
+              emit(ctx.docIds(pos), graft.functions.BatchCtxCentroidScore.compute(
+                qid, ctx, pos, queries, queriesT, cent, dim))
             }
             j += 1
           }
         }
         pi += 1
       }
-      // same output order as TopKByScore.eval: the heap's own total
-      // order (NaN-first descending, doc_id ascending on ties)
-      val order = Array.range(0, heap.size).sortWith((a, b) =>
-        heap.ranksBefore(heap.scores(a), heap.ids(a),
-          heap.scores(b), heap.ids(b)))
-      order.iterator.map(i => (qid, heap.ids(i), heap.scores(i)))
+    }
+    qProbes.flatMap { case (qid, probes) =>
+      depth match {
+        case Some(d) =>
+          val heap = new graft.functions.TopKHeap(d)
+          candidates(qid, probes)(heap.insert)
+          // same output order as TopKByScore.eval: the heap's own total
+          // order (NaN-first descending, doc_id ascending on ties)
+          val order = Array.range(0, heap.size).sortWith((a, b) =>
+            heap.ranksBefore(heap.scores(a), heap.ids(a),
+              heap.scores(b), heap.ids(b)))
+          order.iterator.map(i => (qid, heap.ids(i), heap.scores(i)))
+        case None =>
+          val out = Array.newBuilder[(Long, Long, Double)]
+          candidates(qid, probes)((id, score) => out += ((qid, id, score)))
+          out.result().iterator
+      }
+    }
+  }
+
+  /** Phase-1 of every search, batch and single: the queries walk the
+    * cached context snapshot ([[walkQueries]]) in executor tasks and come
+    * back as a lazy (query_id, doc_id, score) frame. No table is scanned
+    * once the snapshot is built. `stats` is the (rows, bytes) pair of
+    * [[contextRelationStats]]; the byte gate picks where the snapshot
+    * lives:
+    *  - within [[BroadcastContextMaxBytesKey]] it is one broadcast
+    *    ([[IndexIVF.contextCodesBroadcast]]) and the queries are packed
+    *    into ~2 x cores walk tasks;
+    *  - past it the snapshot is DOC-PARTITIONED across executors
+    *    ([[IndexIVF.contextCodesPartitioned]]) and every query walks every
+    *    partition.
+    *
+    * `depth` cuts each query's candidates to a pool (the batch pool); past
+    * the gate the per-partition cuts merge through one partial-heap
+    * shuffle (<= partitions x queries x depth rows). Without a depth every
+    * candidate is returned once — the partitions are doc-disjoint, so no
+    * merge is needed. */
+  private[query] def phase1(idx: IndexIVF, tenant: Long, field: String,
+      stats: (Long, Long),
+      bQueries: org.apache.spark.broadcast.Broadcast[Map[Long, Array[Float]]],
+      qProbes: Seq[(Long, Array[Long])], depth: Option[Int]): DataFrame = {
+    val spark = idx.spark
+    import spark.implicits._
+    val dim = idx.schema.field(field).parameters.dimensions
+    val bcCent = idx.centroidBroadcast(field)
+    val (ctxRows, ctxBytes) = stats
+    val gate = broadcastContextMaxBytes(spark)
+    if (ctxBytes <= gate) {
+      val bcCtx = idx.contextCodesBroadcast(tenant, field, ctxRows, ctxBytes, gate)
+      // pack queries into ~2 x cores partitions: the per-task fixed cost
+      // (launch, bitmap allocation, per-partition query transpose) was
+      // ~40 % of the walk stage at one-task-per-query x 212; per-query
+      // work varies little on a clustered corpus, so coarse packing
+      // loses negligible balance
+      val walkParts = math.max(1, math.min(qProbes.size,
+        spark.sparkContext.defaultParallelism * 2))
+      spark.sparkContext.parallelize(qProbes, walkParts)
+        .mapPartitions { it =>
+          val queries = bQueries.value
+          val queriesT =
+            graft.functions.BatchCtxCentroidScore.transposeAll(queries, dim)
+          walkQueries(bcCtx.value, it, queries, queriesT, bcCent.value, dim, depth)
+        }
+        .toDF("query_id", "doc_id", "score")
+    } else {
+      val partsRdd = idx.contextCodesPartitioned(tenant, field, ctxRows, ctxBytes,
+        walkPartitionBytes(spark))
+      val bcProbes = spark.sparkContext.broadcast(qProbes)
+      val walked = partsRdd.mapPartitions { ctxIt =>
+        val queries = bQueries.value
+        val queriesT =
+          graft.functions.BatchCtxCentroidScore.transposeAll(queries, dim)
+        val cent = bcCent.value
+        val qps = bcProbes.value
+        ctxIt.flatMap(ctx =>
+          walkQueries(ctx, qps.iterator, queries, queriesT, cent, dim, depth))
+      }.toDF("query_id", "doc_id", "score")
+      // per-partition cuts are local top-depth supersets of the global
+      // cut, so one more groupTopK reproduces it bit-exactly
+      depth.fold(walked)(groupTopK(walked, _))
     }
   }
 
@@ -459,7 +535,7 @@ object BatchSearcher {
     // over-budget batch into an actionable error instead of a driver OOM
     // (each query row is ~nq x dim floats — 16 KiB at ColBERT shape — so
     // the default 16384-query cap is ~256 MiB of driver heap). Planning
-    // semantics shared with the single-query path via Searcher.queryPlan.
+    // semantics shared with the single-query path via Searcher.probes.
     val prof = new Prof(spark.conf.get(ProfileKey, "false").toBoolean)
     val maxQ = maxBatchQueries(spark)
     val qRows = prof("plan_queries_collect") {
@@ -475,24 +551,18 @@ object BatchSearcher {
       s"searchBatch received more than $maxQ queries " +
         s"(gate $MaxBatchQueriesKey): split the batch into multiple " +
         "searchBatch calls, or raise the gate if the driver has the heap")
-    // no cross-query memoization is possible (each VectorQuery instance is
-    // fresh and keys by identity); the cache arg just satisfies queryPlan.
-    // Queries plan independently (fresh per-query cache, stateless
-    // scoreBlock/topCentroids, per-call output arrays), and the matrix
-    // fills are the driver's own SIMD flops — 212 x (nq x K x dim) ran
-    // 0.6-0.8 s single-threaded per batch at the 10M shape (r17
-    // breakdown), so planning fans out across the driver's cores; the
-    // parallel map preserves input order.
+    // queries plan independently (stateless scoreBlock/topCentroids,
+    // per-call output arrays), and the matrix fills are the driver's own
+    // SIMD flops — 212 x (nq x K x dim) ran 0.6-0.8 s single-threaded per
+    // batch at the 10M shape (r17 breakdown), so planning fans out across
+    // the driver's cores; the parallel map preserves input order.
     val plans = prof("plan_probe_select") {
       import scala.collection.parallel.CollectionConverters._
       qRows.par.map { case (qid, toks) =>
-        implicit val perQuery: Searcher.PlanCache = scala.collection.mutable.Map.empty
-        val (_, probes) = Searcher.queryPlan(idx, VectorQuery(field, toks), opts)
-        (qid, toks, probes)
+        (qid, toks, Searcher.probes(idx, VectorQuery(field, toks), opts))
       }.seq.toIndexedSeq
     }
 
-    import spark.implicits._
     // per-query token vectors ride in ONE small broadcast (batch x nq x dim
     // floats, ~0.4 MiB for 212 queries) shared by the phase-1 walk and the
     // phase-2 rerank; the centroid matrix rides in the per-index cached
@@ -503,14 +573,12 @@ object BatchSearcher {
       spark.sparkContext.broadcast(
         plans.map { case (qid, toks, _) => qid -> toks.flatten }.toMap)
     }
-    val bcCent = idx.centroidBroadcast(field)
     // the probe lists ride in the task closures (batch x nProbe longs,
     // ~50 KiB for 212 queries — nothing corpus- or K-proportional)
     val qProbes = plans.map { case (qid, _, probes) => (qid, probes) }
 
     // broadcast-context gate: the stats are cached per index state — see
     // contextRelationStats
-    val ctxGateBytes = broadcastContextMaxBytes(spark)
     val (ctxRows, ctxBytes) = prof("gate_ctx_bytes") {
       contextRelationStats(idx, tenant, field)
     }
@@ -536,52 +604,9 @@ object BatchSearcher {
       else None
 
     val result = try {
-      val pool: DataFrame = if (ctxBytes <= ctxGateBytes) {
-        // under the gate: each walk task takes a slice of the queries and
-        // walks the broadcast snapshot's inverted view for each of them
-        val bcCtx = prof("ctx_bcast_build") {
-          idx.contextCodesBroadcast(tenant, field, ctxRows, ctxBytes,
-            ctxGateBytes)
-        }
-        // pack queries into ~2 x cores partitions: the per-task fixed cost
-        // (launch, bitmap allocation, per-partition query transpose) was
-        // ~40 % of the walk stage at one-task-per-query x 212; per-query
-        // work varies little on a clustered corpus, so coarse packing
-        // loses negligible balance
-        val walkParts = math.max(1, math.min(qProbes.size,
-          spark.sparkContext.defaultParallelism * 2))
-        spark.sparkContext.parallelize(qProbes, walkParts)
-          .mapPartitions { it =>
-            val queries = bQueries.value
-            val queriesT =
-              graft.functions.BatchCtxCentroidScore.transposeAll(queries, dim)
-            walkQueries(bcCtx.value, it, queries, queriesT, bcCent.value, dim,
-              poolDepth)
-          }
-          .toDF("query_id", "doc_id", "score")
-      } else {
-        // past the gate the snapshot is DOC-PARTITIONED across executors
-        // instead of replicated onto each; every query walks every
-        // partition's local inverted view, and the per-partition heap cuts
-        // merge through one partial-heap shuffle (<= partitions x queries x
-        // poolDepth rows)
-        val partsRdd = prof("ctx_part_build") {
-          idx.contextCodesPartitioned(tenant, field, ctxRows, ctxBytes,
-            walkPartitionBytes(spark))
-        }
-        val bcProbes = spark.sparkContext.broadcast(qProbes)
-        val walked = partsRdd.mapPartitions { ctxIt =>
-          val queries = bQueries.value
-          val queriesT =
-            graft.functions.BatchCtxCentroidScore.transposeAll(queries, dim)
-          val cent = bcCent.value
-          val qps = bcProbes.value
-          ctxIt.flatMap(ctx =>
-            walkQueries(ctx, qps.iterator, queries, queriesT, cent, dim, poolDepth))
-        }
-        // per-partition cuts are local top-depth supersets of the global
-        // cut, so one more groupTopK reproduces it bit-exactly
-        groupTopK(walked.toDF("query_id", "doc_id", "score"), poolDepth)
+      val pool = prof("ctx_snapshot_resolve") {
+        phase1(idx, tenant, field, (ctxRows, ctxBytes), bQueries, qProbes,
+          Some(poolDepth))
       }
 
       if (!opts.secondPass) pool

@@ -35,14 +35,11 @@ object Combiner extends Enumeration {
   val SUM, MAX, PRODUCT = Value
 }
 
-/** Phase-1 embedding scoring flavor: PLAID = colbert_centroid_score via
-  * plaid_similarity (scoring_methods.cpp:8-40); CODES = thresholded
-  * score_documents_by_codes (plaid.cpp:38-63). */
-object EmbeddingScoring extends Enumeration {
-  val PLAID, CODES = Value
-}
-
-/** reference defaults: lintdb/SearchOptions.h:23-38.
+/** reference defaults: lintdb/SearchOptions.h:23-38. Phase-1 always scores
+  * with colbert_centroid_score (plaid_similarity, scoring_methods.cpp:8-40);
+  * the reference's thresholded score_documents_by_codes variant
+  * (plaid.cpp:38-63) is kept only as [[graft.scoring.Plaid]]'s parity
+  * kernel, not as a search mode.
   *
   * Measured tuning guidance (10M docs / K=49152 / SQ8, 212 perturbed
   * self-retrieval qrels — COVERAGE.md r14 frontier + miss attribution):
@@ -55,12 +52,10 @@ object EmbeddingScoring extends Enumeration {
   * the reverse — (kTopCentroids=1, nProbe=8, numSecondPass=256) halved
   * the default config's latency at strictly better quality. */
 final case class SearchOptions(
-    centroidScoreThreshold: Float = 0.45f,
     kTopCentroids: Int = 2,
     numSecondPass: Int = 1024,
     nProbe: Int = 32,
     colbertField: String = "colbert",
-    embeddingScoring: EmbeddingScoring.Value = EmbeddingScoring.PLAID,
     /** phase-2 rerank on decompressed residuals (ColBERTScorer). Disable to
       * return phase-1 scores only. */
     secondPass: Boolean = true)

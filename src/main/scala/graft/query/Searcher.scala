@@ -10,37 +10,32 @@ import org.apache.spark.sql.functions._
   *
   *  - QueryNode -> DataFrame(doc_id, score) replaces QueryNode -> DocIterator
   *    (lintdb/query/QueryNode.cpp): Term = pruned scan of `scalars`,
-  *    Vector = centroid-pruned scan of `postings` + phase-1 scoring over
-  *    `context` codes, And = multi-way inner join on doc_id, Or = full-outer
-  *    union — Catalyst's sort-merge/broadcast joins replace the hand-built
-  *    merge iterators (DocIterator.cpp:136-322).
-  *  - Like the reference's iterator tree (which intersects BEFORE scoring,
-  *    QueryExecutor.cpp:21-26), And computes the candidate-id intersection
-  *    first and restricts each child's scoring to it, so phase-1 never
-  *    scores a doc a sibling filter would drop.
+  *    Vector = the shared phase-1 walk ([[BatchSearcher.phase1]]) over the
+  *    cached context-codes snapshot with one query and no cut, And =
+  *    multi-way inner join on doc_id, Or = full-outer union — Catalyst's
+  *    sort-merge/broadcast joins replace the hand-built merge iterators
+  *    (DocIterator.cpp:136-322).
+  *  - And computes the candidate-id intersection first and semi-joins each
+  *    child to it. A vector child's walk scores all of its candidates in
+  *    memory; the semi-join after the walk keeps the rows a sibling filter
+  *    allows (the reference intersects before scoring,
+  *    QueryExecutor.cpp:21-26 — the rows are the same).
   *  - Query planning (centroid selection, KnnNearestCentroids.cpp) happens
-  *    on the driver against the small centroid matrix; the per-query
-  *    (numQueryTokens x numCentroids) score matrix is broadcast, never
-  *    joined (SURVEY §7.5.3).
+  *    on the driver against the small centroid matrix; only the probe list
+  *    and the query tokens ship to the walk (SURVEY §7.5.3).
   *  - Two-phase ranking (QueryExecutor.cpp:14-71): phase-1 approximate
   *    scores for all candidates -> top num_second_pass -> phase-2 exact
   *    MaxSim on decompressed residuals (normalize=true, ColBERTScorer
   *    semantics: the exact score REPLACES the approximate one) -> top k ->
-  *    hydrate Stored fields from `docs`. Phase-1 reads ONLY the codes
-  *    column of `context` (columnar scan skips the residual bytes — the
-  *    index's largest column); the <= num_second_pass survivor ids are
-  *    driver-known after the cut, so phase-2 is a pruned context MULTIGET
-  *    (the same bounded-collect pattern as the <= k docs hydration),
-  *    decoded and rescored driver-locally exactly as the single-node
-  *    reference does.
+  *    hydrate Stored fields from `docs`. Phase-1 reads no table once the
+  *    snapshot is built (the snapshot holds codes only, never the residual
+  *    bytes — the index's largest column); the <= num_second_pass survivor
+  *    ids are driver-known after the cut, so phase-2 is a pruned context
+  *    MULTIGET (the same bounded-collect pattern as the <= k docs
+  *    hydration), decoded and rescored driver-locally exactly as the
+  *    single-node reference does.
   */
 object Searcher {
-
-  /** Per-search cache of driver-side query plans, keyed by vector-node
-    * identity: compileVector, postingCandidates and And's candidateIds all
-    * need the same (score matrix, probes) — computed once per leaf. */
-  private[graft] type PlanCache =
-    scala.collection.mutable.Map[VectorQuery, (Array[Float], Array[Long])]
 
   /** Upper bound (bytes, session conf) on the phase-2 rerank's driver-side
     * context multiget, estimated at PLAN time as
@@ -66,14 +61,16 @@ object Searcher {
     val spark = idx.spark
     val vectorNodes = collectVectors(root)
     val needRerank = opts.secondPass && vectorNodes.nonEmpty
-    implicit val plans: PlanCache = scala.collection.mutable.Map.empty
+    // one walk frame per vector leaf, read by And's candidate intersection
+    // and by the leaf's scoring alike
+    val leaves = vectorNodes.map(v => v -> vectorLeaf(idx, tenant, v, opts)).toMap
     // phase-2 reranks on ONE colbert context field (reference semantics:
     // ColBERTScorer reads context.colbert_context, Scorer.cpp:30-36) —
     // opts.colbertField if it is one of the query's vector fields, else the
     // first vector leaf; docs matched only by other children score 0
     val rerankNode = vectorNodes.find(_.field == opts.colbertField)
       .orElse(vectorNodes.headOption)
-    val phase1 = compile(idx, tenant, root, opts, restrict = None,
+    val phase1 = compile(idx, tenant, root, leaves, restrict = None,
       markFor = if (needRerank) rerankNode.map(_.field) else None)
 
     val top: Either[Seq[(Long, Double)], DataFrame] =
@@ -84,9 +81,9 @@ object Searcher {
         // driver-known ids — doc_id IN-list row-group pruning now, whole
         // doc_bucket directory pruning once context carries the bucket
         // level — instead of dragging every candidate's residual bytes
-        // through the phase-1 scan and top-k shuffle. At scale the residual
-        // column is the index's largest; phase-1 now never reads it (the
-        // columnar scan reads codes only), which is exactly the reference's
+        // through phase-1 and the top-k shuffle. At scale the residual
+        // column is the index's largest; phase-1 never reads it (the walk's
+        // snapshot holds codes only), which is exactly the reference's
         // shape: phase-1 over codes, phase-2 decompresses residuals for the
         // survivors only (QueryExecutor.cpp:14-71). The rescore itself is
         // driver-local — numSecondPass * tokens * dim flops, the same work
@@ -238,65 +235,50 @@ object Searcher {
 
   /** QueryNode -> DataFrame(doc_id, score[, vec_match]).
     *
-    * @param restrict candidate-id pushdown from an enclosing And: scoring is
-    *                 restricted to these doc ids (reference: the iterator
-    *                 tree enumerates the intersected candidates first)
+    * @param leaves   the walk frame of each vector leaf ([[vectorLeaf]])
+    * @param restrict candidate ids from an enclosing And: each child's rows
+    *                 are semi-joined to them (reference: the iterator tree
+    *                 enumerates the intersected candidates)
     * @param markFor  vector field whose leaf tags its rows `vec_match=true`.
     *                 The reference's phase-2 scorer reads the colbert
     *                 context from the ITERATOR's DocValues, so a doc matched
     *                 only by non-vector (or other-field) children reranks to
     *                 0.0 even though its context row exists in the table
     *                 (Scorer.cpp:23-28 — colbert field absent from dvs).
-    *                 The marker is 1 byte through the cut, replacing the old
-    *                 design that dragged the residual BYTES through phase-1
-    *                 just to preserve this null-means-zero semantics.
+    *                 The marker is 1 byte through the cut.
     */
-  def compile(idx: IndexIVF, tenant: Long, node: QueryNode, opts: SearchOptions,
-      restrict: Option[DataFrame] = None,
-      markFor: Option[String] = None)(
-      implicit plans: PlanCache = scala.collection.mutable.Map.empty): DataFrame =
-    node match {
-
-    case TermQuery(field, value) =>
-      val f = idx.schema.field(field)
-      val fid = idx.mapper.id(field)
-      val canonical = IndexIVF.canonicalValue(f, value)
-      // the probed value is driver-known, so its bucket is a STATIC
-      // partition filter: one directory in ValueBuckets is even listed
-      // (v4 layout), then value_str equality row-group-prunes inside it
-      restricted(idx.scalarsDf
-        .filter(col("tenant") === tenant && col("field") === fid &&
-          col("value_bucket") === IndexIVF.valueBucketOf(canonical) &&
-          col("value_str") === canonical)
-        .select(col("doc_id")).distinct(), restrict)
-        .withColumn("score", lit(1.0))
-
-    case RangeQuery(field, lo, hi) =>
-      val fid = idx.mapper.id(field)
-      restricted(idx.scalarsDf
-        .filter(col("tenant") === tenant && col("field") === fid &&
-          col("value_num").between(lo, hi))
-        .select(col("doc_id")).distinct(), restrict)
-        .withColumn("score", lit(1.0))
+  private def compile(idx: IndexIVF, tenant: Long, node: QueryNode,
+      leaves: Map[VectorQuery, DataFrame], restrict: Option[DataFrame],
+      markFor: Option[String]): DataFrame = node match {
 
     case v: VectorQuery =>
-      compileVector(idx, tenant, v, opts, restrict, markFor.contains(v.field))
+      val scored = restricted(leaves(v), restrict)
+      if (markFor.contains(v.field)) scored.withColumn("vec_match", lit(true))
+      else scored
 
     case AndQuery(children, comb) =>
-      // candidate intersection FIRST, then score each child on it
-      val cands = children.map(c => candidateIds(idx, tenant, c, opts))
+      // candidate intersection FIRST, then each child's rows semi-joined to it
+      val cands = children.map(c => candidateIds(idx, tenant, c, leaves))
         .reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
-      val scored = children.map(c => compile(idx, tenant, c, opts, Some(cands), markFor))
+      val scored = children.map(c => compile(idx, tenant, c, leaves, Some(cands), markFor))
       joinChildren(scored, "inner", comb, orMode = false)
 
     case OrQuery(children, comb) =>
-      val scored = children.map(c => compile(idx, tenant, c, opts, restrict, markFor))
+      val scored = children.map(c => compile(idx, tenant, c, leaves, restrict, markFor))
       joinChildren(scored, "full_outer", comb, orMode = true)
+
+    case filter @ (_: TermQuery | _: RangeQuery) =>
+      restricted(candidateIds(idx, tenant, filter, leaves), restrict)
+        .withColumn("score", lit(1.0))
   }
 
-  /** Candidate doc ids only — no scoring, no context join. */
+  /** Candidate doc ids only. A Term probes one value bucket of `scalars`
+    * (the probed value is driver-known, so its bucket is a STATIC partition
+    * filter: one directory in ValueBuckets is even listed, v4 layout, then
+    * value_str equality row-group-prunes inside it); a vector leaf's ids
+    * are its walk frame's. */
   private def candidateIds(idx: IndexIVF, tenant: Long, node: QueryNode,
-      opts: SearchOptions)(implicit plans: PlanCache): DataFrame = node match {
+      leaves: Map[VectorQuery, DataFrame]): DataFrame = node match {
     case TermQuery(field, value) =>
       val f = idx.schema.field(field)
       val fid = idx.mapper.id(field)
@@ -313,12 +295,12 @@ object Searcher {
           col("value_num").between(lo, hi))
         .select(col("doc_id")).distinct()
     case v: VectorQuery =>
-      postingCandidates(idx, tenant, v, opts)
+      leaves(v).select(col("doc_id"))
     case AndQuery(cs, _) =>
-      cs.map(c => candidateIds(idx, tenant, c, opts))
+      cs.map(c => candidateIds(idx, tenant, c, leaves))
         .reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
     case OrQuery(cs, _) =>
-      cs.map(c => candidateIds(idx, tenant, c, opts)).reduce(_ union _).distinct()
+      cs.map(c => candidateIds(idx, tenant, c, leaves)).reduce(_ union _).distinct()
   }
 
   /** Combine per-child (doc_id, score[, vec_match]) frames; the vec_match
@@ -357,45 +339,29 @@ object Searcher {
   private def restricted(df: DataFrame, restrict: Option[DataFrame]): DataFrame =
     restrict.map(r => df.join(r, Seq("doc_id"), "left_semi")).getOrElse(df)
 
-  /** Centroid-pruned candidate enumeration (the ANNIterator's posting-list
-    * union, QueryNode.cpp:59-77). */
-  private def postingCandidates(idx: IndexIVF, tenant: Long, v: VectorQuery,
-      opts: SearchOptions)(implicit plans: PlanCache): DataFrame = {
-    val fid = idx.mapper.id(v.field)
-    val (_, probes) = queryPlan(idx, v, opts)
-    // the bucket predicate prunes whole hive partition directories before
-    // any file opens; the centroid IN then row-group-prunes within them
-    val buckets = probes.map(IndexIVF.bucketOf).distinct
-    idx.postingsDf
-      .filter(col("tenant") === tenant && col("field") === fid &&
-        col("centroid_bucket").isin(buckets: _*) && col("centroid").isin(probes: _*))
-      .select(col("doc_id")).distinct()
-  }
-
-  /** Driver-side query planning: full (nq x nc) score matrix + probe list
-    * (KnnNearestCentroids.cpp:6-110, including the score>0 prune).
-    * Memoized per vector leaf within a search. */
-  private[graft] def queryPlan(idx: IndexIVF, v: VectorQuery, opts: SearchOptions)(
-      implicit plans: PlanCache): (Array[Float], Array[Long]) =
-    plans.getOrElseUpdate(v, computePlan(idx, v, opts))
-
-  private def computePlan(idx: IndexIVF, v: VectorQuery,
-      opts: SearchOptions): (Array[Float], Array[Long]) = {
+  /** Driver-side query planning (KnnNearestCentroids.cpp:6-110, including
+    * the score>0 prune): one SIMD-kernel block fill of the (nq x nc) score
+    * matrix — the matrix IS scoreBlock's output layout
+    * (CoarseQuantizer.scoreBlock) — then the probe list. */
+  private[graft] def probes(idx: IndexIVF, v: VectorQuery,
+      opts: SearchOptions): Array[Long] = {
     val cq = idx.coarse.getOrElse(v.field,
       throw new IllegalStateException(s"field ${v.field} is not trained"))
     val nq = v.queryTokens.length
     val nc = cq.numCentroids
-    // one SIMD-kernel block fill for the whole (nq x nc) matrix — the
-    // matrix IS scoreBlock's output layout (CoarseQuantizer.scoreBlock)
-    val dim = cq.dim
-    val flat = new Array[Float](nq * dim)
+    val m = cq.scoreBlock(flatQuery(v, cq.dim), nq)
+    topCentroids(m, nq, nc, math.min(opts.kTopCentroids, nc), opts.nProbe)
+  }
+
+  /** Row-major (nq x dim) query tokens, each checked against the field's dim. */
+  private def flatQuery(v: VectorQuery, dim: Int): Array[Float] = {
+    val flat = new Array[Float](v.queryTokens.length * dim)
     v.queryTokens.zipWithIndex.foreach { case (tok, i) =>
       require(tok.length == dim,
         s"query token has length ${tok.length}, expected dim $dim")
       System.arraycopy(tok, 0, flat, i * dim, dim)
     }
-    val m = cq.scoreBlock(flat, nq)
-    (m, topCentroids(m, nq, nc, math.min(opts.kTopCentroids, nc), opts.nProbe))
+    flat
   }
 
   /** Probe selection over the (nq x nc) score matrix: per query token keep
@@ -481,64 +447,20 @@ object Searcher {
       Array.range(0, n).sortBy(i => (-s(i), c(i))).map(c(_))
   }
 
-  /** The ANN leaf: candidates + phase-1 scoring via the broadcast
-    * query-x-centroid matrix over the doc's stored codes. */
-  private def compileVector(idx: IndexIVF, tenant: Long, v: VectorQuery,
-      opts: SearchOptions, restrict: Option[DataFrame], mark: Boolean)(
-      implicit plans: PlanCache): DataFrame = {
-    val spark = idx.spark
-    val fid = idx.mapper.id(v.field)
-    val cq = idx.coarse.getOrElse(v.field,
-      throw new IllegalStateException(s"field ${v.field} is not trained"))
-    val nc = cq.numCentroids
-    val nq = v.queryTokens.length
-    val dim = cq.dim
-    val (scoreMatrix, _) = queryPlan(idx, v, opts)
-
-    val candidates = restricted(postingCandidates(idx, tenant, v, opts), restrict)
-
-    // phase-1 scoring: the PLAID path is a native codegen'd expression —
-    // the query tokens (nq x dim, ~16 KB) ride as a plan constant, the
-    // centroid matrix via the per-index cached broadcast, and each
-    // (token, code) dot is computed lazily per candidate row (bit-identical
-    // to the old precomputed nq x nc matrix, whose plan-constant size grew
-    // with K — see CentroidScore's scaladoc); the CODES variant stays a UDF
-    // (broadcast thresholded per-centroid maxima)
-    val scoreCol: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      opts.embeddingScoring match {
-        case EmbeddingScoring.PLAID =>
-          val queryFlat = new Array[Float](nq * dim)
-          v.queryTokens.zipWithIndex.foreach { case (tok, i) =>
-            System.arraycopy(tok, 0, queryFlat, i * dim, dim)
-          }
-          val bcCent = idx.centroidBroadcast(v.field)
-          codes => graft.functions.CentroidScore(codes, queryFlat, bcCent, nq, dim)
-        case EmbeddingScoring.CODES =>
-          val maxByCentroid = Plaid.maxScoreByCentroid(
-            Array.tabulate(nq * nc)(i => i % nc), scoreMatrix, nc)
-          val bMax = spark.sparkContext.broadcast(maxByCentroid)
-          val u = udf((codes: Seq[Long]) =>
-            Plaid.scoreDocumentsByCodes(bMax.value, codes.toArray,
-              opts.centroidScoreThreshold).toDouble)
-          codes => u(codes)
-      }
-
-    // phase-1 reads doc_codes ONLY — the residual bytes (the index's
-    // largest column) are never selected, so the columnar scan skips them
-    // entirely; phase-2 multigets them for the <= numSecondPass survivors.
-    // The candidate set (corpus/K x nProbe ids — corpus-independent under
-    // the IVF K ~ sqrt(N) discipline) broadcasts INTO the context scan and
-    // the duplicate-add dedup runs after the join over candidate-sized
-    // rows, so the corpus' codes column never crosses an exchange (the old
-    // shape pre-deduplicated the WHOLE context table — a corpus-sized
-    // shuffle per search)
-    val ctx = idx.contextDf
-      .filter(col("tenant") === tenant && col("field") === fid)
-      .select(col("doc_id"), col("doc_codes"))
-    val scored = ctx.join(broadcast(candidates), Seq("doc_id"))
-      .dropDuplicates("doc_id")
-    scored.select(col("doc_id") +: scoreCol(col("doc_codes")).as("score") +:
-      (if (mark) Seq(lit(true).as("vec_match")) else Seq.empty): _*)
+  /** The ANN leaf (the ANNIterator, QueryNode.cpp:59-77): the shared
+    * phase-1 walk ([[BatchSearcher.phase1]]) with this one query and no
+    * cut — every candidate of the probed centroids, scored once, as a lazy
+    * (doc_id, score) frame. The walk runs in executor tasks over the
+    * cached context snapshot; nothing per document reaches the driver. */
+  private def vectorLeaf(idx: IndexIVF, tenant: Long, v: VectorQuery,
+      opts: SearchOptions): DataFrame = {
+    val dim = idx.schema.field(v.field).parameters.dimensions
+    val probed = probes(idx, v, opts)
+    val query = idx.spark.sparkContext.broadcast(Map(0L -> flatQuery(v, dim)))
+    BatchSearcher.phase1(idx, tenant, v.field,
+      BatchSearcher.contextRelationStats(idx, tenant, v.field), query,
+      Seq(0L -> probed), depth = None)
+      .select(col("doc_id"), col("score"))
   }
 
   private def collectVectors(node: QueryNode): Seq[VectorQuery] = node match {

@@ -3,16 +3,14 @@ package graft
 import graft.functions.{BatchCtxCentroidScore, CentroidScore, CtxCodes}
 import graft.quantizers.CoarseQuantizer
 import graft.scoring.Plaid
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The native phase-1 expression computes each (token, code) dot lazily
-  * against the broadcast centroid matrix — it must be bit-identical to the
-  * Plaid kernel over a precomputed CoarseQuantizer.scoreBlock matrix (the
-  * plan-constant design it replaced), and must run inside whole-stage
-  * codegen. */
+/** The phase-1 kernel computes each (token, code) dot lazily against the
+  * centroid matrix — it must be bit-identical to the Plaid kernel over a
+  * precomputed CoarseQuantizer.scoreBlock matrix, its SIMD and scalar
+  * entries must agree bit-for-bit at every width, and the CSR snapshot it
+  * scores must reproduce the context relation. */
 class CentroidScoreSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
 
   val rnd = new scala.util.Random(11L)
   val nq = 4
@@ -22,30 +20,41 @@ class CentroidScoreSpec extends AnyFunSuite {
   val queryFlat = Array.fill(nq * dim)(rnd.nextFloat() * 2 - 1)
   // the precomputed-matrix twin the lazy dot must reproduce bit-exactly
   lazy val matrix = new CoarseQuantizer(centroids).scoreBlock(queryFlat, nq)
-  lazy val bcCent = {
+  lazy val cent: Array[Float] = {
     val flat = new Array[Float](nc * dim)
     centroids.zipWithIndex.foreach { case (c, i) =>
       System.arraycopy(c, 0, flat, i * dim, dim)
     }
-    spark.sparkContext.broadcast(flat)
+    flat
   }
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  /** ScoreKernel.scoreCodesTRange, called with NO width gate so the vector
+    * body and its scalar tail run at every nq (the test JVM loads the
+    * jdk.incubator.vector module, build.sbt). */
+  private lazy val simdRange: java.lang.reflect.Method =
+    Class.forName("graft.functions.ScoreKernel").getMethod("scoreCodesTRange",
+      classOf[Array[Long]], classOf[Int], classOf[Int], classOf[Array[Float]],
+      classOf[Int], classOf[Array[Float]], classOf[Int])
+  private def simd(codes: Array[Long], from: Int, until: Int, qt: Array[Float],
+      nq: Int, cent: Array[Float], dim: Int): Double =
+    simdRange.invoke(null, codes, Int.box(from), Int.box(until), qt, Int.box(nq),
+      cent, Int.box(dim)).asInstanceOf[Double]
 
   test("lazy dot matches Plaid over a scoreBlock matrix on random code lists") {
-    import spark.implicits._
-    val rows = (0 until 200).map { i =>
-      (i.toLong, Seq.fill(1 + rnd.nextInt(12))(rnd.nextInt(nc).toLong))
-    }
-    val df = rows.toDF("id", "codes")
-      .select(col("id"), CentroidScore(col("codes"), queryFlat, bcCent, nq, dim).as("s"))
-    val got = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    rows.foreach { case (id, codes) =>
-      val expected = Plaid.colbertCentroidScore(codes.toArray, matrix, nq, nc).toDouble
-      assert(got(id) == expected, s"row $id")
+    val qt = CentroidScore.transposeQuery(queryFlat, dim)
+    (0 until 200).foreach { i =>
+      val codes = Array.fill(1 + rnd.nextInt(12))(rnd.nextInt(nc).toLong)
+      val expected = Plaid.colbertCentroidScore(codes, matrix, nq, nc).toDouble
+      assert(CentroidScore.computeDotLRange(codes, 0, codes.length, queryFlat,
+        cent, nq, dim) == expected, s"scalar row $i")
+      assert(CentroidScore.computeDotAutoLRange(codes, 0, codes.length, queryFlat,
+        qt, cent, nq, dim) == expected, s"auto row $i")
     }
   }
 
-  test("SIMD token-lane kernel (computeDotT) is bit-identical to computeDot " +
-      "across widths, tails, and NaN") {
+  test("SIMD kernel (scoreCodesTRange) matches computeDotLRange bit-for-bit") {
     // nq sweeps below one vector width (pure scalar tail), exactly at, and
     // past it (vector body + tail); the NaN case pins the blend-not-max
     // choice: a NaN dot must KEEP the running max, as the scalar `>` does
@@ -54,31 +63,25 @@ class CentroidScoreSpec extends AnyFunSuite {
       val ncv = 16
       val cent = Array.fill(ncv * dimv)(r2.nextFloat() * 2 - 1)
       val q = Array.fill(nqv * dimv)(r2.nextFloat() * 2 - 1)
-      val codes = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.fill(5)(r2.nextInt(ncv).toLong))
-      val old = CentroidScore.computeDot(codes, q, cent, nqv, dimv)
-      val neu = CentroidScore.computeDotT(codes,
-        CentroidScore.transposeQuery(q, dimv), cent, nqv, dimv)
-      assert(java.lang.Double.doubleToRawLongBits(old) ==
-        java.lang.Double.doubleToRawLongBits(neu),
-        s"nq=$nqv dim=$dimv: $old vs $neu")
+      val codes = Array.fill(5)(r2.nextInt(ncv).toLong)
+      val scalar = CentroidScore.computeDotLRange(codes, 0, 5, q, cent, nqv, dimv)
+      val vector = simd(codes, 0, 5, CentroidScore.transposeQuery(q, dimv), nqv,
+        cent, dimv)
+      assert(bits(scalar) == bits(vector), s"nq=$nqv dim=$dimv: $scalar vs $vector")
     }
     // NaN in one query token's dims: both paths must agree bit-for-bit
     val dimn = 8; val nqn = 9; val ncn = 4
     val cent = Array.fill(ncn * dimn)(1f)
     val q = Array.fill(nqn * dimn)(1f)
     q(3 * dimn + 2) = Float.NaN // token 3 produces NaN dots
-    val codes = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array(0L, 1L, 2L))
-    val old = CentroidScore.computeDot(codes, q, cent, nqn, dimn)
-    val neu = CentroidScore.computeDotT(codes,
-      CentroidScore.transposeQuery(q, dimn), cent, nqn, dimn)
-    assert(java.lang.Double.doubleToRawLongBits(old) ==
-      java.lang.Double.doubleToRawLongBits(neu), s"NaN case: $old vs $neu")
+    val codes = Array(0L, 1L, 2L)
+    val scalar = CentroidScore.computeDotLRange(codes, 0, 3, q, cent, nqn, dimn)
+    val vector = simd(codes, 0, 3, CentroidScore.transposeQuery(q, dimn), nqn,
+      cent, dimn)
+    assert(bits(scalar) == bits(vector), s"NaN case: $scalar vs $vector")
   }
 
-  test("long[] twins (computeDotAutoL/computeDotL) are bit-identical to " +
-      "the ArrayData originals across widths") {
+  test("computeDotAutoLRange is bit-identical to computeDotLRange at any width") {
     val r3 = new scala.util.Random(31L)
     for (nqv <- Seq(1, 4, 16, 32, 33); dimv <- Seq(4, 128)) {
       val ncv = 16
@@ -86,15 +89,9 @@ class CentroidScoreSpec extends AnyFunSuite {
       val q = Array.fill(nqv * dimv)(r3.nextFloat() * 2 - 1)
       val qt = CentroidScore.transposeQuery(q, dimv)
       val raw = Array.fill(7)(r3.nextInt(ncv).toLong)
-      val ad = new org.apache.spark.sql.catalyst.util.GenericArrayData(raw)
-      val viaAd = CentroidScore.computeDotAuto(ad, q, qt, cent, nqv, dimv)
-      val viaL = CentroidScore.computeDotAutoL(raw, q, qt, cent, nqv, dimv)
-      assert(java.lang.Double.doubleToRawLongBits(viaAd) ==
-        java.lang.Double.doubleToRawLongBits(viaL), s"auto nq=$nqv dim=$dimv")
-      val scalarAd = CentroidScore.computeDot(ad, q, cent, nqv, dimv)
-      val scalarL = CentroidScore.computeDotL(raw, q, cent, nqv, dimv)
-      assert(java.lang.Double.doubleToRawLongBits(scalarAd) ==
-        java.lang.Double.doubleToRawLongBits(scalarL), s"scalar nq=$nqv dim=$dimv")
+      val auto = CentroidScore.computeDotAutoLRange(raw, 0, 7, q, qt, cent, nqv, dimv)
+      val scalar = CentroidScore.computeDotLRange(raw, 0, 7, q, cent, nqv, dimv)
+      assert(bits(auto) == bits(scalar), s"nq=$nqv dim=$dimv")
     }
   }
 
@@ -113,19 +110,16 @@ class CentroidScoreSpec extends AnyFunSuite {
       val post = Array.fill(5)(r4.nextInt(ncv).toLong)
       val flat = pre ++ mid ++ post
       val from = pre.length; val until = pre.length + mid.length
-      val viaCopy = CentroidScore.computeDotAutoL(
-        java.util.Arrays.copyOfRange(flat, from, until), q, qt, cent, nqv, dimv)
+      val viaCopy = CentroidScore.computeDotAutoLRange(
+        mid.clone(), 0, len, q, qt, cent, nqv, dimv)
       val viaRange = CentroidScore.computeDotAutoLRange(
         flat, from, until, q, qt, cent, nqv, dimv)
-      assert(java.lang.Double.doubleToRawLongBits(viaCopy) ==
-        java.lang.Double.doubleToRawLongBits(viaRange),
-        s"auto-range nq=$nqv dim=$dimv len=$len")
-      val scalarCopy = CentroidScore.computeDotL(
-        java.util.Arrays.copyOfRange(flat, from, until), q, cent, nqv, dimv)
+      assert(bits(viaCopy) == bits(viaRange), s"auto-range nq=$nqv dim=$dimv len=$len")
+      val scalarCopy = CentroidScore.computeDotLRange(
+        mid.clone(), 0, len, q, cent, nqv, dimv)
       val scalarRange = CentroidScore.computeDotLRange(
         flat, from, until, q, cent, nqv, dimv)
-      assert(java.lang.Double.doubleToRawLongBits(scalarCopy) ==
-        java.lang.Double.doubleToRawLongBits(scalarRange),
+      assert(bits(scalarCopy) == bits(scalarRange),
         s"scalar-range nq=$nqv dim=$dimv len=$len")
     }
   }
@@ -193,7 +187,6 @@ class CentroidScoreSpec extends AnyFunSuite {
     val docs = Array.tabulate(50)(i =>
       (i.toLong, Array.fill(1 + rnd.nextInt(6))(rnd.nextInt(nc).toLong)))
     val snap = CtxCodes.build(docs)
-    val cent = bcCent.value
     docs.foreach { case (id, codes) =>
       val pos = CtxCodes.indexOf(snap, id)
       Seq(7L -> Plaid.colbertCentroidScore(codes, matrix, nq, nc),
@@ -204,25 +197,5 @@ class CentroidScoreSpec extends AnyFunSuite {
           assert(got == expected.toDouble, s"doc $id qid $qid")
       }
     }
-  }
-
-  test("expression stays inside WholeStageCodegen") {
-    // a range source (a local Seq constant-folds to LocalTableScan)
-    val df = spark.range(100)
-      .select(CentroidScore(
-        sequence(lit(0L), col("id") % (nc - 1)), queryFlat, bcCent, nq, dim).as("s"))
-    val plan = df.queryExecution.executedPlan.toString
-    // the `*(n)` operator prefix marks WholeStageCodegen participation
-    assert(plan.contains("*(1) Project [graft_centroid_score"), plan)
-    assert(df.agg(sum(col("s"))).collect().head.getDouble(0) != 0.0)
-  }
-
-  test("null codes yield null score (null-intolerant)") {
-    import spark.implicits._
-    val df = Seq((1L, Option.empty[Seq[Long]]), (2L, Some(Seq(0L))))
-      .toDF("id", "codes")
-      .select(col("id"), CentroidScore(col("codes"), queryFlat, bcCent, nq, dim).as("s"))
-    val rows = df.collect().map(r => r.getLong(0) -> r.isNullAt(1)).toMap
-    assert(rows(1L) && !rows(2L))
   }
 }

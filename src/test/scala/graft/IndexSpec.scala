@@ -88,7 +88,7 @@ class IndexSpec extends AnyFunSuite {
       "end to end") {
     // 5 docs' tokens concatenated = 25 query tokens — past any preferred
     // species width (16 lanes on AVX-512), so the e2e search exercises the
-    // computeDotAuto SIMD branch, not just the parity spec's direct calls
+    // computeDotAutoLRange SIMD branch, not just the parity spec's direct calls
     val wide = (0L until 5L).flatMap(d => corpus(d)).map(_.toArray).toArray
     assert(wide.length >= 16)
     val idx = freshIndex(QuantizerKind.NONE)

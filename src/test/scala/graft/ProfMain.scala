@@ -925,57 +925,6 @@ object ProfMain {
           }
         }
 
-      case "slice_copy" =>
-        // r16 verdict item 5 receipt: the snapshot phase-1 path scored each
-        // (query, doc) pair by copyOfRange-ing the doc's codes out of the
-        // CSR flat array before the kernel — at width 120 that is ~1 KiB of
-        // allocation per scored pair. A/B of copy-then-score vs the r17
-        // in-place range entry (scoreCodesTRange) at ColBERT widths; both
-        // sides run the identical kernel, so the delta is purely the
-        // per-pair copy + allocation. args: [tpd=120] [nq=32] [pairs=20000]
-        import graft.functions.CentroidScore
-        val dimS = 128
-        val tpdS = args.lift(1).map(_.toInt).getOrElse(120)
-        val nqS = args.lift(2).map(_.toInt).getOrElse(32)
-        val pairsS = args.lift(3).map(_.toInt).getOrElse(20000)
-        val ncS = 1024
-        val rndS = new scala.util.Random(3)
-        val centS = Array.fill(ncS * dimS)(rndS.nextFloat() * 2f - 1f)
-        val qS = Array.fill(nqS * dimS)(rndS.nextFloat() * 2f - 1f)
-        val qtS = CentroidScore.transposeQuery(qS, dimS)
-        val nDocsS = 4096
-        val flatS = Array.fill(nDocsS * tpdS)(rndS.nextInt(ncS).toLong)
-        val offS = Array.tabulate(nDocsS + 1)(_ * tpdS)
-        def viaCopy(n: Int): Double = {
-          var s = 0.0; var i = 0
-          while (i < n) {
-            val d = i % nDocsS
-            val codes = java.util.Arrays.copyOfRange(flatS, offS(d), offS(d + 1))
-            s += CentroidScore.computeDotAutoL(codes, qS, qtS, centS, nqS, dimS)
-            i += 1
-          }
-          s
-        }
-        def viaRange(n: Int): Double = {
-          var s = 0.0; var i = 0
-          while (i < n) {
-            val d = i % nDocsS
-            s += CentroidScore.computeDotAutoLRange(flatS, offS(d), offS(d + 1),
-              qS, qtS, centS, nqS, dimS)
-            i += 1
-          }
-          s
-        }
-        // FULL-SIZE warmup reps (the shared Vector-API kernel's first
-        // full-size call runs ~8x slow — see assign_twolevel's pattern)
-        (1 to 2).foreach { _ => viaCopy(pairsS); viaRange(pairsS) }
-        (1 to 3).foreach { i =>
-          var a = 0.0; var b = 0.0
-          time(f"score w$tpdS%d nq=$nqS%d copy  #$i ($pairsS%d pairs)") { a = viaCopy(pairsS) }
-          time(f"score w$tpdS%d nq=$nqS%d range #$i ($pairsS%d pairs)") { b = viaRange(pairsS) }
-          assert(a == b, s"copy/range diverged: $a vs $b")
-        }
-
       case "batch_frontier" =>
         // r13 verdict items 2/3/7 in one harness: per-(kTopCentroids,
         // nProbe) config on the production-shaped index, record (a) mean
@@ -1250,8 +1199,7 @@ object ProfMain {
           numSecondPass = nspG)
         // per-query probe sets (the same driver planning searchBatch runs)
         val probeSets: Array[Set[Long]] = qToksG.map { toks =>
-          implicit val pc: Searcher.PlanCache = scala.collection.mutable.Map.empty
-          Searcher.queryPlan(idxG, VectorQuery("colbert", toks), optsG)._2.toSet
+          Searcher.probes(idxG, VectorQuery("colbert", toks), optsG).toSet
         }
         def queriesDf(ids: Seq[Int]) = ids
           .map(i => (i.toLong, qToksG(i).map(_.toSeq).toSeq)).toSeq
@@ -2180,47 +2128,6 @@ object ProfMain {
               rq.successAt5(graft.core.QuantizerKind.BINARIZER, opts))
             println(f"[prof] pq_quality $v%-10s success@5 = $s%.4f")
           case other => sys.error(s"unknown pq_quality variant $other")
-        }
-      case "score_kernel" =>
-        // phase-1 per-candidate kernel A/B at REAL ColBERT width (nq=32,
-        // dim=128) and at the narrow profiling shape (nq=4): scalar
-        // computeDot vs the token-lane SIMD computeDotT (bit-identical,
-        // CentroidScoreSpec). args: [rows]
-        import graft.functions.CentroidScore
-        val rows = args.lift(1).map(_.toInt).getOrElse(200000)
-        // widths arg (default all): running ONE width per JVM isolates
-        // cross-species type-profile pollution — mixing vector species in
-        // a JVM megamorphizes the Vector API's shared virtual sites
-        val widths = args.lift(2).map(_.split(",").map(_.toInt).toSeq)
-          .getOrElse(Seq(4, 8, 16, 32))
-        val rndS = new scala.util.Random(5)
-        val dimS = 128; val ncS = 1024
-        val cent = Array.fill(ncS * dimS)(rndS.nextFloat() * 2 - 1)
-        widths.foreach { nqS =>
-          val q = Array.fill(nqS * dimS)(rndS.nextFloat() * 2 - 1)
-          val qt = CentroidScore.transposeQuery(q, dimS)
-          val codeRows = Array.fill(rows)(
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(
-              Array.fill(4)(rndS.nextInt(ncS).toLong)))
-          // warmup both (C2 + vector species resolution)
-          (0 until 20000).foreach { i =>
-            CentroidScore.computeDot(codeRows(i % rows), q, cent, nqS, dimS)
-            CentroidScore.computeDotT(codeRows(i % rows), qt, cent, nqS, dimS)
-          }
-          (1 to 3).foreach { rep =>
-            var s1 = 0.0; var s2 = 0.0
-            val t0 = System.nanoTime()
-            var i = 0
-            while (i < rows) { s1 += CentroidScore.computeDot(codeRows(i), q, cent, nqS, dimS); i += 1 }
-            val t1 = System.nanoTime()
-            i = 0
-            while (i < rows) { s2 += CentroidScore.computeDotT(codeRows(i), qt, cent, nqS, dimS); i += 1 }
-            val t2 = System.nanoTime()
-            require(s1 == s2, s"kernels diverged: $s1 vs $s2")
-            println(f"[prof] nq=$nqS #$rep scalar ${(t1 - t0) / 1e3 / rows}%6.3f us/row  " +
-              f"simd ${(t2 - t1) / 1e3 / rows}%6.3f us/row  " +
-              f"speedup ${(t1 - t0).toDouble / (t2 - t1)}%5.2f x")
-          }
         }
       case "topk_heap" =>
         // insert-path A/B for the TopKHeap membership dedup (r13 verdict
