@@ -1107,7 +1107,10 @@ final class IndexIVF private (
   /** Run write actions concurrently ACROSS tables, sequentially WITHIN a
     * table (two appends to one directory would race on the shared Hadoop
     * committer staging dir). The first failure propagates after every lane
-    * completes or fails. */
+    * completes or fails. Each lane runs its jobs under the caller's job
+    * group: a pooled thread otherwise keeps the Spark local properties of
+    * whoever created it, so the lanes' jobs would be attributed to (and
+    * cancelled with) a stale group. */
   private def runConcurrently(actions: Seq[(String, () => Unit)]): Unit =
     if (actions.length <= 1) actions.foreach(_._2.apply())
     else {
@@ -1115,8 +1118,19 @@ final class IndexIVF private (
       import scala.concurrent.duration.Duration
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.global
+      val sc = spark.sparkContext
+      val groupKeys = Seq("spark.jobGroup.id", "spark.job.description",
+        "spark.job.interruptOnCancel")
+      val callerGroup = groupKeys.map(key => key -> sc.getLocalProperty(key))
+      def withGroup(props: Seq[(String, String)]): Unit =
+        props.foreach { case (key, v) => sc.setLocalProperty(key, v) }
       val lanes = actions.groupBy(_._1).values.toSeq.map(_.map(_._2))
-      val futs = lanes.map(lane => Future(lane.foreach(_.apply())))
+      val futs = lanes.map(lane => Future {
+        val poolGroup = groupKeys.map(key => key -> sc.getLocalProperty(key))
+        withGroup(callerGroup)
+        try lane.foreach(_.apply())
+        finally withGroup(poolGroup)
+      })
       // await each so every job finishes (or fails) before add() returns
       val results = futs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
       results.collectFirst { case scala.util.Failure(e) => throw e }

@@ -354,7 +354,8 @@ object PointStore {
 
   /** Per-JVM multiget segment accounting (profiling aid — meaningful in
     * local mode where executors share the driver JVM; in cluster mode the
-    * adders stay executor-local and read 0 on the driver). Nanoseconds. */
+    * adders stay executor-local and read 0 on the driver). Nanoseconds;
+    * `io` includes preparing each record's scorer (the residual decode). */
   private[graft] object MgProf {
     val idxNs = new java.util.concurrent.atomic.LongAdder
     val ioNs = new java.util.concurrent.atomic.LongAdder
@@ -373,12 +374,16 @@ object PointStore {
 
   /** Score the pooled (query_id, doc_id) pairs against the store: one task
     * per touched bucket; each looks up its ids, reads only the wanted
-    * records (gap-coalesced positioned reads), and evaluates `score` on
-    * the raw residual bytes. Pairs whose doc has no record are dropped
-    * (inner-join semantics). Returns (query_id, doc_id, score) rows. */
+    * records (gap-coalesced positioned reads), prepares `scorer` once per
+    * record from its raw residual bytes, and scores each of the record's
+    * pairs by query_id. Pairs whose doc has no record are dropped
+    * (inner-join semantics). Returns the lazy (query_id, doc_id, score)
+    * stream per task; batch phase-2 keeps a per-query top-k over each
+    * task's stream before anything leaves the task. */
   def multigetScore(spark: SparkSession, dir: String, buckets: Int,
       pairs: Array[(Long, Long)],
-      score: (Long, Long, Array[Byte]) => Double): org.apache.spark.sql.DataFrame = {
+      scorer: Array[Byte] => Long => Double)
+      : org.apache.spark.rdd.RDD[(Long, Long, Double)] = {
     val gap = coalesceGap(spark)
     // the pool rides in ONE broadcast of primitive arrays, NOT in the
     // parallelized collection: a ParallelCollectionRDD's data is part of
@@ -397,7 +402,7 @@ object PointStore {
     // every touched bucket)
     val slices = math.max(1, math.min(groups.size,
       spark.sparkContext.defaultParallelism * 4))
-    val rdd = spark.sparkContext
+    spark.sparkContext
       .parallelize(groups.keys.toSeq.sorted, slices)
       .flatMap { bucket =>
         val tTask0 = System.nanoTime()
@@ -421,7 +426,7 @@ object PointStore {
               Some((id, off, (end - off).toInt))
             }
           }
-          val byId = new java.util.HashMap[Long, Array[Byte]](found.length * 2)
+          val byId = new java.util.HashMap[Long, Long => Double](found.length * 2)
           val tIo0 = System.nanoTime()
           if (found.nonEmpty) {
             // coalesce reads: wanted records are offset-sorted (the file
@@ -449,7 +454,7 @@ object PointStore {
                 val resLen = bb.getInt
                 val res = new Array[Byte](resLen)
                 bb.get(res)
-                byId.put(id, res)
+                byId.put(id, scorer(res))
                 k += 1
               }
               i = j + 1
@@ -458,13 +463,12 @@ object PointStore {
           MgProf.ioNs.add(System.nanoTime() - tIo0)
           val tSc0 = System.nanoTime()
           val out = new scala.collection.mutable.ArrayBuffer[
-            org.apache.spark.sql.Row](bQids.length)
+            (Long, Long, Double)](bQids.length)
           var i = 0
           while (i < bQids.length) {
             val qid = bQids(i); val did = bDids(i)
-            val res = byId.get(did)
-            if (res != null)
-              out += org.apache.spark.sql.Row(qid, did, score(qid, did, res))
+            val score = byId.get(did)
+            if (score != null) out += ((qid, did, score(qid)))
             i += 1
           }
           MgProf.scoreNs.add(System.nanoTime() - tSc0)
@@ -474,12 +478,5 @@ object PointStore {
           } finally in.close()
         }
       }
-    spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("score",
-        org.apache.spark.sql.types.DoubleType, nullable = true))))
   }
 }

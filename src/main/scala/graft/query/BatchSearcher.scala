@@ -4,7 +4,6 @@ import graft.functions.TopKHeap
 import graft.index.IndexIVF
 import graft.scoring.Plaid
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Batch vector search: amortizes Spark job overhead across a whole set of
@@ -25,8 +24,10 @@ import org.apache.spark.sql.functions._
   *    state;
   *  - phase-2: the collected pool's residuals are multigot — a pruned
   *    `doc_id IN (...)` context scan for a small pool, the
-  *    [[graft.index.PointStore]] past [[MaxDocIdInListKey]] — and reranked;
-  *  - per-query top-k is a row_number window partitioned by query_id.
+  *    [[graft.index.PointStore]] past [[MaxDocIdInListKey]] — and reranked
+  *    in the tasks that read them, each keeping one bounded heap per query;
+  *  - the driver merges those heaps into the per-query top-k and returns
+  *    it as a local frame.
   */
 object BatchSearcher {
 
@@ -67,7 +68,7 @@ object BatchSearcher {
     * `> numSecondPass` enables: the phase-1 heap keeps this many
     * candidates per query, and the driver-side pool cut keeps only
     * numSecondPass of them UNLESS the score distribution at the boundary
-    * is saturated — the relative score spread across [[NspTieWindow]]
+    * is saturated — the relative score spread across [[NspTieSpan]]
     * ranks around the cut falls below [[NspTieEpsKey]] — in which case
     * that query's pool escalates to this bound. Phase-2 cost grows only
     * for queries whose cut was provably arbitrary. Default 0 = off: the
@@ -121,7 +122,7 @@ object BatchSearcher {
 
   /** Ranks inspected on each side of the cut boundary by the saturation
     * detector. */
-  val NspTieWindow = 8
+  val NspTieSpan = 8
 
   /** Is the score distribution saturated at rank `base`? `scores` must be
     * sorted descending. True when the relative spread from the TOP-window
@@ -142,8 +143,8 @@ object BatchSearcher {
     val n = scores.length
     if (n <= base) false
     else {
-      val hi = scores(math.max(0, math.min(NspTieWindow, base) - 1))
-      val lo = scores(math.min(n - 1, base + NspTieWindow - 1))
+      val hi = scores(math.max(0, math.min(NspTieSpan, base) - 1))
+      val lo = scores(math.min(n - 1, base + NspTieSpan - 1))
       val ref = math.max(math.abs(scores(base - 1)), 1e-12)
       (hi - lo) / ref < eps
     }
@@ -456,9 +457,10 @@ object BatchSearcher {
     * 0.000 s): the centroid-matrix broadcast, the context snapshot phase-1
     * walks — [[IndexIVF.contextCodesBroadcast]] under the
     * [[BroadcastContextMaxBytesKey]] gate, [[IndexIVF
-    * .contextCodesPartitioned]] past it, inverted views materialized — and
-    * the phase-2 [[graft.index.PointStore]]. Call once at open for
-    * latency-sensitive serving. Idempotent until the next mutation. */
+    * .contextCodesPartitioned]] past it, inverted views materialized — and,
+    * when the index holds more docs than [[MaxDocIdInListKey]], the phase-2
+    * [[graft.index.PointStore]]. Call once at open for latency-sensitive
+    * serving. Idempotent until the next mutation. */
   def warmBatchCaches(idx: IndexIVF, tenant: Long, field: String): Unit = {
     val spark = idx.spark
     idx.centroidBroadcast(field)
@@ -467,10 +469,16 @@ object BatchSearcher {
     // is a distributed bucketed write, the snapshot build a gated driver
     // collect + CSR (+ broadcast) or a partitioned shuffle — independent
     // derived state, each behind its own build lock, so the warm wall is
-    // max(build, build) instead of their sum. BatchSearchSpec pins warmed
-    // == unwarmed rows and the jobless idempotent re-warm.
-    val store = new SpeculativeBuild("graft-warm-pointstore",
-      () => idx.pointStore(tenant, field, Some(rows)))
+    // max(build, build) instead of their sum. The store is built only when
+    // a pool can reach it: a pool holds at most `rows` distinct ids, and
+    // pools within the IN-list threshold never read the store.
+    // BatchSearchSpec pins warmed == unwarmed rows and the jobless
+    // idempotent re-warm.
+    val store =
+      if (rows > maxDocIdInList(spark))
+        Some(new SpeculativeBuild("graft-warm-pointstore",
+          () => idx.pointStore(tenant, field, Some(rows))))
+      else None
     try {
       val gate = broadcastContextMaxBytes(spark)
       if (bytes <= gate) {
@@ -485,9 +493,8 @@ object BatchSearcher {
           walkPartitionBytes(spark))
           .foreachPartition(_.foreach { ctx => ctx.inverted; () })
       }
-    } catch { case e: Throwable => store.release(Some(e)); throw e }
-    store.await()
-    ()
+    } catch { case e: Throwable => store.foreach(_.release(Some(e))); throw e }
+    store.foreach(_.await())
   }
 
   /** groupBy(query_id) -> bounded-heap top-nsp -> explode back to
@@ -505,6 +512,121 @@ object BatchSearcher {
       .select(col("query_id"), explode(col("topk")).as("e"))
       .select(col("query_id"), col("e.doc_id").as("doc_id"),
         col("e.score").as("score"))
+  }
+
+  /** One task's per-query top-k: (query_id, kept doc_ids, their scores). */
+  private[graft] type TaskTopK = (Long, Array[Long], Array[Double])
+
+  /** One [[TopKHeap]](k) per query over a stream of scored (query_id,
+    * doc_id, score) rows, each query's kept entries emitted once. The heap
+    * keeps one entry per doc_id (first offer wins), so a doc whose context
+    * row was added twice still ranks once. Phase-2 tasks run it over the
+    * pairs they rerank; the driver merge runs it again over the tasks'
+    * heaps — a global top-k member is always inside its own task's top-k,
+    * so the merge keeps exactly the global cut. */
+  private[graft] def taskTopK(scored: Iterator[(Long, Long, Double)],
+      k: Int): Iterator[TaskTopK] = {
+    val heaps = scala.collection.mutable.HashMap.empty[Long, TopKHeap]
+    // k < 1 keeps nothing (a TopKHeap needs one slot)
+    if (k >= 1) scored.foreach { case (q, d, s) =>
+      heaps.getOrElseUpdate(q, new TopKHeap(k)).insert(d, s)
+    }
+    heaps.iterator.map { case (q, h) =>
+      (q, java.util.Arrays.copyOf(h.ids, h.size),
+        java.util.Arrays.copyOf(h.scores, h.size))
+    }
+  }
+
+  private val ResultSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("query_id",
+      org.apache.spark.sql.types.LongType, nullable = false),
+    org.apache.spark.sql.types.StructField("doc_id",
+      org.apache.spark.sql.types.LongType, nullable = false),
+    org.apache.spark.sql.types.StructField("score",
+      org.apache.spark.sql.types.DoubleType, nullable = true)))
+
+  /** The driver merge: the entries go through [[taskTopK]] once more and
+    * come back as a local (query_id, doc_id, score) frame in (query_id,
+    * score desc, doc_id) order — [[TopKHeap.ranksBefore]], the order the
+    * heaps keep (NaN first, ties on doc_id ascending). */
+  private def topKFrame(spark: org.apache.spark.sql.SparkSession,
+      entries: Iterator[(Long, Long, Double)], k: Int): DataFrame = {
+    val rows = taskTopK(entries, k).toSeq.sortBy(_._1).flatMap {
+      case (q, ids, scores) =>
+        ids.indices.sortWith((a, b) =>
+          TopKHeap.ranksBefore(scores(a), ids(a), scores(b), ids(b)))
+          .map(i => org.apache.spark.sql.Row(q, ids(i), scores(i)))
+    }
+    spark.createDataFrame(
+      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, ResultSchema)
+  }
+
+  /** Phase-2: multiget the pooled docs' residuals, rescore each (query,
+    * doc) pair exactly, and keep a per-query top-k inside the scoring
+    * tasks ([[taskTopK]]). The route switches on the pool's distinct ids
+    * (see [[MaxDocIdInListKey]]): a small pool's doc_id IN-set genuinely
+    * prunes the doc_id-sorted context files, so it stays a scan; a big one
+    * multigets the record-addressable PointStore, resolved by `store`. On
+    * both routes the pool reaches the tasks in one broadcast, and only
+    * the heaps come back — <= tasks x queries x k entries, and never more
+    * than the pool's pairs. */
+  private def rerankTopK(idx: IndexIVF, tenant: Long, field: String,
+      poolRows: Array[(Long, Long)],
+      bQueries: org.apache.spark.broadcast.Broadcast[Map[Long, Array[Float]]],
+      k: Int, inListMax: Int, store: () => (String, Int)): Array[TaskTopK] = {
+    val spark = idx.spark
+    import spark.implicits._
+    val dim = idx.schema.field(field).parameters.dimensions
+    val bq = spark.sparkContext.broadcast(idx.quantizers(field))
+    // one decode+score kernel for both routes: a doc's residuals are
+    // decoded and L2-normalized once, then scored against each query that
+    // pooled it; the token count is the residual length over the code
+    // size (the write-path invariant resLen == nTokens x codeSize)
+    val scorer: Array[Byte] => Long => Double = residuals => {
+      val quant = bq.value
+      val n = residuals.length / quant.codeSize
+      val doc = new Array[Float](n * dim)
+      var i = 0
+      while (i < n) {
+        val tok = quant.decode(java.util.Arrays.copyOfRange(
+          residuals, i * quant.codeSize, (i + 1) * quant.codeSize))
+        System.arraycopy(tok, 0, doc, i * dim, dim)
+        i += 1
+      }
+      Plaid.l2NormalizeInPlace(doc, n, dim)
+      qid => {
+        val q = bQueries.value(qid)
+        Plaid.scoreByResiduals(q, q.length / dim, doc, n, dim, normalize = false).toDouble
+      }
+    }
+    val ids = poolRows.map(_._2).distinct
+    if (ids.length > inListMax) {
+      val (storeDir, storeBuckets) = store()
+      // bounded: one heap per (task, query) over the pool's poolRows,
+      // which the caller's maxPoolBytes require bounds
+      graft.index.PointStore.multigetScore(spark, storeDir, storeBuckets,
+        poolRows, scorer)
+        .mapPartitions(taskTopK(_, k)).collect()
+    } else {
+      val bPool = spark.sparkContext.broadcast(poolRows.groupMap(_._2)(_._1))
+      val buckets = ids.map(IndexIVF.docBucketOf).distinct.toSeq
+      val heaps = idx.contextDf
+        .filter(col("tenant") === tenant && col("field") === idx.mapper.id(field) &&
+          col("doc_bucket").isin(buckets: _*) &&
+          col("doc_id").isInCollection(ids.toSeq))
+        .select(col("doc_id"), col("doc_residuals"))
+        .mapPartitions { rows =>
+          val pool = bPool.value
+          taskTopK(rows.flatMap { r =>
+            val doc = r.getLong(0)
+            val score = scorer(r.getAs[Array[Byte]](1))
+            pool(doc).iterator.map(q => (q, doc, score(q)))
+          }, k)
+        }
+      // bounded: one heap per (task, query) over the pool's poolRows,
+      // which the caller's maxPoolBytes require bounds
+      heaps.collect()
+    }
   }
 
   /** Session-conf side effect (documented, deliberate): when the context
@@ -525,8 +647,6 @@ object BatchSearcher {
   def searchBatch(idx: IndexIVF, tenant: Long, field: String, queries: DataFrame,
       k: Int, opts: SearchOptions = SearchOptions()): DataFrame = {
     val spark = idx.spark
-    val fid = idx.mapper.id(field)
-    val dim = idx.schema.field(field).parameters.dimensions
     if (!idx.coarse.contains(field))
       throw new IllegalStateException(s"field $field is not trained")
 
@@ -588,53 +708,35 @@ object BatchSearcher {
     val adaptive = esc > opts.numSecondPass && opts.secondPass
     val poolDepth = if (adaptive) esc else opts.numSecondPass
 
-    // OVERLAP the phase-2 point-store resolve with phase-1: the pool's
-    // plan-time id bound (queries x poolDepth) can only exceed the IN-list
-    // threshold if the multiget will route through the store, so when it
-    // does, kick the (idempotent, build-locked, once-per-index-state)
-    // resolve BEFORE the phase-1 action — a cold first batch then pays
-    // max(phase-1, store build) instead of their sum. When the deduped
-    // pool lands under the threshold after all, the build still caches
-    // state every later over-threshold batch reads.
+    // OVERLAP the phase-2 point-store resolve with phase-1: the pool can
+    // only route through the store when its distinct ids can exceed the
+    // IN-list threshold — at most queries x poolDepth pairs, and at most
+    // ctxRows distinct ids — so only then kick the (idempotent,
+    // build-locked, once-per-index-state) resolve BEFORE the phase-1
+    // action: a cold first batch then pays max(phase-1, store build)
+    // instead of their sum. When the deduped pool lands under the
+    // threshold after all, the build still caches state every later
+    // over-threshold batch reads.
     val inListMax = maxDocIdInList(spark)
     val storeTask =
-      if (opts.secondPass && plans.length.toLong * poolDepth > inListMax)
+      if (opts.secondPass &&
+          math.min(plans.length.toLong * poolDepth, ctxRows) > inListMax)
         Some(new SpeculativeBuild("graft-batch-pointstore",
           () => idx.pointStore(tenant, field, Some(ctxRows))))
       else None
 
     val result = try {
-      val pool = prof("ctx_snapshot_resolve") {
+      val walked = prof("ctx_snapshot_resolve") {
         phase1(idx, tenant, field, (ctxRows, ctxBytes), bQueries, qProbes,
           Some(poolDepth))
       }
-
-      if (!opts.secondPass) pool
-      else {
-        val bq = spark.sparkContext.broadcast(idx.quantizers(field))
-        // one decode+score kernel for both phase-2 shapes (scan rows feed it
-        // a token count from doc_codes; the point store derives it from the
-        // residual length, nTokens = bytes / codeSize — same value by the
-        // write-path invariant resLen == nTokens x codeSize)
-        val scoreFromResiduals: (Long, Int, Array[Byte]) => Double =
-          (qid, n, residuals) => {
-            val quant = bq.value
-            val doc = new Array[Float](n * dim)
-            var i = 0
-            while (i < n) {
-              val tok = quant.decode(java.util.Arrays.copyOfRange(
-                residuals, i * quant.codeSize, (i + 1) * quant.codeSize))
-              System.arraycopy(tok, 0, doc, i * dim, dim)
-              i += 1
-            }
-            val q = bQueries.value(qid)
-            Plaid.scoreByResiduals(q, q.length / dim, doc, n, dim, normalize = true).toDouble
-          }
-        // the pool cut is <= batch x poolDepth (query_id, doc_id[, score])
-        // pairs — the bound is known at plan time, so guard BEFORE the
-        // collect; the adaptive shape carries the score (8 B more per pair)
-        // so the driver can judge boundary saturation
-        val pairBytes = if (adaptive) PoolPairBytes + 8L else PoolPairBytes
+      // the pool cut is <= batch x poolDepth (query_id, doc_id[, score])
+      // rows — the bound is known at plan time, so guard BEFORE the
+      // collect; a scored pool (the adaptive cut judges boundary
+      // saturation, and without phase-2 the scores are the result) carries
+      // 8 B more per pair
+      def collectPool(scored: Boolean): Array[(Long, Long, Double)] = {
+        val pairBytes = if (scored) PoolPairBytes + 8L else PoolPairBytes
         val poolBytes = plans.length.toLong * poolDepth * pairBytes
         require(poolBytes <= maxPoolBytes(spark),
           s"phase-2 pool would collect ~$poolBytes bytes on the driver " +
@@ -642,73 +744,37 @@ object BatchSearcher {
             s"x $pairBytes B/pair, limit ${maxPoolBytes(spark)}): split " +
             s"the batch into smaller searchBatch calls, lower " +
             s"numSecondPass, or raise $MaxPoolBytesKey")
-        // bounded: <= queries x poolDepth pairs, byte-gated by the
-        // maxPoolBytes require just above
+        prof("phase1_pool_action") {
+          // bounded: <= queries x poolDepth rows, byte-gated by the
+          // maxPoolBytes require just above
+          if (scored) walked.select(col("query_id"), col("doc_id"), col("score"))
+            .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+          else walked.select(col("query_id"), col("doc_id"))
+            .collect().map(r => (r.getLong(0), r.getLong(1), 0.0))
+        }
+      }
+
+      if (!opts.secondPass) topKFrame(spark, collectPool(scored = true).iterator, k)
+      else {
         val poolRows: Array[(Long, Long)] =
           if (adaptive) {
-            val withScores = prof("phase1_pool_action") {
-              pool.select(col("query_id"), col("doc_id"), col("score"))
-                .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-            }
-            val (kept, escalated) = adaptivePoolCut(withScores,
+            val (kept, escalated) = adaptivePoolCut(collectPool(scored = true),
               opts.numSecondPass, esc, nspTieEps(spark, ctxRows, ctxBytes))
             if (prof.on) prof.buf("adaptive_escalated_queries") = escalated.toDouble
             kept
-          } else prof("phase1_pool_action") {
-            // bounded: <= poolDepth pairs per query, byte-gated by the
-            // maxPoolBytes require above
-            pool.select(col("query_id"), col("doc_id"))
-              .collect().map(r => (r.getLong(0), r.getLong(1)))
+          } else collectPool(scored = false).map(p => (p._1, p._2))
+        val heaps = if (poolRows.isEmpty) Array.empty[TaskTopK] else
+          prof("rerank_topk") {
+            rerankTopK(idx, tenant, field, poolRows, bQueries, k, inListMax,
+              () => prof("pointstore_resolve") {
+                // started above unless a racing write grew the pool past
+                // the ctxRows the start rule read
+                storeTask.fold(idx.pointStore(tenant, field, Some(ctxRows)))(_.await())
+              })
           }
-        if (poolRows.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("query_id",
-                org.apache.spark.sql.types.LongType, nullable = false),
-              org.apache.spark.sql.types.StructField("doc_id",
-                org.apache.spark.sql.types.LongType, nullable = false),
-              org.apache.spark.sql.types.StructField("score",
-                org.apache.spark.sql.types.DoubleType, nullable = true))))
-        else prof("rerank_assembly") {
-          // phase-2 hydration, shape-switched on pool size (see
-          // MaxDocIdInListKey): a small pool's doc_id IN-set genuinely
-          // prunes the doc_id-sorted context files, so it stays a scan; a
-          // big one multigets the record-addressable PointStore
-          val ids = poolRows.map(_._2).distinct
-          if (ids.length > inListMax) {
-            val (storeDir, storeBuckets) = prof("pointstore_resolve") {
-              // started above: ids.length <= queries x poolDepth
-              storeTask.get.await()
-            }
-            graft.index.PointStore.multigetScore(spark, storeDir, storeBuckets,
-              poolRows,
-              (qid, _, res) =>
-                scoreFromResiduals(qid, res.length / bq.value.codeSize, res))
-          } else {
-            val buckets = ids.map(IndexIVF.docBucketOf).distinct.toSeq
-            val ctxM = idx.contextDf
-              .filter(col("tenant") === tenant && col("field") === fid &&
-                col("doc_bucket").isin(buckets: _*) &&
-                col("doc_id").isInCollection(ids.toSeq))
-              .select(col("doc_id"), col("doc_codes"), col("doc_residuals"))
-              .dropDuplicates("doc_id")
-            val poolDf = spark.createDataFrame(
-              spark.sparkContext.parallelize(poolRows.toIndexedSeq.map(p =>
-                org.apache.spark.sql.Row(p._1, p._2)), 1),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("query_id",
-                  org.apache.spark.sql.types.LongType, nullable = false),
-                org.apache.spark.sql.types.StructField("doc_id",
-                  org.apache.spark.sql.types.LongType, nullable = false))))
-            val rerankUdf = udf { (qid: Long, codes: Seq[Long], residuals: Array[Byte]) =>
-              scoreFromResiduals(qid, codes.length, residuals)
-            }
-            ctxM.join(broadcast(poolDf), Seq("doc_id"))
-              .select(col("query_id"), col("doc_id"),
-                rerankUdf(col("query_id"), col("doc_codes"), col("doc_residuals")).as("score"))
-          }
-        }
+        topKFrame(spark, heaps.iterator.flatMap { case (q, ids, scores) =>
+          ids.indices.iterator.map(i => (q, ids(i), scores(i)))
+        }, k)
       }
     } catch { case e: Throwable => storeTask.foreach(_.release(Some(e))); throw e }
     // no-op when phase-2 consumed the build; otherwise its failure is
@@ -716,10 +782,6 @@ object BatchSearcher {
     storeTask.foreach(_.release(None))
 
     if (prof.on) lastProfile = prof.buf.toMap
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    result.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k).drop("rn")
-      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
+    result
   }
 }

@@ -710,4 +710,135 @@ class BatchSearchSpec extends AnyFunSuite {
       }
     } finally spark.conf.unset(BatchSearcher.BroadcastContextMaxBytesKey)
   }
+
+  /** Runs `body` on both phase-2 routes: the IN-list context multiget (the
+    * default threshold) and the point store (threshold 0). */
+  private def onBothRoutes(body: String => Unit): Unit = {
+    body("IN-list multiget")
+    spark.conf.set(BatchSearcher.MaxDocIdInListKey, "0")
+    try body("point-store multiget")
+    finally spark.conf.unset(BatchSearcher.MaxDocIdInListKey)
+  }
+
+  private def colbertIndex(name: String, dim: Int,
+      corpus: Seq[(Long, Seq[Seq[Float]])]): IndexIVF = {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory(name).toString
+    val idx = IndexIVF.create(spark, path, GSchema(Seq(
+      GField.colbert("colbert", dim, numCentroids = 6, numIterations = 4))))
+    idx.train(corpus.map { case (i, t) => Doc(i, t, "x", 0L) }.toDF()
+      .select(org.apache.spark.sql.functions.col("id"),
+        org.apache.spark.sql.functions.col("colbert")))
+    idx
+  }
+
+  private def addDocs(idx: IndexIVF, rows: Seq[(Long, Seq[Seq[Float]])]): Unit = {
+    import spark.implicits._
+    idx.add(1, rows.map { case (i, t) => Doc(i, t, "x", 0L) }.toDF()
+      .select(org.apache.spark.sql.functions.col("id"),
+        org.apache.spark.sql.functions.col("colbert")))
+  }
+
+  test("phase-2 ties across tasks: identical docs keep the lowest doc_ids, " +
+      "on both routes, equal to per-query search") {
+    val dim = 16
+    val rnd = new scala.util.Random(101)
+    def tokens() = Seq.fill(4)(Seq.fill(dim)(rnd.nextFloat() * 2f - 1f))
+    val k = 4
+    val twin = tokens()
+    // 3k identical-token docs under ids spread over 12 doc buckets, added
+    // in three writes: separate context files (IN-list route) and separate
+    // point-store buckets, so the tie spans >= 3 phase-2 tasks
+    val tiedIds = (0 until 3 * k).map(i => 5L + 3L * i)
+    val tiedIdSet = tiedIds.toSet
+    val others = (0L until 48L).filterNot(tiedIdSet).map(i => i -> tokens())
+    val corpus = (tiedIds.map(_ -> twin) ++ others).sortBy(_._1)
+    assert(tiedIds.map(IndexIVF.docBucketOf).distinct.size >= 3)
+    assert(tiedIds.map(graft.index.PointStore.bucketOf(_, 32)).distinct.size >= 3)
+    val idx = colbertIndex("idx_batch_ties", dim, corpus)
+    tiedIds.grouped(k).foreach(g => addDocs(idx, g.map(_ -> twin)))
+    addDocs(idx, others)
+
+    val opts = SearchOptions(kTopCentroids = 3, nProbe = 6)
+    val queries = Seq(1L -> twin, 2L -> others.head._2, 3L -> others(7)._2)
+    val reference = perQueryRows(idx, queries, k, opts)
+    assert(reference(1L).map(_._1) == tiedIds.take(k),
+      s"reference must keep the lowest tied ids, got ${reference(1L)}")
+    onBothRoutes { route =>
+      val batch = batchRows(idx, queries, k, opts)
+      assertSameRanking(batch, reference, route)
+      assert(batch(1L).map(_._1) == tiedIds.take(k),
+        s"$route: the tie must keep its lowest doc_ids, got ${batch(1L)}")
+    }
+  }
+
+  test("duplicate adds: each doc appears once per query on both routes, " +
+      "equal to per-query search") {
+    val dim = 16
+    val rnd = new scala.util.Random(102)
+    def tokens() = Seq.fill(4)(Seq.fill(dim)(rnd.nextFloat() * 2f - 1f))
+    val corpus = (0L until 30L).map(i => i -> tokens())
+    val idx = colbertIndex("idx_batch_dupadd", dim, corpus)
+    addDocs(idx, corpus)
+    addDocs(idx, corpus) // every doc twice
+
+    val opts = SearchOptions(kTopCentroids = 3, nProbe = 6)
+    val queries = Seq(4L, 13L, 27L).map(q => q -> corpus(q.toInt)._2)
+    val reference = perQueryRows(idx, queries, 12, opts)
+    onBothRoutes { route =>
+      val batch = batchRows(idx, queries, 12, opts)
+      batch.foreach { case (q, rows) =>
+        assert(rows.size == 12, s"$route: query $q returned ${rows.size} rows")
+        assert(rows.map(_._1).distinct.size == rows.size,
+          s"$route: query $q returned a doc twice: ${rows.map(_._1)}")
+      }
+      assertSameRanking(batch, reference, route)
+    }
+  }
+
+  test("short results: a pool smaller than k comes back whole and in order") {
+    val dim = 16
+    val rnd = new scala.util.Random(103)
+    def tokens() = Seq.fill(4)(Seq.fill(dim)(rnd.nextFloat() * 2f - 1f))
+    val corpus = (0L until 30L).map(i => i -> tokens())
+    val idx = colbertIndex("idx_batch_short", dim, corpus)
+    addDocs(idx, corpus)
+
+    val nsp = 3
+    val k = 10
+    val opts = SearchOptions(kTopCentroids = 3, nProbe = 6, numSecondPass = nsp)
+    val queries = Seq(6L, 18L, 29L).map(q => q -> corpus(q.toInt)._2)
+    val reference = perQueryRows(idx, queries, k, opts)
+    val pool = batchRows(idx, queries, k, opts.copy(secondPass = false))
+    onBothRoutes { route =>
+      val batch = batchRows(idx, queries, k, opts)
+      assertSameRanking(batch, reference, route)
+      batch.foreach { case (q, rows) =>
+        assert(rows.size == nsp, s"$route: query $q returned ${rows.size} rows")
+        assert(rows.map(_._1).toSet == pool(q).map(_._1).toSet,
+          s"$route: query $q did not return its whole pool")
+        assert(rows.zip(rows.drop(1)).forall { case ((da, sa), (db, sb)) =>
+          sa > sb || (sa == sb && da < db) }, s"$route: query $q out of order: $rows")
+      }
+    }
+  }
+
+  test("searchBatch runs no window, row_number or range-partitioned sort") {
+    val dim = 16
+    val rnd = new scala.util.Random(104)
+    def tokens() = Seq.fill(4)(Seq.fill(dim)(rnd.nextFloat() * 2f - 1f))
+    val corpus = (0L until 30L).map(i => i -> tokens())
+    val idx = colbertIndex("idx_batch_nowindow", dim, corpus)
+    addDocs(idx, corpus)
+    val opts = SearchOptions(kTopCentroids = 3, nProbe = 6)
+    val queries = Seq(2L, 15L).map(q => q -> corpus(q.toInt)._2)
+    onBothRoutes { route =>
+      val (_, plans) = capturedPlans(batchRows(idx, queries, 5, opts))
+      assert(plans.nonEmpty, s"$route: no batch plan captured")
+      val all = plans.mkString("\n---\n")
+      assert(plans.forall(p => !p.contains("Window") && !p.contains("row_number") &&
+        !p.toLowerCase.contains("rangepartitioning")),
+        s"$route: a batch plan ranks with a window or a global sort:\n$all")
+    }
+  }
 }

@@ -51,8 +51,8 @@ class PointStoreSpec extends AnyFunSuite {
     def got(gap: String): Map[(Long, Long), Int] = {
       spark.conf.set(PointStore.CoalesceGapKey, gap)
       try PointStore.multigetScore(spark, dir, meta.buckets, pairs,
-          (_, _, res) => res.length.toDouble)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2).toInt)
+          res => _ => res.length.toDouble)
+        .collect().map { case (q, d, s) => (q, d) -> s.toInt }
         .toMap
       finally spark.conf.unset(PointStore.CoalesceGapKey)
     }
@@ -171,11 +171,15 @@ class PointStoreSpec extends AnyFunSuite {
       .asInstanceOf[org.apache.logging.log4j.core.Logger]
     logger.addAppender(appender)
     try {
-      // unconsumed: the plan-time bound (3 queries x 1024) starts the
-      // build, but the <= 30-id pool stays under the IN-list threshold —
-      // the batch answers without waiting, and the failure is logged
-      spark.conf.set(BatchSearcher.MaxDocIdInListKey, "100")
-      try assert(run().nonEmpty, "the small batch must not fail on the build")
+      // unconsumed: the plan-time bound min(3 queries x 1024, 30 docs)
+      // exceeds the threshold 29 and starts the build, but one probe per
+      // query pools fewer than 30 docs, under the IN-list threshold — the
+      // batch answers without waiting (a pool that reached the failed
+      // store would throw here), and the failure is logged
+      spark.conf.set(BatchSearcher.MaxDocIdInListKey, "29")
+      try assert(BatchSearcher.searchBatch(idx, 1, "colbert", queriesDf, k = 5,
+          SearchOptions(kTopCentroids = 1, nProbe = 1)).collect().nonEmpty,
+        "the small batch must not fail on the build")
       finally spark.conf.unset(BatchSearcher.MaxDocIdInListKey)
       assert(warned.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "the unconsumed store build's failure was never logged")
@@ -192,7 +196,12 @@ class PointStoreSpec extends AnyFunSuite {
       s"consumed build error differs from the logged one: $consumed")
 
     // warm: the overlapped store build's failure is the warm call's error
-    val warm = intercept[Exception](idx.warmBatchCaches(1, "colbert"))
+    // (threshold 0: warm builds the store only for an index with more
+    // docs than the IN-list threshold)
+    spark.conf.set(BatchSearcher.MaxDocIdInListKey, "0")
+    val warm =
+      try intercept[Exception](idx.warmBatchCaches(1, "colbert"))
+      finally spark.conf.unset(BatchSearcher.MaxDocIdInListKey)
     assert(warm.getClass == warnedWith.get().getClass,
       s"warmBatchCaches error differs from the store build's: $warm")
   }

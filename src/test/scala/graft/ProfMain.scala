@@ -1025,9 +1025,10 @@ object ProfMain {
         // this pipeline overhead, not per-candidate compute. Runs repeated
         // 212-query batches with graft.batch.profile=true and prints, per
         // batch: the named in-call segments (queries collect, driver probe
-        // selection, ctx byte gate, snapshot resolve, phase-1 pool action), the
-        // searchBatch call wall, the final-action wall (phase-2 multiget +
-        // rerank + top-k window) and the unattributed remainder. Batch 1
+        // selection, ctx byte gate, snapshot resolve, phase-1 pool action,
+        // phase-2 multiget + rerank + per-task top-k as rerank_topk), the
+        // searchBatch call wall, the final-action wall (the collect of the
+        // driver-local result) and the unattributed remainder. Batch 1
         // vs 2+ separates one-time costs (ctx size scan, codegen) from the
         // steady-state floor. args: [nDocs] [K] [codec] [geom] [config=1x8]
         // [nsp=256] [reps=3]
@@ -1142,8 +1143,8 @@ object ProfMain {
             graft.index.PointStore.MgProf.snapshot)
           graft.index.PointStore.MgProf.reset()
           println(f"[prof]   final_action           ${actionMs / 1000}%8.3f s  " +
-            f"(${100 * actionMs / totalMs}%4.1f %% — phase-2 multiget + " +
-            "rerank + top-k)")
+            f"(${100 * actionMs / totalMs}%4.1f %% — collect of the " +
+            "driver-local result)")
           jobs.take(8).foreach { case (jid, ms, desc) =>
             println(f"[prof]     job $jid%-4d ${ms / 1000.0}%8.3f s  " +
               desc.take(90))
@@ -1297,9 +1298,8 @@ object ProfMain {
         val bqP = spark.sparkContext.broadcast(idxP.quantizers("colbert"))
         val bQP = spark.sparkContext.broadcast(
           (0L until 212L).map(q => q -> Array.fill(4 * dimP)(rndP.nextFloat())).toMap)
-        val noop: (Long, Long, Array[Byte]) => Double =
-          (_, _, res) => res.length.toDouble
-        val real: (Long, Long, Array[Byte]) => Double = (qid, _, res) => {
+        val noop: Array[Byte] => Long => Double = res => _ => res.length.toDouble
+        val real: Array[Byte] => Long => Double = res => {
           val quant = bqP.value
           val n = res.length / quant.codeSize
           val doc = new Array[Float](n * dimP)
@@ -1310,9 +1310,12 @@ object ProfMain {
             System.arraycopy(tok, 0, doc, i * dimP, dimP)
             i += 1
           }
-          val q = bQP.value(qid)
-          graft.scoring.Plaid.scoreByResiduals(q, q.length / dimP, doc, n, dimP,
-            normalize = true).toDouble
+          graft.scoring.Plaid.l2NormalizeInPlace(doc, n, dimP)
+          qid => {
+            val q = bQP.value(qid)
+            graft.scoring.Plaid.scoreByResiduals(q, q.length / dimP, doc, n, dimP,
+              normalize = false).toDouble
+          }
         }
         Seq(("noop", noop), ("real", real)).foreach { case (name, fn) =>
           (1 to 4).foreach { rep =>
